@@ -35,6 +35,7 @@ from ..functions.bm25 import B, K1, weight
 from ..functions.tokenizer import analyzer_fingerprint
 from ..functions.query_parse import parse_query
 from .score import decoded_dl
+from .wand import SegmentView, _empty_topk, batch_topk, per_segment, seg_scan
 
 # reference-shaped defaults: path ≈ title (10), content ≈ body (4)
 DEFAULT_FIELD_BOOSTS: dict[str, float] = {"path": 10.0, "content": 4.0}
@@ -665,6 +666,8 @@ class MultiFieldSegmentIndex:
         self.segments.select(F.lit(1).alias("_o")).unionAll(
             self.norms.select(F.lit(1).alias("_o"))
         ).count()
+        # plans memoized before this point scan the uncached inputs
+        self._plan_memo.clear()
         return self
 
     def term_df(self, phys_terms: list[str]) -> dict[str, int]:
@@ -775,16 +778,7 @@ class MultiFieldSegmentIndex:
     def _seg_scan(self, scan_terms: list[str], need_positions: bool):
         # no DELETES_TERM here: the MF handle routes every \x00 row —
         # tombstones included — to the NORMS side of the cogroup
-        cols = [
-            "segment_id", "term", "block_id", "first_doc_id",
-            "last_doc_id", "num_docs", "id_bytes", "tf_bytes", "max_tf",
-            "min_norm_id",
-        ]
-        if need_positions:
-            cols.insert(8, "pos_bytes")
-        return self.segments.filter(
-            F.col("term").isin(sorted(set(scan_terms)))
-        ).select(*[c for c in cols if c in self.segments.columns])
+        return seg_scan(self.segments, scan_terms, need_positions)
 
     def search(
         self, query: str, k: int = 10, mode: str = "must",
@@ -882,26 +876,18 @@ class MultiFieldSegmentIndex:
         s = spec
         cc, hed, sc = _const_clauses, _has_empty_discard, _score_coeff
 
-        def run(key, blocks_pdf: pd.DataFrame, norms_pdf: pd.DataFrame):
-            return _mf_segment_topk(
-                blocks_pdf, norms_pdf, s["uniq_sorted"],
-                sorted(self_fields), s["weights"], self_avgdl, k_eff,
-                s["mode"], s["neg_phys"], s["phrases"], s["pweights"],
-                max_docs=max_docs, add_pre=add_pre, with_metrics=wm,
-                filter_phys=s["filter_phys"], const_clauses=cc,
-                has_empty_discard=hed, score_coeff=sc,
-                must_fields=s.get("must_fields"),
-                ladder=_ladder, ladder_field=_ladder_field,
-                ladder_terms=_ladder_terms, ladder_w=_ladder_w,
-            )
-
         self_fields = self.fields
         self_avgdl = dict(self.avgdl)
-        per_seg = (
-            seg_filtered.groupBy("segment_id")
-            .cogroup(self.norms.groupBy("segment_id"))
-            .applyInPandas(run, "segment_id int, doc_id long, score double")
-        )
+        per_seg = per_segment(seg_filtered, self.norms, lambda view: _mf_segment_topk(
+            view, s["uniq_sorted"], sorted(self_fields), s["weights"],
+            self_avgdl, k_eff, s["mode"], s["neg_phys"], s["phrases"],
+            s["pweights"], max_docs=max_docs, add_pre=add_pre,
+            with_metrics=wm, filter_phys=s["filter_phys"], const_clauses=cc,
+            has_empty_discard=hed, score_coeff=sc,
+            must_fields=s.get("must_fields"),
+            ladder=_ladder, ladder_field=_ladder_field,
+            ladder_terms=_ladder_terms, ladder_w=_ladder_w,
+        ))
         if with_metrics:
             from .wand import fold_metrics_topk
 
@@ -952,69 +938,35 @@ class MultiFieldSegmentIndex:
         """Evaluate MANY multi-field queries in ONE pass over the index →
         rows ``(query_id, doc_id, score)``, per-query top-k — the same
         one-scan-one-cogroup batching as the single-field
-        ``wand_topk_batch`` (the scan is pruned once to the UNION of
-        every query's physical terms; each segment kernel runs every
-        query against the already-loaded block frames).  Results are
-        identical to per-query :meth:`search` — asserted by
-        tests/test_mf_parity.py."""
-        from pyspark.sql import Window
-
-        specs = []
-        scan_terms: set[str] = set()
-        any_phrases = False
-        for qid, qstr, mode in queries:
-            sp = self._spec(qstr, mode)
-            if sp is None:
-                continue
-            specs.append((qid, sp))
-            scan_terms.update(sp["scan_terms"])
-            any_phrases = any_phrases or bool(sp["phrases"])
-        if not specs:
+        ``wand_topk_batch``: the scan is pruned once to the UNION of
+        every query's physical terms.  Per-segment cost: grouping the
+        blocks by term is O(union terms), paid once
+        (:func:`~.wand.segment_view`), plus each query's own scoring; the
+        per-query top-k cut runs in a single partition
+        (:func:`~.wand.batch_topk`).  Results are identical to per-query
+        :meth:`search` — asserted by tests/test_mf_parity.py."""
+        compiled = [(qid, self._spec(qstr, mode)) for qid, qstr, mode in queries]
+        compiled = [(qid, sp) for qid, sp in compiled if sp is not None]
+        if not compiled:
             return self.spark.createDataFrame(
                 [], "query_id string, doc_id long, score double"
             )
+        fields = sorted(self.fields)
+        avgdl = dict(self.avgdl)
+        specs = [
+            (qid, dict(
+                uniq_sorted=sp["uniq_sorted"], fields_sorted=fields,
+                weights=sp["weights"], avgdl=avgdl, k=k, mode=sp["mode"],
+                neg_phys=sp["neg_phys"], phrases=sp["phrases"],
+                pweights=sp["pweights"], filter_phys=sp["filter_phys"],
+            ))
+            for qid, sp in compiled
+        ]
         seg_filtered = self._seg_scan(
-            sorted(scan_terms), need_positions=any_phrases
+            [t for _, sp in compiled for t in sp["scan_terms"]],
+            need_positions=any(sp["phrases"] for _, sp in compiled),
         )
-        self_fields = sorted(self.fields)
-        self_avgdl = dict(self.avgdl)
-        k_eff = k
-
-        def run(key, blocks_pdf: pd.DataFrame, norms_pdf: pd.DataFrame):
-            outs = []
-            for qid, sp in specs:
-                res = _mf_segment_topk(
-                    blocks_pdf, norms_pdf, sp["uniq_sorted"], self_fields,
-                    sp["weights"], self_avgdl, k_eff, sp["mode"],
-                    sp["neg_phys"], sp["phrases"], sp["pweights"],
-                    filter_phys=sp["filter_phys"],
-                )
-                if len(res):
-                    res = res.drop(columns=["segment_id"])
-                    res.insert(0, "query_id", qid)
-                    outs.append(res)
-            if not outs:
-                return pd.DataFrame({
-                    "query_id": pd.Series([], dtype="object"),
-                    "doc_id": pd.Series([], dtype="int64"),
-                    "score": pd.Series([], dtype="float64"),
-                })
-            return pd.concat(outs, ignore_index=True)
-
-        per_seg = (
-            seg_filtered.groupBy("segment_id")
-            .cogroup(self.norms.groupBy("segment_id"))
-            .applyInPandas(run, "query_id string, doc_id long, score double")
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("doc_id")
-        )
-        return (
-            per_seg.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .drop("_rn")
-            .orderBy("query_id", F.desc("score"), F.asc("doc_id"))
-        )
+        return batch_topk(seg_filtered, self.norms, specs, _mf_segment_topk, k)
 
     def facet_counts(self, query: str, facet_field: str, mode: str = "must"):
         """Per-``facet_field`` doc counts over the FULL match set —
@@ -1054,19 +1006,12 @@ class MultiFieldSegmentIndex:
         self_fields = sorted(self.fields)
         self_avgdl = dict(self.avgdl)
 
-        def run(key, blocks_pdf: pd.DataFrame, norms_pdf: pd.DataFrame):
-            return _mf_segment_topk(
-                blocks_pdf, norms_pdf, spec["uniq_sorted"], self_fields,
-                spec["weights"], self_avgdl, k, spec["mode"],
-                spec["neg_phys"], spec["phrases"], spec["pweights"],
-                filter_phys=spec["filter_phys"], with_count=True,
-            )
-
-        per_seg = (
-            seg_filtered.groupBy("segment_id")
-            .cogroup(self.norms.groupBy("segment_id"))
-            .applyInPandas(run, "segment_id int, doc_id long, score double")
-        )
+        per_seg = per_segment(seg_filtered, self.norms, lambda view: _mf_segment_topk(
+            view, spec["uniq_sorted"], self_fields, spec["weights"],
+            self_avgdl, k, spec["mode"], spec["neg_phys"], spec["phrases"],
+            spec["pweights"], filter_phys=spec["filter_phys"],
+            with_count=True,
+        ))
         return fold_count_topk(per_seg, k)
 
     def search_goggle(
@@ -1244,8 +1189,7 @@ class MultiFieldSegmentIndex:
 
 
 def _mf_segment_topk(
-    blocks_pdf: pd.DataFrame,
-    norms_pdf: pd.DataFrame,
+    view: SegmentView | None,
     uniq_sorted: list[str],
     fields_sorted: list[str],
     weights: dict[str, float],
@@ -1275,6 +1219,7 @@ def _mf_segment_topk(
     (joined-text, field) order (canonical fp order, identical to
     MultiFieldOracle).  A phrase matches per field via that field's
     position streams; its Must docset is the union over fields.
+    ``view``: the segment's :func:`~.wand.segment_view` (None → empty).
 
     ``max_docs`` / ``add_pre``: the presorted composition — each logical
     term's driving docset is truncated to its best-pre max_docs docs (ids
@@ -1289,14 +1234,9 @@ def _mf_segment_topk(
     phrases = phrases or []
     pweights = pweights or {}
 
-    empty = pd.DataFrame(
-        {"segment_id": pd.Series([], dtype="int32"),
-         "doc_id": pd.Series([], dtype="int64"),
-         "score": pd.Series([], dtype="float64")}
-    )
-    if len(blocks_pdf) == 0 or len(norms_pdf) == 0:
-        return empty
-    seg = int(blocks_pdf["segment_id"].iloc[0])
+    if view is None:
+        return _empty_topk()
+    seg, by_term, deleted, norms_pdf = view
     # base MUST come from a norms sentinel row: tombstone rows
     # (DELETES_TERM, appended as separate parquet parts) also land on the
     # norms side and carry base_doc_id = min deleted id, and cogroup row
@@ -1306,7 +1246,7 @@ def _mf_segment_topk(
         norms_pdf["sentinel"] == NORMS_SENTINEL
     )
     if not _sent_mask.any():
-        return empty
+        return _empty_topk()
     base = int(norms_pdf.loc[_sent_mask, "base_doc_id"].iloc[0])
     norms_by_field = {
         r["sentinel"][len(MF_NORMS_PREFIX):]: np.frombuffer(
@@ -1323,21 +1263,6 @@ def _mf_segment_topk(
             raise ValueError("add_pre requires a presorted index (pre_bytes)")
         pre = np.frombuffer(pb, dtype=np.float32).astype(np.float64)
     dl_table = FIELD_NORMS_TABLE.astype(np.float64)
-    by_term = {t: g.sort_values("block_id") for t, g in blocks_pdf.groupby("term")}
-    # tombstones (operators/deletes.py): masked BEFORE the top-k cut,
-    # same discipline as the single-field kernel.  NOTE the MF handle
-    # routes every \x00-prefixed row (incl. tombstones) to the NORMS
-    # side of the cogroup, so the delete ids arrive in norms_pdf (the
-    # raw int64 ids ride in the aliased norm_bytes column)
-    from .segments import DELETES_TERM
-
-    deleted: np.ndarray | None = None
-    del_rows = norms_pdf[norms_pdf["sentinel"] == DELETES_TERM]
-    if len(del_rows):
-        deleted = np.unique(np.concatenate([
-            np.frombuffer(bytes(b), dtype=np.int64)
-            for b in del_rows["norm_bytes"]
-        ]))
 
     blk_cache: dict[str, dict] = {}
     kmetrics: dict | None = None
@@ -1427,7 +1352,7 @@ def _mf_segment_topk(
 
         present_phys = [p for p in weights if p in by_term]
         if not present_phys:
-            return empty
+            return _empty_topk()
         seg_n = _seg_n
         order_ = sorted(present_phys, key=lambda p: (tok(p), fld(p)))
 
@@ -1517,7 +1442,7 @@ def _mf_segment_topk(
             cand = None  # filled by the first phrase below
         for t in order_l[1:]:
             if cand.size == 0:
-                return empty
+                return _empty_topk()
             cand = cand[member_mask(t, cand, memb_flds)]
         for ph in phrases:
             if cand is None:
@@ -1541,7 +1466,7 @@ def _mf_segment_topk(
                     cand = cand[:max_docs]
                 continue
             if cand.size == 0:
-                return empty
+                return _empty_topk()
             m = np.zeros(cand.size, dtype=bool)
             for f_ in fields_sorted:
                 pf = phrase_freqs_field(ph, f_, cand)
@@ -1599,7 +1524,7 @@ def _mf_segment_topk(
     if deleted is not None and cand.size:
         cand = cand[~np.isin(cand, deleted)]
     if cand.size == 0:
-        return empty
+        return _empty_topk()
     score = np.zeros(cand.size, dtype=np.float64)
     for t in uniq_sorted:
         for f_ in fields_sorted:

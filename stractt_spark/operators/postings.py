@@ -39,6 +39,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import shuffle_partitions
+
 POSTINGS_SCHEMA = StructType(
     [
         StructField("doc_id", LongType(), False),
@@ -69,7 +71,7 @@ def assign_doc_ids(
     only on the total order, not on the partition count.
     """
     spark = df.sparkSession
-    n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n = num_partitions or shuffle_partitions(spark)
     part = df.repartitionByRange(n, *[F.col(c) for c in order_cols]).sortWithinPartitions(
         *order_cols
     )

@@ -50,6 +50,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import shuffle_partitions
+
 BLOCK_SIZE = 128  # docs per posting block [tantivy contract]
 
 SEGMENTS_SCHEMA = StructType(
@@ -445,9 +447,7 @@ def build_segments_fused(
         # exempt from AQE coalescing, so the kernel keeps
         # spark.sql.shuffle.partitions-way parallelism (cluster-configured;
         # segments per task still bounded below by the segment layout).
-        n_shuffle = int(
-            src.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
+        n_shuffle = shuffle_partitions(src.sparkSession)
         return (
             src.repartition(n_shuffle, "segment_id")
             .groupBy("segment_id")

@@ -45,9 +45,13 @@ last-ulp identical.
 
 from __future__ import annotations
 
+from collections.abc import Callable, Mapping
+from types import MappingProxyType
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.bm25 import B, K1, weight
@@ -63,6 +67,52 @@ from .segments import (
 )
 
 _RESULT_SCHEMA = "segment_id int, doc_id long, score double"
+_BATCH_SCHEMA = "query_id string, doc_id long, score double"
+
+
+def _empty_topk() -> pd.DataFrame:
+    """A kernel's no-match result (``_RESULT_SCHEMA``)."""
+    return pd.DataFrame(
+        {"segment_id": pd.Series([], dtype="int32"),
+         "doc_id": pd.Series([], dtype="int64"),
+         "score": pd.Series([], dtype="float64")}
+    )
+
+
+class SegmentView(NamedTuple):
+    """One segment's cogrouped inputs, prepared ONCE per segment and
+    shared read-only by every query scored against it: ``by_term`` maps
+    each scanned term to its block frame sorted by ``block_id`` (no
+    tombstone rows), ``deleted`` holds the sorted tombstoned doc ids
+    (operators/deletes.py) or None, ``norms`` is the segment's norms-side
+    frame as the cogroup delivered it.  Kernels must not mutate it."""
+
+    seg: int
+    by_term: Mapping[str, pd.DataFrame]
+    deleted: np.ndarray | None
+    norms: pd.DataFrame
+
+
+def segment_view(blocks: pd.DataFrame, norms: pd.DataFrame) -> SegmentView | None:
+    """→ the segment's :class:`SegmentView`, or None when a cogroup side
+    is empty (nothing to score).  Tombstones are raw int64 id rows under
+    DELETES_TERM: the single-field scan carries them with the blocks
+    (``id_bytes``); the multi-field handle routes every \\x00 row to the
+    norms side (``sentinel`` / ``norm_bytes``)."""
+    if len(blocks) == 0 or len(norms) == 0:
+        return None
+    by_term = {t: g.sort_values("block_id") for t, g in blocks.groupby("term")}
+    raw = list(by_term.pop(DELETES_TERM)["id_bytes"]) if DELETES_TERM in by_term else []
+    if "sentinel" in norms.columns:
+        raw += list(norms.loc[norms["sentinel"] == DELETES_TERM, "norm_bytes"])
+    deleted = None
+    if raw:
+        deleted = np.unique(np.concatenate(
+            [np.frombuffer(bytes(b), dtype=np.int64) for b in raw]
+        ))
+        deleted.flags.writeable = False
+    return SegmentView(int(blocks["segment_id"].iloc[0]),
+                       MappingProxyType(by_term), deleted, norms)
 
 
 def _tf_comp(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
@@ -111,7 +161,7 @@ def _candidate_positions(
     out = []
     for t in terms:
         g = by_term.get(t)
-        sub = _blocks_for_candidates(g.sort_values("block_id"), cand) if g is not None else None
+        sub = _blocks_for_candidates(g, cand) if g is not None else None
         if sub is None:
             return None
         ids, tfs = decode_block_subset(sub)
@@ -636,7 +686,7 @@ def _clause_match_mask(
         g = by_term.get(st)
         if g is None:
             return np.zeros(ids.size, dtype=bool)
-        sub = _blocks_for_candidates(g.sort_values("block_id"), ids)
+        sub = _blocks_for_candidates(g, ids)
         if sub is None:
             return np.zeros(ids.size, dtype=bool)
         s_ids, _ = decode_block_subset(sub)
@@ -678,14 +728,13 @@ def _clause_match_mask(
 
 
 def _segment_topk_kernel(
+    view: SegmentView | None,
     terms: list[str],
     neg_terms: list[str],
     qweights: dict[str, float],
     avgdl: float,
     k: int,
     mode: str,
-    seg_blocks: pd.DataFrame,
-    norm_row: pd.DataFrame,
     phrases: list[list[str]] | None = None,
     pweights: list[float] | None = None,
     filter_terms: list[str] | None = None,
@@ -699,7 +748,9 @@ def _segment_topk_kernel(
     ladder: tuple[tuple[float, int], ...] | None = None,
     ladder_w: float = 0.0,
 ) -> pd.DataFrame:
-    """``ladder``: (boost, slop) proximity rungs scored IN-RETRIEVAL as
+    """Top-k of one query over one segment's ``view`` (None → empty).
+
+    ``ladder``: (boost, slop) proximity rungs scored IN-RETRIEVAL as
     Should clauses over the full query-term sequence (reference
     src/query/mod.rs:45-93) — the bonus lands BEFORE the per-segment
     top-k cut, so a doc ranked low by base BM25 but lifted by tight
@@ -731,14 +782,9 @@ def _segment_topk_kernel(
     phrases = phrases or []
     pweights = pweights or []
     filter_terms = filter_terms or []
-    empty = pd.DataFrame(
-        {"segment_id": pd.Series([], dtype="int32"),
-         "doc_id": pd.Series([], dtype="int64"),
-         "score": pd.Series([], dtype="float64")}
-    )
-    if len(seg_blocks) == 0 or len(norm_row) == 0:
-        return empty
-    seg = int(seg_blocks["segment_id"].iloc[0])
+    if view is None:
+        return _empty_topk()
+    seg, by_term, deleted, norm_row = view
     base = int(norm_row["base_doc_id"].iloc[0])
     norms = np.frombuffer(norm_row["norm_bytes"].iloc[0], dtype=np.uint8)
     dl_table = FIELD_NORMS_TABLE.astype(np.float64)
@@ -752,16 +798,6 @@ def _segment_topk_kernel(
             raise ValueError("add_pre requires a presorted index (pre_bytes)")
         pre = np.frombuffer(pb, dtype=np.float32).astype(np.float64)
 
-    by_term = {t: g.sort_values("block_id") for t, g in seg_blocks.groupby("term")}
-    # tombstones (operators/deletes.py): raw int64 id rows riding the
-    # scan; masked exactly like MustNot — BEFORE the top-k cut
-    deleted: np.ndarray | None = None
-    if DELETES_TERM in by_term:
-        g_del = by_term.pop(DELETES_TERM)
-        deleted = np.unique(np.concatenate([
-            np.frombuffer(bytes(b), dtype=np.int64)
-            for b in g_del["id_bytes"]
-        ]))
     # MustNot docs of this segment, excluded BEFORE the top-k cut (a
     # post-hoc anti-join would under-fill truncated per-segment results)
     excluded: np.ndarray | None = None
@@ -771,6 +807,7 @@ def _segment_topk_kernel(
         if ex:
             excluded = np.unique(np.concatenate(ex))
     if deleted is not None:
+        # tombstones are masked exactly like MustNot — BEFORE the top-k cut
         excluded = deleted if excluded is None else np.unique(
             np.concatenate([excluded, deleted])
         )
@@ -779,11 +816,11 @@ def _segment_topk_kernel(
     # Must-filters (attr terms): a segment lacking the filter term has no
     # matching docs at all
     if any(ft not in by_term for ft in filter_terms):
-        return empty
+        return _empty_topk()
     if mode == "must" and (len(present) < len(terms) or not phrase_ok):
-        return empty
+        return _empty_topk()
     if not present and not (phrases and phrase_ok):
-        return empty
+        return _empty_topk()
 
     kmetrics: dict | None = None
     if with_metrics:
@@ -997,7 +1034,7 @@ def _segment_topk_kernel(
         ))
         res = intersect_terms(required, track=present)
         if res is None:
-            return empty
+            return _empty_topk()
         ids, cand_tfs = res
         # phrase adjacency verification narrows candidates further
         pfs: list[np.ndarray] = [np.zeros(0)] * len(phrases)
@@ -1005,7 +1042,7 @@ def _segment_topk_kernel(
             pf = _phrase_freqs(by_term, phrases[i], ids)
             keep = pf > 0
             if not keep.any():
-                return empty
+                return _empty_topk()
             ids = ids[keep]
             for prev in cand_tfs:
                 cand_tfs[prev] = cand_tfs[prev][keep]
@@ -1013,7 +1050,7 @@ def _segment_topk_kernel(
                 pfs[j] = pfs[j][keep]
             pfs[i] = pf[keep]
         if ids.size == 0:
-            return empty
+            return _empty_topk()
         dls = dl_of(ids)
         score = np.zeros(ids.size, dtype=np.float64)
         for t in sorted(present):  # canonical fp order: terms first
@@ -1364,24 +1401,9 @@ def wand_topk(
             return [], {"blocks_decoded": 0, "blocks_total": 0}
         return spark.createDataFrame([], "doc_id long, score double")
     pq = parse_query(query, analyzer) if isinstance(query, str) else query
-    uniq = pq.uniq_terms
-    phrases = pq.phrases
-    all_terms = pq.all_match_terms
-    if not all_terms:
+    spec = _query_spec(pq, mode, num_docs, avgdl, term_df, k, extra_neg_terms)
+    if spec is None:
         return spark.createDataFrame([], "doc_id long, score double")
-    if mode == "must" and any(term_df.get(t, 0) == 0 for t in all_terms):
-        return spark.createDataFrame([], "doc_id long, score double")
-    counts = pq.term_counts
-    qweights = {
-        t: counts[t] * weight(term_df.get(t, 0), num_docs) for t in uniq
-    }
-    # PhraseQuery weight = Σ member idf × (K1+1) (bm25.rs:66-90)
-    from ..functions.bm25 import idf as idf_fn
-
-    pweights = [
-        sum(idf_fn(term_df.get(t, 0), num_docs) for t in ph) * (K1 + 1.0)
-        for ph in phrases
-    ]
     ladder_w = 0.0
     if ladder is not None:
         if max_docs_per_segment is not None:
@@ -1390,22 +1412,14 @@ def wand_topk(
                 "quota's soundness argument does not bound the ladder "
                 "bonus"
             )
-        if len(uniq) < 2:
+        if len(pq.uniq_terms) < 2:
             ladder = None  # a 1-term query has no proximity rungs
         else:
-            ladder_w = sum(
-                idf_fn(term_df.get(t, 0), num_docs) for t in uniq
-            ) * (K1 + 1.0)
-    from .segments import attr_term
+            from ..functions.bm25 import idf as idf_fn
 
-    # attribute filters → reserved-namespace filter terms (Must) and extra
-    # MustNot terms (site:/-site: semantics, parser.rs:193-216)
-    filter_terms = sorted(attr_term(f_, v) for f_, v in pq.filters.items())
-    neg = sorted(
-        set(pq.neg_terms)
-        | {attr_term(f_, v) for f_, v in pq.anti_filters.items()}
-        | set(extra_neg_terms or [])
-    )
+            ladder_w = sum(
+                idf_fn(term_df.get(t, 0), num_docs) for t in pq.uniq_terms
+            ) * (K1 + 1.0)
 
     # goggle clause terms join the pruned scan like any query term: site
     # attr terms + pattern terms (their positions are needed iff a clause
@@ -1418,41 +1432,23 @@ def wand_topk(
         if cl.get("pattern_terms"):
             clause_terms.extend(cl["pattern_terms"])
             clause_patterns = True
-
-    # scan pruned to the query's pos+neg+filter(+clause) terms (pushed to
-    # parquet); the position streams — the widest column — are read ONLY
-    # when a phrase or a pattern clause needs them (column pruning reaches
-    # the parquet ReadSchema)
-    cols = [
-        "segment_id", "term", "block_id", "first_doc_id", "last_doc_id",
-        "num_docs", "id_bytes", "tf_bytes", "max_tf", "min_norm_id",
-    ]
-    if phrases or clause_patterns or ladder is not None:
-        cols.insert(8, "pos_bytes")
-    seg_filtered = segments.filter(
-        F.col("term").isin(
-            sorted(set(all_terms + neg + filter_terms + clause_terms))
-            + [DELETES_TERM]
-        )
-    ).select(*[c for c in cols if c in segments.columns])
-
-    def run(key, blocks_pdf: pd.DataFrame, norms_pdf: pd.DataFrame) -> pd.DataFrame:
-        return _segment_topk_kernel(
-            uniq, neg, qweights, avgdl, k, mode, blocks_pdf, norms_pdf,
-            phrases, pweights, filter_terms, max_docs_per_segment, add_pre,
-            const_clauses=const_clauses,
-            has_empty_discard=has_empty_discard,
-            score_coeff=score_coeff,
-            with_metrics=with_metrics,
-            ladder=ladder,
-            ladder_w=ladder_w,
-        )
-
-    per_seg = (
-        seg_filtered.groupBy("segment_id")
-        .cogroup(norms.groupBy("segment_id"))
-        .applyInPandas(run, _RESULT_SCHEMA)
+    seg_filtered = seg_scan(
+        segments,
+        pq.all_match_terms + spec["neg_terms"] + spec["filter_terms"]
+        + clause_terms + [DELETES_TERM],
+        bool(pq.phrases) or clause_patterns or ladder is not None,
     )
+    per_seg = per_segment(seg_filtered, norms, lambda view: _segment_topk_kernel(
+        view, **spec,
+        max_docs=max_docs_per_segment,
+        add_pre=add_pre,
+        const_clauses=const_clauses,
+        has_empty_discard=has_empty_discard,
+        score_coeff=score_coeff,
+        with_metrics=with_metrics,
+        ladder=ladder,
+        ladder_w=ladder_w,
+    ))
     if with_metrics:
         return fold_metrics_topk(per_seg, k)
     return (
@@ -1479,103 +1475,158 @@ def wand_topk_batch(
     ``queries``: (query_id, query_string, mode) triples.  The scan is
     pruned once to the UNION of every query's terms (one parquet read,
     one cogroup — the per-query fixed job cost is amortized across the
-    whole batch); each segment kernel then runs every query against the
-    already-loaded block frames.  This is the Spark-idiomatic answer to
-    query throughput: the reference serves queries from a resident
-    process (`src/…/search_server`), a batch engine serves them by
-    making N queries cost one scan instead of N.
+    whole batch).  This is the Spark-idiomatic answer to query
+    throughput: the reference serves queries from a resident process
+    (`src/…/search_server`), a batch engine serves them by making N
+    queries cost one scan instead of N.
+
+    Per-segment cost: grouping the blocks by term is O(union terms),
+    paid once (:func:`segment_view`), plus each query's own scoring; the
+    per-query top-k cut then runs in a single partition
+    (:func:`batch_topk`).
 
     Results are identical to running :func:`wand_topk` per query —
     asserted by tests/test_batch_query.py.  ``term_df`` must cover the
     union of all queries' match terms."""
-    from ..functions.bm25 import idf as idf_fn
-    from .segments import attr_term
-
-    spark = segments.sparkSession
     specs = []
-    all_scan_terms: set[str] = set()
-    any_phrases = False
-    for qid, qstr, mode in queries:
-        pq = parse_query(qstr, analyzer) if isinstance(qstr, str) else qstr
-        if not pq.all_match_terms:
-            continue
-        if mode == "must" and any(
-            term_df.get(t, 0) == 0 for t in pq.all_match_terms
-        ):
-            continue
-        counts = pq.term_counts
-        qweights = {
-            t: counts[t] * weight(term_df.get(t, 0), num_docs)
-            for t in pq.uniq_terms
-        }
-        pweights = [
-            sum(idf_fn(term_df.get(t, 0), num_docs) for t in ph)
-            * (K1 + 1.0)
-            for ph in pq.phrases
-        ]
-        filter_terms = sorted(
-            attr_term(f_, v) for f_, v in pq.filters.items()
-        )
-        neg = sorted(
+    scan_terms = [DELETES_TERM]
+    for qid, q, mode in queries:
+        pq = parse_query(q, analyzer) if isinstance(q, str) else q
+        spec = _query_spec(pq, mode, num_docs, avgdl, term_df, k)
+        if spec is not None:
+            specs.append((qid, spec))
+            scan_terms += (pq.all_match_terms + spec["neg_terms"]
+                           + spec["filter_terms"])
+    if not specs:
+        return segments.sparkSession.createDataFrame([], _BATCH_SCHEMA)
+    seg_filtered = seg_scan(
+        segments, scan_terms, any(spec["phrases"] for _, spec in specs)
+    )
+    return batch_topk(seg_filtered, norms, specs, _segment_topk_kernel, k)
+
+
+def _query_spec(
+    pq: ParsedQuery,
+    mode: str,
+    num_docs: int,
+    avgdl: float,
+    term_df: dict[str, int],
+    k: int,
+    extra_neg: list[str] | None = None,
+) -> dict | None:
+    """Lower one parsed query into :func:`_segment_topk_kernel` keyword
+    arguments, or None when it provably matches nothing.  ``term_df``
+    holds the global document frequency of each match term."""
+    from ..functions.bm25 import idf as idf_fn
+
+    if not pq.all_match_terms or (mode == "must" and any(
+        term_df.get(t, 0) == 0 for t in pq.all_match_terms
+    )):
+        return None
+    counts = pq.term_counts
+    return dict(
+        terms=pq.uniq_terms,
+        # attribute filters → reserved-namespace MustNot terms and Must
+        # filter terms (site:/-site: semantics, parser.rs:193-216)
+        neg_terms=sorted(
             set(pq.neg_terms)
             | {attr_term(f_, v) for f_, v in pq.anti_filters.items()}
-        )
-        specs.append((qid, pq.uniq_terms, neg, qweights, pq.phrases,
-                      pweights, filter_terms, mode))
-        all_scan_terms.update(pq.all_match_terms, neg, filter_terms)
-        any_phrases = any_phrases or bool(pq.phrases)
-    if not specs:
-        return spark.createDataFrame(
-            [], "query_id string, doc_id long, score double"
-        )
+            | set(extra_neg or [])
+        ),
+        qweights={
+            t: counts[t] * weight(term_df.get(t, 0), num_docs)
+            for t in pq.uniq_terms
+        },
+        avgdl=avgdl, k=k, mode=mode, phrases=pq.phrases,
+        # PhraseQuery weight = Σ member idf × (K1+1) (bm25.rs:66-90)
+        pweights=[
+            sum(idf_fn(term_df.get(t, 0), num_docs) for t in ph) * (K1 + 1.0)
+            for ph in pq.phrases
+        ],
+        filter_terms=sorted(attr_term(f_, v) for f_, v in pq.filters.items()),
+    )
 
+
+def seg_scan(
+    segments: DataFrame, terms: list[str], need_positions: bool
+) -> DataFrame:
+    """The block scan pruned to ``terms`` (the ``term IN`` predicate is
+    pushed to parquet).  The position streams — the widest column — are
+    read only when ``need_positions`` (column pruning reaches the parquet
+    ReadSchema)."""
     cols = [
         "segment_id", "term", "block_id", "first_doc_id", "last_doc_id",
         "num_docs", "id_bytes", "tf_bytes", "max_tf", "min_norm_id",
     ]
-    if any_phrases:
+    if need_positions:
         cols.insert(8, "pos_bytes")
-    seg_filtered = segments.filter(
-        F.col("term").isin(sorted(all_scan_terms) + [DELETES_TERM])
-    ).select(*[c for c in cols if c in segments.columns])
+    return segments.filter(F.col("term").isin(sorted(set(terms)))).select(
+        *[c for c in cols if c in segments.columns]
+    )
+
+
+def per_segment(
+    seg_filtered: DataFrame,
+    norms: DataFrame,
+    score: Callable[[SegmentView | None], pd.DataFrame],
+    schema: str = _RESULT_SCHEMA,
+) -> DataFrame:
+    """Cogroup the pruned block scan with the norms on ``segment_id`` and
+    run ``score`` once per segment over its :func:`segment_view`."""
 
     def run(key, blocks_pdf: pd.DataFrame, norms_pdf: pd.DataFrame) -> pd.DataFrame:
-        outs = []
-        for (qid, uniq, neg, qweights, phrases, pweights,
-             filter_terms, mode) in specs:
-            res = _segment_topk_kernel(
-                uniq, neg, qweights, avgdl, k, mode, blocks_pdf,
-                norms_pdf, phrases, pweights, filter_terms, None, False,
-            )
-            if len(res):
-                res = res.drop(columns=["segment_id"])
-                res.insert(0, "query_id", qid)
-                outs.append(res)
-        if not outs:
-            return pd.DataFrame({
-                "query_id": pd.Series([], dtype="object"),
-                "doc_id": pd.Series([], dtype="int64"),
-                "score": pd.Series([], dtype="float64"),
-            })
-        return pd.concat(outs, ignore_index=True)
+        return score(segment_view(blocks_pdf, norms_pdf))
 
-    from pyspark.sql import Window
-
-    per_seg = (
+    return (
         seg_filtered.groupBy("segment_id")
         .cogroup(norms.groupBy("segment_id"))
-        .applyInPandas(run, "query_id string, doc_id long, score double")
+        .applyInPandas(run, schema)
     )
-    # per-query global cut: ≤ segments × Q × k rows reach this tiny
-    # window shuffle (never the posting data)
+
+
+def batch_segment_topk(
+    view: SegmentView | None,
+    specs: list[tuple[str, dict]],
+    kernel: Callable[..., pd.DataFrame],
+) -> pd.DataFrame:
+    """Per-segment body of a batch search → rows (query_id, doc_id,
+    score): ``kernel(view, **spec)`` scores each (query_id, spec) of the
+    non-empty ``specs`` against the ONE view built for the segment."""
+    outs = [kernel(view, **spec) for _, spec in specs]
+    out = pd.concat(outs, ignore_index=True).drop(columns=["segment_id"])
+    out.insert(0, "query_id", np.repeat(
+        np.array([qid for qid, _ in specs], dtype=object),
+        [len(r) for r in outs],
+    ))
+    return out
+
+
+def batch_topk(
+    seg_filtered: DataFrame,
+    norms: DataFrame,
+    specs: list[tuple[str, dict]],
+    kernel: Callable[..., pd.DataFrame],
+    k: int,
+) -> DataFrame:
+    """The plan behind both handles' ``search_batch``: the pruned scan
+    cogrouped with the norms, :func:`batch_segment_topk` per segment,
+    then the per-query cut.  The ≤ segments × queries × k candidate rows
+    (never posting data) move to ONE partition, where row_number ≤ k
+    keeps each query's top-k and rows leave sorted (query_id, score
+    desc, doc_id asc) — no range-sampling job of a global orderBy."""
+    per_seg = per_segment(
+        seg_filtered, norms,
+        lambda view: batch_segment_topk(view, specs, kernel), _BATCH_SCHEMA,
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc("doc_id")
     )
     return (
-        per_seg.withColumn("_rn", F.row_number().over(w))
+        per_seg.repartition(1)
+        .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= k)
         .drop("_rn")
-        .orderBy("query_id", F.desc("score"), F.asc("doc_id"))
+        .sortWithinPartitions("query_id", F.desc("score"), F.asc("doc_id"))
     )
 
 
@@ -1596,55 +1647,19 @@ def wand_topk_count(
     splits the ≤ segments×(k+1) collected rows.  Pruned fast paths are
     bypassed (an exact count requires full evaluation, as in the
     reference's counting collector)."""
-    spark = segments.sparkSession
     pq = parse_query(query, analyzer) if isinstance(query, str) else query
-    if not pq.all_match_terms:
+    spec = _query_spec(pq, mode, num_docs, avgdl, term_df, k)
+    if spec is None:
         return [], 0
-    if mode == "must" and any(
-        term_df.get(t, 0) == 0 for t in pq.all_match_terms
-    ):
-        return [], 0
-    counts = pq.term_counts
-    qweights = {
-        t: counts[t] * weight(term_df.get(t, 0), num_docs)
-        for t in pq.uniq_terms
-    }
-    from ..functions.bm25 import idf as idf_fn
-    from .segments import attr_term
-
-    pweights = [
-        sum(idf_fn(term_df.get(t, 0), num_docs) for t in ph) * (K1 + 1.0)
-        for ph in pq.phrases
-    ]
-    filter_terms = sorted(attr_term(f_, v) for f_, v in pq.filters.items())
-    neg = sorted(
-        set(pq.neg_terms)
-        | {attr_term(f_, v) for f_, v in pq.anti_filters.items()}
+    seg_filtered = seg_scan(
+        segments,
+        pq.all_match_terms + spec["neg_terms"] + spec["filter_terms"]
+        + [DELETES_TERM],
+        bool(pq.phrases),
     )
-    cols = [
-        "segment_id", "term", "block_id", "first_doc_id", "last_doc_id",
-        "num_docs", "id_bytes", "tf_bytes", "max_tf", "min_norm_id",
-    ]
-    if pq.phrases:
-        cols.insert(8, "pos_bytes")
-    seg_filtered = segments.filter(
-        F.col("term").isin(
-            pq.all_match_terms + neg + filter_terms + [DELETES_TERM]
-        )
-    ).select(*[c for c in cols if c in segments.columns])
-
-    def run(key, blocks_pdf: pd.DataFrame, norms_pdf: pd.DataFrame) -> pd.DataFrame:
-        return _segment_topk_kernel(
-            pq.uniq_terms, neg, qweights, avgdl, k, mode, blocks_pdf,
-            norms_pdf, pq.phrases, pweights, filter_terms, None, False,
-            with_count=True,
-        )
-
-    per_seg = (
-        seg_filtered.groupBy("segment_id")
-        .cogroup(norms.groupBy("segment_id"))
-        .applyInPandas(run, _RESULT_SCHEMA)
-    )
+    per_seg = per_segment(seg_filtered, norms, lambda view: _segment_topk_kernel(
+        view, **spec, with_count=True,
+    ))
     return fold_count_topk(per_seg, k)
 
 

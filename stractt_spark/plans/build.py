@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from ..functions.tokenizer import analyzer_fingerprint
 from ..operators.postings import build_postings, doc_stats
 from ..operators.segments import build_norms, build_segments, with_segment_id
+from ..session import shuffle_partitions
 
 STAGES = ("postings", "doc_stats", "segments", "norms", "term_stats", "stats")
 
@@ -441,7 +442,7 @@ def build_index_fused(
             # needs two passes over it (per-partition counts, then the
             # offset map) — without the cache each pass re-runs the range
             # SAMPLE + shuffle + sort of the whole pre_scores projection
-            n_rp = int(spark.conf.get("spark.sql.shuffle.partitions"))
+            n_rp = shuffle_partitions(spark)
             sorted_part = ranked.repartitionByRange(
                 n_rp, F.col("_neg_pre"), F.col("orig_id")
             ).sortWithinPartitions("_neg_pre", "orig_id").persist()
@@ -606,10 +607,11 @@ def _local_term_df(
     TermDictionary is mmapped per segment); parquet row-group pruning plays
     the role of the dictionary's block index.  Falls back to the Spark
     filter+collect path when the directory is not driver-readable (e.g. an
-    object-store URI in cluster mode)."""
-    try:
-        import pyarrow.dataset as pads
+    object-store URI in cluster mode) or a parquet file is corrupt."""
+    import pyarrow as pa
+    import pyarrow.dataset as pads
 
+    try:
         files = sorted(
             os.path.join(term_stats_dir, f)
             for f in os.listdir(term_stats_dir)
@@ -628,7 +630,10 @@ def _local_term_df(
                 )
             }
         return {}
-    except OSError:
+    except (OSError, pa.ArrowInvalid):
+        # unreadable on the driver (object-store URI) or a corrupt /
+        # partially-written parquet footer: the Spark reader is the safe
+        # superset
         rows = term_stats_df.filter(F.col("term").isin(terms)).collect()
         return {r["term"]: int(r["df"]) for r in rows}
 
@@ -728,6 +733,8 @@ class SegmentIndex:
         self.segments.select(F.lit(1).alias("_o")).unionAll(
             self.norms.select(F.lit(1).alias("_o"))
         ).count()
+        # plans memoized before this point scan the uncached inputs
+        self._plan_memo.clear()
         return self
 
     def term_df(self, terms: list[str]) -> dict[str, int]:
@@ -866,7 +873,10 @@ class SegmentIndex:
         top-k, identical to per-query :meth:`search`.  One pruned scan +
         one cogroup amortizes the per-job cost across the batch — the
         throughput shape for offline query workloads (relevance
-        harvesting, eval sets, training-data mining)."""
+        harvesting, eval sets, training-data mining).  Per segment,
+        grouping the blocks by term costs O(union terms) once, then each
+        query pays only its own scoring; the per-query top-k cut runs
+        in a single partition (see ``operators.wand.wand_topk_batch``)."""
         from ..functions.query_parse import parse_query
         from ..operators.wand import wand_topk_batch
 

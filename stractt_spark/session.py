@@ -41,3 +41,13 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def shuffle_partitions(spark) -> int:
+    """``spark.sql.shuffle.partitions`` as an int.  A non-numeric value —
+    e.g. ``"auto"`` on platforms with auto-optimized shuffle — falls back
+    to ``defaultParallelism``."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:
+        return spark.sparkContext.defaultParallelism
