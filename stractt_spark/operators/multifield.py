@@ -34,6 +34,7 @@ from pyspark.sql.types import (
 from ..functions.bm25 import B, K1, weight
 from ..functions.tokenizer import analyzer_fingerprint
 from ..functions.query_parse import parse_query
+from ..plans.build import IndexHandle, IndexPaths, join_docmap, write_docmap
 from .score import decoded_dl
 from .wand import SegmentView, _empty_topk, batch_topk, per_segment, seg_scan
 
@@ -430,8 +431,6 @@ def build_index_fused_multifield(
     import json
     import os
 
-    from ..plans.build import IndexPaths
-
     fields = sorted(field_cols)
     boosts = field_boosts or DEFAULT_FIELD_BOOSTS
     paths = IndexPaths(out_dir)
@@ -439,41 +438,9 @@ def build_index_fused_multifield(
 
     pre_col = None
     if pre_scores is not None:
-        from .postings import assign_doc_ids
-
         pre_col = "_pre"
-        ranked = (
-            pre_scores.select(
-                F.col(id_col).cast("long").alias("orig_id"),
-                F.col("pre_score").cast("double").alias("pre_score"),
-            )
-            .withColumn("_neg_pre", -F.col("pre_score"))
-        )
-        docmap = assign_doc_ids(ranked, ["_neg_pre", "orig_id"]).select(
-            "doc_id", "orig_id", "pre_score"
-        )
-        docmap.write.mode("overwrite").parquet(paths.docmap)
-        docmap_df = spark.read.parquet(paths.docmap)
-        missing = (
-            docs.select(F.col(id_col).cast("long").alias("_orig"))
-            .join(
-                docmap_df.select(F.col("orig_id").alias("_orig")),
-                "_orig", "left_anti",
-            )
-            .count()
-        )
-        if missing:
-            raise ValueError(
-                f"presorted build: {missing} doc(s) have no pre_scores row "
-                "and would be dropped by the docmap join"
-            )
-        docs = docs.withColumnRenamed(id_col, "_orig").join(
-            docmap_df.select(
-                F.col("orig_id").alias("_orig"), "doc_id",
-                F.col("pre_score").alias(pre_col),
-            ),
-            "_orig",
-        )
+        write_docmap(pre_scores, id_col, paths.docmap)
+        docs = join_docmap(spark, docs, id_col, paths.docmap, pre_col)
         id_col = "doc_id"
 
     attr_cols = sorted(attr_cols or [])
@@ -553,42 +520,32 @@ def build_index_fused_multifield(
     return paths
 
 
-class MultiFieldSegmentIndex:
+class MultiFieldSegmentIndex(IndexHandle):
     """Query handle over a persisted multi-field index: per-field posting
     blocks scored Σ boost_f · bm25_f in one cogrouped Arrow kernel per
     segment — the same scan shape (term IN pushdown, no join shuffle,
-    TakeOrderedAndProject merge) as the single-field WAND path."""
+    TakeOrderedAndProject merge) as the single-field WAND path.  Open,
+    cache, term_df, the plan memo, the guards and the collector helpers
+    are the shared :class:`~stractt_spark.plans.build.IndexHandle`'s;
+    ``term_df`` here takes PHYSICAL (per-field) terms."""
 
     def __init__(self, spark, root: str) -> None:
-        import json
-
-        from ..plans.build import IndexPaths
-
-        self.spark = spark
-        self.paths = IndexPaths(root)
-        with open(self.paths.stats) as f:
-            self.stats = json.load(f)
+        super().__init__(spark, root)
         mf = self.stats["multifield"]
         self.fields: list[str] = mf["fields"]
         self.boosts: dict[str, float] = mf["boosts"]
         self.avgdl: dict[str, float] = mf["avgdl"]
-        self.analyzer = self.stats["analyzer"]
-        from ..plans.build import _check_analyzer_fp
 
-        _check_analyzer_fp(self.stats)
-        # main table ∪ every LEDGERED streamed batch dir (same visibility
-        # rule as the single-field SegmentIndex)
-        from ..streaming.ingest import registered_paths
-
-        unified = spark.read.parquet(*registered_paths(root, self.stats))
-        self.segments = unified.filter(~F.col("term").startswith("\x00"))
+    def _open_tables(self) -> tuple[DataFrame, DataFrame]:
+        unified = self._read_unified()
+        segments = unified.filter(~F.col("term").startswith("\x00"))
         # ALL sentinel rows (per-field norms + the main meta row whose
         # pos_bytes carries packed pre-scores on presorted builds) — the
         # kernel splits them by term prefix
         # NOTE: the sentinel term column is aliased — a column named 'term'
         # on BOTH cogroup sides is silently dropped from the right-side
         # pandas frame by pyspark's cogroup apply
-        self.norms = unified.filter(F.col("term").startswith("\x00")).select(
+        norms = unified.filter(F.col("term").startswith("\x00")).select(
             "segment_id",
             F.col("term").alias("sentinel"),
             F.col("first_doc_id").alias("base_doc_id"),
@@ -598,93 +555,7 @@ class MultiFieldSegmentIndex:
             # anchor goggle patterns read the pattern field's exact dls
             F.col("tf_bytes").alias("meta_bytes"),
         )
-        self._term_stats_df = None
-        self._docmap_df = None
-        self._root = root
-        self._tdf_memo: dict[str, int] = {}
-        self._plan_memo: dict[tuple, object] = {}
-        self.presorted = bool(self.stats.get("presorted"))
-
-    @property
-    def term_stats(self):
-        # lazy: the default search path reads term stats via pyarrow
-        # (term_df); the listing+schema cost only pays when the spell /
-        # fallback paths actually need the DataFrame
-        if self._term_stats_df is None:
-            self._term_stats_df = self.spark.read.parquet(
-                self.paths.term_stats
-            )
-        return self._term_stats_df
-
-    @property
-    def docmap(self):
-        if not self.presorted:
-            return None
-        if self._docmap_df is None:
-            import os
-
-            from ..streaming.ingest import batch_docmap_dir
-
-            dm_dirs = [self.paths.docmap] + [
-                batch_docmap_dir(self._root, b)
-                for b in self.stats.get("stream_batches", [])
-            ]
-            self._docmap_df = self.spark.read.parquet(
-                *[d for d in dm_dirs if os.path.isdir(d)]
-            )
-        return self._docmap_df
-
-    def cache(self) -> "MultiFieldSegmentIndex":
-        # co-partition + co-sort on segment_id so every query's cogroup
-        # elides its Exchange+Sort pair — same layout contract as
-        # SegmentIndex.cache (see plans/build.py)
-        n_seg = max(
-            1,
-            -(-int(self.stats["num_docs"])
-              // max(1, int(self.stats.get("docs_per_segment", 1)))),
-        )
-        par = self.spark.sparkContext.defaultParallelism
-        # cap at defaultParallelism: beyond ~1 task/core the per-task
-        # scheduling + Arrow round-trip dominates the (cheap) per-segment
-        # kernel — measured at 50 segments/32 cores: 98 partitions 1.67 s
-        # vs 32 partitions 1.00 s for 3 queries.  Below the cap keep
-        # 2·n_seg so hash collisions rarely co-locate two segments.
-        n_part = max(1, min(2 * n_seg, par))
-        self.segments = (
-            self.segments.repartition(n_part, "segment_id")
-            .sortWithinPartitions("segment_id")
-            .cache()
-        )
-        self.norms = (
-            self.norms.repartition(n_part, "segment_id")
-            .sortWithinPartitions("segment_id")
-            .cache()
-        )
-        # ONE materialization job for both caches: counting a union of
-        # 1-literals scans (and therefore builds) both InMemoryRelations
-        # in a single action instead of two back-to-back jobs
-        self.segments.select(F.lit(1).alias("_o")).unionAll(
-            self.norms.select(F.lit(1).alias("_o"))
-        ).count()
-        # plans memoized before this point scan the uncached inputs
-        self._plan_memo.clear()
-        return self
-
-    def term_df(self, phys_terms: list[str]) -> dict[str, int]:
-        # driver-side pyarrow lookup + per-handle memo (no Spark job per
-        # search) — see plans.build._local_term_df
-        if not phys_terms:
-            return {}
-        from ..plans.build import _local_term_df
-
-        missing = [t for t in phys_terms if t not in self._tdf_memo]
-        if missing:
-            found = _local_term_df(
-                self.spark, self.term_stats, self.paths.term_stats, missing
-            )
-            for t in missing:
-                self._tdf_memo[t] = int(found.get(t, 0))
-        return {t: self._tdf_memo[t] for t in phys_terms if self._tdf_memo[t]}
+        return segments, norms
 
     def _spec(self, query, mode: str = "must", phrase: bool = False,
               extra_neg: list[str] | None = None,
@@ -813,18 +684,9 @@ class MultiFieldSegmentIndex:
         back through docmap.parquet with the (score desc, pre desc, orig
         id asc) tie contract.  The underscore params are the goggle
         lowering's private surface (see :meth:`search_goggle`)."""
-        from ..plans.build import validate_quota
-
-        if phrase and not self.stats.get("positions"):
-            raise ValueError(
-                "phrase queries need a multifield index built with "
-                "positions=True"
-            )
-        if (with_pre_score or orig_ids) and not self.presorted:
-            raise ValueError("pre-score options need a presorted index")
-        validate_quota(
-            self.presorted, bool(self.stats.get("deleted_docs")),
-            max_docs_per_segment, unsafe_quota,
+        self._check_options(
+            phrase, with_pre_score or orig_ids, max_docs_per_segment,
+            unsafe_quota,
         )
         if _has_empty_discard and not _const_clauses:
             # bare $discard with no other lowered instruction: every doc
@@ -832,10 +694,8 @@ class MultiFieldSegmentIndex:
             if with_metrics:
                 return [], {"blocks_decoded": 0, "blocks_total": 0}
             return self._empty_df()
-        # plan memo for the public search surface (goggle/ladder lowering
-        # passes private params and is excluded): identical query → same
-        # DataFrame object; execution still happens per collect().  See
-        # SegmentIndex.search for rationale (~120 ms of py4j per build).
+        # plan memo for the public search surface only: goggle/ladder
+        # lowering passes private params and is excluded
         memo_key = None
         if (
             not with_metrics and _const_clauses is None
@@ -899,36 +759,10 @@ class MultiFieldSegmentIndex:
             .limit(k_eff)
         )
         if orig_ids:
-            top = (
-                F.broadcast(top)
-                .join(
-                    self.docmap.select("doc_id", "orig_id", "pre_score"),
-                    "doc_id",
-                )
-                .select(
-                    F.col("orig_id").alias("doc_id"), "score",
-                    F.col("pre_score").alias("_pre"),
-                )
-                .orderBy(F.desc("score"), F.desc("_pre"), F.asc("doc_id"))
-                .drop("_pre")
-            )
+            top = self._to_orig_ids(top)
         if memo_key is not None:
-            if len(self._plan_memo) >= 256:
-                self._plan_memo.clear()
-            self._plan_memo[memo_key] = top
+            self._memoize(memo_key, top)
         return top
-
-    def search_list(self, query: str, k: int = 10, mode: str = "must",
-                    offset: int = 0, **kwargs):
-        from .collector import page
-
-        rows = [
-            (r["doc_id"], r["score"])
-            for r in self.search(
-                query, k, mode, offset=offset, **kwargs
-            ).collect()
-        ]
-        return page(rows, k, offset)
 
     def search_batch(
         self,
@@ -976,12 +810,7 @@ class MultiFieldSegmentIndex:
         → DataFrame (facet_value, match_count)."""
         from .wand import wand_facet_counts
 
-        attrs = self.stats.get("attr_cols") or []
-        if facet_field not in attrs:
-            raise ValueError(
-                f"facet_counts: {facet_field!r} is not an attr column of "
-                f"this index (attr_cols={attrs})"
-            )
+        self._check_attr_col(facet_field, "facet_counts:")
         return wand_facet_counts(
             self.segments, query, facet_field, mode=mode,
             analyzer=self.analyzer, fields=sorted(self.fields),
@@ -1056,21 +885,7 @@ class MultiFieldSegmentIndex:
             goggle, self.analyzer, site_col,
             field_map=field_map, default_field=default_field,
         )
-        if site_col is not None and site_col not in (
-            self.stats.get("attr_cols") or []
-        ):
-            raise ValueError(
-                f"site_col {site_col!r} is not an indexed attr column "
-                f"(attr_cols={self.stats.get('attr_cols')}); rebuild with "
-                "attr_cols=[...] to lower site instructions into the index"
-            )
-        if any(cl.get("pattern_terms") for cl in clauses) and not (
-            self.stats.get("positions")
-        ):
-            raise ValueError(
-                "pattern instructions need an index built with "
-                "positions=True"
-            )
+        self._check_goggle(clauses, site_col)
         return self.search(
             query, k, mode,
             _const_clauses=clauses, _has_empty_discard=has_empty_discard,
@@ -1094,10 +909,7 @@ class MultiFieldSegmentIndex:
         from ..functions.bm25 import idf as idf_fn
         from .wand import PROXIMITY_LADDER
 
-        if not self.stats.get("positions"):
-            raise ValueError(
-                "proximity needs an index built with positions=True"
-            )
+        self._need_positions("proximity needs")
         f_ = field or (
             "content" if "content" in self.fields else sorted(self.fields)[0]
         )
@@ -1121,51 +933,6 @@ class MultiFieldSegmentIndex:
             _ladder_terms=list(terms), _ladder_w=w_phrase,
         ).collect()
         return [(r["doc_id"], r["score"]) for r in rows]
-
-    def search_diverse(
-        self,
-        query: str,
-        k: int = 10,
-        mode: str = "must",
-        key_fns=None,
-        scales=None,
-        overfetch: int = 3,
-    ):
-        """Top-k with result-diversity re-ranking (collector.rs:247-343)
-        — same collector as the single-field path: overfetch×k
-        candidates, multiplicative same-key penalty on the driver.
-        Default key: segment (the repo-range analogue of the site
-        hash)."""
-        from .collector import DEFAULT_SCALES, rerank_diverse
-
-        dps = self.stats["docs_per_segment"]
-        key_fns = key_fns or [lambda d: d // dps]
-        scales = scales or DEFAULT_SCALES[: len(key_fns)]
-        rows = [
-            (r["doc_id"], r["score"])
-            for r in self.search(query, k * overfetch, mode).collect()
-        ]
-        return rerank_diverse(rows, key_fns, scales, k)
-
-    def search_corrected(
-        self, query: str, k: int = 10, mode: str = "must",
-        dict_size: int = 100_000,
-    ):
-        """Search; on an empty result set, spell-correct against the
-        LOGICAL term dictionary (per-field dfs summed per token) and
-        retry — returns (rows, corrected_query | None), mirroring the
-        single-field path."""
-        rows = self.search_list(query, k=k, mode=mode)
-        if rows:
-            return rows, None
-        pq = parse_query(query, self.analyzer)
-        suggestion = self.spell_checker(dict_size).suggest_query(
-            pq.uniq_terms
-        )
-        if not suggestion:
-            return rows, None
-        corrected = " ".join(suggestion)
-        return self.search_list(corrected, k=k, mode=mode), corrected
 
     def spell_checker(self, dict_size: int = 100_000):
         """Top-N LOGICAL term dictionary: physical per-field dfs fold by

@@ -69,23 +69,21 @@ def assign_doc_ids(
     reference applies at segment merge
     (``/root/reference/src/inverted_index.rs:308-355``).  The id depends
     only on the total order, not on the partition count.
+
+    The range-sorted intermediate is materialized ONCE
+    (``localCheckpoint``): every run of ``repartitionByRange`` samples its
+    own bounds, so a counts pass and an id pass that each re-ran it would
+    disagree on where partitions split — duplicate and skipped ids.  The
+    checkpoint also pins the partitions for every downstream read of the
+    result, and pays the sample + shuffle + sort once.
     """
     spark = df.sparkSession
     n = num_partitions or shuffle_partitions(spark)
-    part = df.repartitionByRange(n, *[F.col(c) for c in order_cols]).sortWithinPartitions(
-        *order_cols
+    part = (
+        df.repartitionByRange(n, *[F.col(c) for c in order_cols])
+        .sortWithinPartitions(*order_cols)
+        .localCheckpoint(eager=True)
     )
-    return assign_ids_on_sorted(part, n)
-
-
-def assign_ids_on_sorted(part: DataFrame, n: int) -> DataFrame:
-    """Second half of :func:`assign_doc_ids`: ``part`` must already be
-    range-partitioned into ``n`` partitions and sorted within each by the
-    order key.  Exposed so a caller can ``persist()`` the sorted
-    intermediate and pay the range-sample + shuffle + sort ONCE instead of
-    twice (the counts pass and the id-assignment pass both execute
-    ``part``'s subtree otherwise) — and ``unpersist()`` it the moment the
-    assigned ids are materialized."""
     counts = (
         part.withColumn("_pid", F.spark_partition_id())
         .groupBy("_pid")

@@ -1663,6 +1663,27 @@ def wand_topk_count(
     return fold_count_topk(per_seg, k)
 
 
+def _topk_structs(k: int):
+    """The global top-k of a per-segment frame as ONE sorted array column
+    ``_top`` of struct(ns=−score, d=doc_id): ascending struct order ==
+    (score desc, doc_id asc), the engine-wide tie contract.  Sentinel
+    rows (doc_id < 0) are left out."""
+    return F.slice(
+        F.array_sort(
+            F.collect_list(
+                F.when(
+                    F.col("doc_id") >= 0,
+                    F.struct(
+                        (-F.col("score")).alias("ns"),
+                        F.col("doc_id").alias("d"),
+                    ),
+                )
+            )
+        ),
+        1, k,
+    ).alias("_top")
+
+
 def fold_count_topk(per_seg: DataFrame, k: int) -> tuple[list[tuple[int, float]], int]:
     """Fold per-segment (top-k rows + count sentinels) into the global
     (top-k, total) SPARK-SIDE: one JVM aggregate sums the doc_id −1
@@ -1695,20 +1716,7 @@ def fold_metrics_topk(
         F.sum(
             F.when(F.col("doc_id") == -3, F.col("score"))
         ).alias("_tot"),
-        F.slice(
-            F.array_sort(
-                F.collect_list(
-                    F.when(
-                        F.col("doc_id") >= 0,
-                        F.struct(
-                            (-F.col("score")).alias("ns"),
-                            F.col("doc_id").alias("d"),
-                        ),
-                    )
-                )
-            ),
-            1, k,
-        ).alias("_top"),
+        _topk_structs(k),
     ).collect()[0]
     top = [(int(x["d"]), -float(x["ns"])) for x in row["_top"]]
     return top, {
@@ -1725,20 +1733,7 @@ def count_topk_agg(per_seg: DataFrame, k: int) -> DataFrame:
         F.sum(
             F.when(F.col("doc_id") == -1, F.col("score"))
         ).alias("_total"),
-        F.slice(
-            F.array_sort(
-                F.collect_list(
-                    F.when(
-                        F.col("doc_id") >= 0,
-                        F.struct(
-                            (-F.col("score")).alias("ns"),
-                            F.col("doc_id").alias("d"),
-                        ),
-                    )
-                )
-            ),
-            1, k,
-        ).alias("_top"),
+        _topk_structs(k),
     )
 
 

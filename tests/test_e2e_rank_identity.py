@@ -85,3 +85,20 @@ def test_assign_doc_ids_partition_invariant(spark):
     pb = {(r["repo"], r["path"]): r["doc_id"] for r in b.collect()}
     assert pa == pb
     assert sorted(pa.values()) == list(range(300))
+
+
+def test_assign_doc_ids_exact_past_sampling_size(spark):
+    """At 20000 rows every run of repartitionByRange samples its own
+    bounds; the count pass and the id pass must still see one partitioning,
+    so the ids are exactly 0..n-1 in the key's total order."""
+    n = 20000
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    df = spark.createDataFrame(
+        [(i, -float((i * 7919) % 1009)) for i in range(n)],
+        "orig_id long, neg_pre double",
+    )
+    got = assign_doc_ids(df, ["neg_pre", "orig_id"]).collect()
+    assert sorted(r["doc_id"] for r in got) == list(range(n))
+    by_id = sorted(got, key=lambda r: r["doc_id"])
+    keys = [(r["neg_pre"], r["orig_id"]) for r in by_id]
+    assert keys == sorted(keys)
