@@ -501,7 +501,7 @@ def decode_blocks(
     separately as per-field rows)."""
     from .segments import decode_subset_positions
 
-    def run(key, pdf: pd.DataFrame):
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         cols = {"doc_id": pd.Series([], dtype="int64"),
                 "term": pd.Series([], dtype="object"),
                 "tf": pd.Series([], dtype="int32")}

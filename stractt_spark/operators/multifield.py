@@ -36,7 +36,16 @@ from ..functions.tokenizer import analyzer_fingerprint
 from ..functions.query_parse import parse_query
 from ..plans.build import IndexHandle, IndexPaths, join_docmap, write_docmap
 from .score import decoded_dl
-from .wand import SegmentView, _empty_topk, batch_topk, per_segment, seg_scan
+from .segments import NormsSplit
+from .wand import (
+    SegmentView,
+    _empty_topk,
+    batch_topk,
+    empty_batch,
+    empty_topk,
+    per_segment,
+    topk_rows,
+)
 
 # reference-shaped defaults: path ≈ title (10), content ≈ body (4)
 DEFAULT_FIELD_BOOSTS: dict[str, float] = {"path": 10.0, "content": 4.0}
@@ -140,7 +149,7 @@ def bm25_topk_multifield(
     uniq = pq.uniq_terms
     spark = postings.sparkSession
     if not uniq:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return empty_topk(spark)
     counts = pq.term_counts
     fields = sorted(boosts)
 
@@ -154,7 +163,7 @@ def bm25_topk_multifield(
     if mode == "must" and any(
         all(dfs.get((t, f_), 0) == 0 for f_ in fields) for t in uniq
     ):
-        return spark.createDataFrame([], "doc_id long, score double")
+        return empty_topk(spark)
 
     # per-(term, field) unit weights: counts·boost·(idf_f·(k1+1));
     # association boost·weight then w·(tf/(tf+norm)) — canonical everywhere
@@ -231,6 +240,23 @@ MF_TERM_PREFIX = "\x02"
 MF_TERM_SEP = "\x1f"
 MF_NORMS_PREFIX = "\x00__mf__"
 
+# the norms side of a multi-field table: ALL \x00 rows — per-field norms,
+# the main meta row whose pos_bytes carries packed pre-scores on presorted
+# builds, and tombstones; the kernel splits them by term prefix.  The
+# sentinel term column is aliased: a column named 'term' on BOTH cogroup
+# sides is silently dropped from the right-side pandas frame by
+# pyspark's cogroup apply.  ``meta_bytes`` is the per-field sentinels'
+# varint [sum, n, dl…] tail — trailing-anchor goggle patterns read the
+# pattern field's exact dls.
+MF_NORMS = NormsSplit("\x00", True, (
+    ("segment_id", "segment_id"),
+    ("sentinel", "term"),
+    ("base_doc_id", "first_doc_id"),
+    ("norm_bytes", "id_bytes"),
+    ("pre_bytes", "pos_bytes"),
+    ("meta_bytes", "tf_bytes"),
+))
+
 
 def mf_term(field: str, token: str) -> str:
     return f"{MF_TERM_PREFIX}{field}{MF_TERM_SEP}{token}"
@@ -263,7 +289,7 @@ def build_segments_fused_multifield(
     fields = sorted(fields)
     attr_cols = sorted(attr_cols or [])
 
-    def encode(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def encode(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
         from collections import Counter
 
@@ -529,33 +555,14 @@ class MultiFieldSegmentIndex(IndexHandle):
     are the shared :class:`~stractt_spark.plans.build.IndexHandle`'s;
     ``term_df`` here takes PHYSICAL (per-field) terms."""
 
+    NORMS_SPLIT = MF_NORMS
+
     def __init__(self, spark, root: str) -> None:
         super().__init__(spark, root)
         mf = self.stats["multifield"]
         self.fields: list[str] = mf["fields"]
         self.boosts: dict[str, float] = mf["boosts"]
         self.avgdl: dict[str, float] = mf["avgdl"]
-
-    def _open_tables(self) -> tuple[DataFrame, DataFrame]:
-        unified = self._read_unified()
-        segments = unified.filter(~F.col("term").startswith("\x00"))
-        # ALL sentinel rows (per-field norms + the main meta row whose
-        # pos_bytes carries packed pre-scores on presorted builds) — the
-        # kernel splits them by term prefix
-        # NOTE: the sentinel term column is aliased — a column named 'term'
-        # on BOTH cogroup sides is silently dropped from the right-side
-        # pandas frame by pyspark's cogroup apply
-        norms = unified.filter(F.col("term").startswith("\x00")).select(
-            "segment_id",
-            F.col("term").alias("sentinel"),
-            F.col("first_doc_id").alias("base_doc_id"),
-            F.col("id_bytes").alias("norm_bytes"),
-            F.col("pos_bytes").alias("pre_bytes"),
-            # per-field sentinels' varint [sum, n, dl…] tail — trailing-
-            # anchor goggle patterns read the pattern field's exact dls
-            F.col("tf_bytes").alias("meta_bytes"),
-        )
-        return segments, norms
 
     def _spec(self, query, mode: str = "must", phrase: bool = False,
               extra_neg: list[str] | None = None,
@@ -643,14 +650,6 @@ class MultiFieldSegmentIndex(IndexHandle):
             "must_fields": sorted(must_fields) if must_fields else None,
         }
 
-    def _empty_df(self) -> DataFrame:
-        return self.spark.createDataFrame([], "doc_id long, score double")
-
-    def _seg_scan(self, scan_terms: list[str], need_positions: bool):
-        # no DELETES_TERM here: the MF handle routes every \x00 row —
-        # tombstones included — to the NORMS side of the cogroup
-        return seg_scan(self.segments, scan_terms, need_positions)
-
     def search(
         self, query: str, k: int = 10, mode: str = "must",
         phrase: bool = False,
@@ -693,7 +692,7 @@ class MultiFieldSegmentIndex(IndexHandle):
             # is discarded (the fast paths never reach the clause block)
             if with_metrics:
                 return [], {"blocks_decoded": 0, "blocks_total": 0}
-            return self._empty_df()
+            return empty_topk(self.spark)
         # plan memo for the public search surface only: goggle/ladder
         # lowering passes private params and is excluded
         memo_key = None
@@ -715,7 +714,7 @@ class MultiFieldSegmentIndex(IndexHandle):
         if spec is None:
             if with_metrics:
                 return [], {"blocks_decoded": 0, "blocks_total": 0}
-            return self._empty_df()
+            return empty_topk(self.spark)
         clause_terms: list[str] = []
         clause_patterns = False
         for cl in _const_clauses or []:
@@ -724,11 +723,6 @@ class MultiFieldSegmentIndex(IndexHandle):
             if cl.get("pattern_terms"):
                 clause_terms.extend(cl["pattern_terms"])
                 clause_patterns = True
-        seg_filtered = self._seg_scan(
-            spec["scan_terms"] + clause_terms,
-            need_positions=bool(spec["phrases"]) or clause_patterns
-            or _ladder is not None,
-        )
         k_eff = k + offset
         max_docs = max_docs_per_segment
         add_pre = with_pre_score
@@ -738,31 +732,30 @@ class MultiFieldSegmentIndex(IndexHandle):
 
         self_fields = self.fields
         self_avgdl = dict(self.avgdl)
-        per_seg = per_segment(seg_filtered, self.norms, lambda view: _mf_segment_topk(
-            view, s["uniq_sorted"], sorted(self_fields), s["weights"],
-            self_avgdl, k_eff, s["mode"], s["neg_phys"], s["phrases"],
-            s["pweights"], max_docs=max_docs, add_pre=add_pre,
-            with_metrics=wm, filter_phys=s["filter_phys"], const_clauses=cc,
-            has_empty_discard=hed, score_coeff=sc,
-            must_fields=s.get("must_fields"),
-            ladder=_ladder, ladder_field=_ladder_field,
-            ladder_terms=_ladder_terms, ladder_w=_ladder_w,
-        ))
+        # no DELETES_TERM in the scan: the MF split routes every \x00
+        # row — tombstones included — to the NORMS side
+        per_seg = per_segment(
+            self.segments, self.norms, [spec["scan_terms"] + clause_terms],
+            bool(spec["phrases"]) or clause_patterns or _ladder is not None,
+            lambda view: _mf_segment_topk(
+                view, s["uniq_sorted"], sorted(self_fields), s["weights"],
+                self_avgdl, k_eff, s["mode"], s["neg_phys"], s["phrases"],
+                s["pweights"], max_docs=max_docs, add_pre=add_pre,
+                with_metrics=wm, filter_phys=s["filter_phys"],
+                const_clauses=cc, has_empty_discard=hed, score_coeff=sc,
+                must_fields=s.get("must_fields"),
+                ladder=_ladder, ladder_field=_ladder_field,
+                ladder_terms=_ladder_terms, ladder_w=_ladder_w,
+            ),
+            driver=self.driver,
+        )
         if with_metrics:
             from .wand import fold_metrics_topk
 
             return fold_metrics_topk(per_seg, k_eff)
-        top = (
-            per_seg
-            .select("doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k_eff)
+        return self._memoize(
+            memo_key, topk_rows(per_seg, k_eff, self.spark), orig_ids
         )
-        if orig_ids:
-            top = self._to_orig_ids(top)
-        if memo_key is not None:
-            self._memoize(memo_key, top)
-        return top
 
     def search_batch(
         self,
@@ -776,15 +769,13 @@ class MultiFieldSegmentIndex(IndexHandle):
         every query's physical terms.  Per-segment cost: grouping the
         blocks by term is O(union terms), paid once
         (:func:`~.wand.segment_view`), plus each query's own scoring; the
-        per-query top-k cut runs in a single partition
-        (:func:`~.wand.batch_topk`).  Results are identical to per-query
+        per-query top-k cut follows (:func:`~.wand.batch_topk`; a small
+        batch runs on the driver).  Results are identical to per-query
         :meth:`search` — asserted by tests/test_mf_parity.py."""
         compiled = [(qid, self._spec(qstr, mode)) for qid, qstr, mode in queries]
         compiled = [(qid, sp) for qid, sp in compiled if sp is not None]
         if not compiled:
-            return self.spark.createDataFrame(
-                [], "query_id string, doc_id long, score double"
-            )
+            return empty_batch(self.spark)
         fields = sorted(self.fields)
         avgdl = dict(self.avgdl)
         specs = [
@@ -796,11 +787,12 @@ class MultiFieldSegmentIndex(IndexHandle):
             ))
             for qid, sp in compiled
         ]
-        seg_filtered = self._seg_scan(
-            [t for _, sp in compiled for t in sp["scan_terms"]],
-            need_positions=any(sp["phrases"] for _, sp in compiled),
+        return batch_topk(
+            self.segments, self.norms, specs,
+            [sp["scan_terms"] for _, sp in compiled],
+            any(sp["phrases"] for _, sp in compiled), _mf_segment_topk, k,
+            self.driver,
         )
-        return batch_topk(seg_filtered, self.norms, specs, _mf_segment_topk, k)
 
     def facet_counts(self, query: str, facet_field: str, mode: str = "must"):
         """Per-``facet_field`` doc counts over the FULL match set —
@@ -829,18 +821,20 @@ class MultiFieldSegmentIndex(IndexHandle):
         spec = self._spec(query, mode)
         if spec is None:
             return [], 0
-        seg_filtered = self._seg_scan(
-            spec["scan_terms"], need_positions=bool(spec["phrases"])
-        )
         self_fields = sorted(self.fields)
         self_avgdl = dict(self.avgdl)
 
-        per_seg = per_segment(seg_filtered, self.norms, lambda view: _mf_segment_topk(
-            view, spec["uniq_sorted"], self_fields, spec["weights"],
-            self_avgdl, k, spec["mode"], spec["neg_phys"], spec["phrases"],
-            spec["pweights"], filter_phys=spec["filter_phys"],
-            with_count=True,
-        ))
+        per_seg = per_segment(
+            self.segments, self.norms, [spec["scan_terms"]],
+            bool(spec["phrases"]),
+            lambda view: _mf_segment_topk(
+                view, spec["uniq_sorted"], self_fields, spec["weights"],
+                self_avgdl, k, spec["mode"], spec["neg_phys"],
+                spec["phrases"], spec["pweights"],
+                filter_phys=spec["filter_phys"], with_count=True,
+            ),
+            driver=self.driver,
+        )
         return fold_count_topk(per_seg, k)
 
     def search_goggle(

@@ -36,6 +36,7 @@ SURVEY.md §4).  Encoding is a narrow Arrow pass over grouped rows.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -195,7 +196,7 @@ def build_segments(postings: DataFrame, docs_per_segment: int) -> DataFrame:
     mirroring the reference's 1 GB-per-segment writer budget
     (/root/reference/src/inverted_index.rs:130)."""
 
-    def encode(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def encode(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         if not len(pdf):
             return pd.DataFrame()
         # integer sort: factorize terms (sort=True → codes follow
@@ -434,7 +435,7 @@ def build_segments_fused(
             [meta_row(len(ids_arr), len(blocks), nbytes), blocks], ignore_index=True
         )
 
-    def encode(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def encode(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         return encode_segment(int(key[0]), pdf)
 
     if not aligned_input:
@@ -473,23 +474,60 @@ def build_segments_fused(
     return src.mapInPandas(encode_partition, SEGMENTS_SCHEMA)
 
 
+class NormsSplit(NamedTuple):
+    """How a unified table yields its norms side: the sentinel rows
+    (``term == sentinel``, or every term starting with it when
+    ``prefix``), each column renamed ``(alias, source)``; every other row
+    is a block row.  Both query sites use the ONE definition a handle
+    holds — the Spark views through :meth:`rows` / :meth:`select`, the
+    driver-side pyarrow read through :meth:`arrow_rows` and ``cols``."""
+
+    sentinel: str
+    prefix: bool
+    cols: tuple[tuple[str, str], ...]
+
+    def rows(self):
+        """The norms-row predicate as a Spark column."""
+        t = F.col("term")
+        return t.startswith(self.sentinel) if self.prefix else t == self.sentinel
+
+    def arrow_rows(self):
+        """The same predicate as a pyarrow dataset expression (a prefix
+        is the range [sentinel, sentinel with its last char bumped))."""
+        import pyarrow.dataset as pads
+
+        t = pads.field("term")
+        if not self.prefix:
+            return t == self.sentinel
+        hi = self.sentinel[:-1] + chr(ord(self.sentinel[-1]) + 1)
+        return (t >= self.sentinel) & (t < hi)
+
+    def select(self, unified: DataFrame) -> DataFrame:
+        return unified.filter(self.rows()).select(*[
+            F.col(src) if alias == src else F.col(src).alias(alias)
+            for alias, src in self.cols
+        ])
+
+
+# the single-field fused table: one NORMS_SENTINEL row per segment.  The
+# norms view carries ``pre_bytes`` (packed float32 pre-computed scores)
+# when the build was presorted, else null, and ``meta_bytes`` — varint
+# [5 metrics, then exact per-doc token counts]; the query kernel decodes
+# the tail for trailing-anchor goggle patterns
+UNIFIED_NORMS = NormsSplit(NORMS_SENTINEL, False, (
+    ("segment_id", "segment_id"),
+    ("base_doc_id", "first_doc_id"),
+    ("n_docs", "num_docs"),
+    ("norm_bytes", "id_bytes"),
+    ("pre_bytes", "pos_bytes"),
+    ("meta_bytes", "tf_bytes"),
+))
+
+
 def split_unified(unified: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Unified fused table → (segments view, norms view) — pure filters,
-    pushed to the parquet scan.  The norms view carries ``pre_bytes``
-    (packed float32 pre-computed scores) when the build was presorted,
-    else null."""
-    segments = unified.filter(F.col("term") != NORMS_SENTINEL)
-    norms = unified.filter(F.col("term") == NORMS_SENTINEL).select(
-        "segment_id",
-        F.col("first_doc_id").alias("base_doc_id"),
-        F.col("num_docs").alias("n_docs"),
-        F.col("id_bytes").alias("norm_bytes"),
-        F.col("pos_bytes").alias("pre_bytes"),
-        # varint [5 metrics, then exact per-doc token counts] — the query
-        # kernel decodes the tail for trailing-anchor goggle patterns
-        F.col("tf_bytes").alias("meta_bytes"),
-    )
-    return segments, norms
+    pushed to the parquet scan (:data:`UNIFIED_NORMS`)."""
+    return unified.filter(~UNIFIED_NORMS.rows()), UNIFIED_NORMS.select(unified)
 
 
 def build_norms(doc_stats_df: DataFrame, docs_per_segment: int) -> DataFrame:
@@ -500,7 +538,7 @@ def build_norms(doc_stats_df: DataFrame, docs_per_segment: int) -> DataFrame:
         "segment_id", (F.col("doc_id") / F.lit(docs_per_segment)).cast("int")
     )
 
-    def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pack(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         seg = int(key[0])
         base = seg * docs_per_segment
         local = pdf["doc_id"].to_numpy(dtype=np.int64) - base

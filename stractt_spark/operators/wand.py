@@ -1,17 +1,25 @@
 """Distributed top-k retrieval over compressed segments.
 
 Query shape (mirrors the reference's per-segment search + merge,
-/root/reference/src/inverted_index.rs:179-190, src/collector.rs:105-211):
+src/inverted_index.rs:179-190 and src/collector.rs:105-211):
 
-1. scan the segments table filtered to the query terms — the ``term IN``
-   predicate reaches the parquet scan (PushedFilters), and segment
-   directories are partition-pruned by the file layout;
-2. per segment (cogrouped with its packed norms row), an Arrow kernel
-   scores candidates and returns that segment's top-k;
-3. global ``orderBy(score desc, doc_id).limit(k)`` over the tiny
-   per-segment results — Catalyst's TakeOrderedAndProject is the partial/
-   final bounded-heap merge (the "final bounded-heap top-k aggregate" of
-   the north star).
+1. estimate the work the request scores — Σ ``term_df`` over each
+   query's scan terms plus a fixed weight per (segment, query) kernel
+   call, known before any read — and pick the site in
+   :func:`per_segment`: below :data:`DRIVER_SITE_POSTINGS` on a handle
+   whose pinned files are all local runs on the DRIVER, anything else
+   (larger scans, non-``file:`` paths, staged layouts, bare DataFrames)
+   launches the Spark job;
+2. scan the segment blocks filtered to the query terms — the ``term IN``
+   predicate reaches the parquet read on both sites (pyarrow filter on
+   the driver, PushedFilters in Spark);
+3. per segment, its blocks paired with its norms rows (a cogroup on the
+   Spark site, the same frames read in-process on the driver), an Arrow
+   kernel scores candidates and returns that segment's top-k;
+4. global top-k by (score desc, doc_id asc) over the tiny per-segment
+   results — Catalyst's TakeOrderedAndProject on the Spark site, a
+   driver-side sort into a local relation (no Spark job on ``collect()``)
+   on the driver site.
 
 Per-segment kernel (numpy, no per-posting Python):
 
@@ -51,6 +59,7 @@ from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -60,6 +69,7 @@ from ..functions.query_parse import ParsedQuery, parse_query
 from .segments import (
     ATTR_PREFIX,
     DELETES_TERM,
+    NormsSplit,
     attr_term,
     decode_block_subset,
     decode_subset_positions,
@@ -72,11 +82,7 @@ _BATCH_SCHEMA = "query_id string, doc_id long, score double"
 
 def _empty_topk() -> pd.DataFrame:
     """A kernel's no-match result (``_RESULT_SCHEMA``)."""
-    return pd.DataFrame(
-        {"segment_id": pd.Series([], dtype="int32"),
-         "doc_id": pd.Series([], dtype="int64"),
-         "score": pd.Series([], dtype="float64")}
-    )
+    return _empty_frame(_RESULT_SCHEMA)
 
 
 class SegmentView(NamedTuple):
@@ -1367,8 +1373,14 @@ def wand_topk(
     extra_neg_terms: list[str] | None = None,
     with_metrics: bool = False,
     ladder: tuple[tuple[float, int], ...] | None = None,
+    driver: DriverScan | None = None,
 ) -> DataFrame:
     """→ (doc_id, score) global top-k from the segment index.
+
+    ``driver``: the handle's pinned local files (:class:`DriverScan`);
+    with it a small request is scored on the driver (:func:`per_segment`)
+    and the result is a local relation.  Without it (bare DataFrames)
+    the Spark site always runs.
 
     ``ladder``: (boost, slop) proximity rungs scored in-retrieval inside
     the per-segment kernel (single-phase — reference parity with the
@@ -1399,11 +1411,11 @@ def wand_topk(
         # fast paths would otherwise skip the restriction entirely
         if with_metrics:
             return [], {"blocks_decoded": 0, "blocks_total": 0}
-        return spark.createDataFrame([], "doc_id long, score double")
+        return empty_topk(spark)
     pq = parse_query(query, analyzer) if isinstance(query, str) else query
     spec = _query_spec(pq, mode, num_docs, avgdl, term_df, k, extra_neg_terms)
     if spec is None:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return empty_topk(spark)
     ladder_w = 0.0
     if ladder is not None:
         if max_docs_per_segment is not None:
@@ -1432,31 +1444,27 @@ def wand_topk(
         if cl.get("pattern_terms"):
             clause_terms.extend(cl["pattern_terms"])
             clause_patterns = True
-    seg_filtered = seg_scan(
-        segments,
-        pq.all_match_terms + spec["neg_terms"] + spec["filter_terms"]
-        + clause_terms + [DELETES_TERM],
+    per_seg = per_segment(
+        segments, norms,
+        [pq.all_match_terms + spec["neg_terms"] + spec["filter_terms"]
+         + clause_terms + [DELETES_TERM]],
         bool(pq.phrases) or clause_patterns or ladder is not None,
+        lambda view: _segment_topk_kernel(
+            view, **spec,
+            max_docs=max_docs_per_segment,
+            add_pre=add_pre,
+            const_clauses=const_clauses,
+            has_empty_discard=has_empty_discard,
+            score_coeff=score_coeff,
+            with_metrics=with_metrics,
+            ladder=ladder,
+            ladder_w=ladder_w,
+        ),
+        driver=driver,
     )
-    per_seg = per_segment(seg_filtered, norms, lambda view: _segment_topk_kernel(
-        view, **spec,
-        max_docs=max_docs_per_segment,
-        add_pre=add_pre,
-        const_clauses=const_clauses,
-        has_empty_discard=has_empty_discard,
-        score_coeff=score_coeff,
-        with_metrics=with_metrics,
-        ladder=ladder,
-        ladder_w=ladder_w,
-    ))
     if with_metrics:
         return fold_metrics_topk(per_seg, k)
-    return (
-        per_seg
-        .select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return topk_rows(per_seg, k, spark)
 
 
 def wand_topk_batch(
@@ -1468,6 +1476,7 @@ def wand_topk_batch(
     term_df: dict[str, int],
     k: int = 10,
     analyzer: str = "ascii",
+    driver: DriverScan | None = None,
 ) -> DataFrame:
     """Evaluate MANY queries in ONE pass over the index → rows
     ``(query_id, doc_id, score)``, per-query top-k.
@@ -1482,27 +1491,29 @@ def wand_topk_batch(
 
     Per-segment cost: grouping the blocks by term is O(union terms),
     paid once (:func:`segment_view`), plus each query's own scoring; the
-    per-query top-k cut then runs in a single partition
-    (:func:`batch_topk`).
+    per-query top-k cut follows (:func:`batch_topk`).  With ``driver``
+    a batch whose summed scan estimate is small runs on the driver
+    (:func:`per_segment`).
 
     Results are identical to running :func:`wand_topk` per query —
     asserted by tests/test_batch_query.py.  ``term_df`` must cover the
     union of all queries' match terms."""
     specs = []
-    scan_terms = [DELETES_TERM]
+    scans = []
     for qid, q, mode in queries:
         pq = parse_query(q, analyzer) if isinstance(q, str) else q
         spec = _query_spec(pq, mode, num_docs, avgdl, term_df, k)
         if spec is not None:
             specs.append((qid, spec))
-            scan_terms += (pq.all_match_terms + spec["neg_terms"]
-                           + spec["filter_terms"])
+            scans.append(pq.all_match_terms + spec["neg_terms"]
+                         + spec["filter_terms"] + [DELETES_TERM])
     if not specs:
-        return segments.sparkSession.createDataFrame([], _BATCH_SCHEMA)
-    seg_filtered = seg_scan(
-        segments, scan_terms, any(spec["phrases"] for _, spec in specs)
+        return empty_batch(segments.sparkSession)
+    return batch_topk(
+        segments, norms, specs, scans,
+        any(spec["phrases"] for _, spec in specs), _segment_topk_kernel, k,
+        driver,
     )
-    return batch_topk(seg_filtered, norms, specs, _segment_topk_kernel, k)
 
 
 def _query_spec(
@@ -1547,40 +1558,273 @@ def _query_spec(
     )
 
 
+_SCAN_COLS = (
+    "segment_id", "term", "block_id", "first_doc_id", "last_doc_id",
+    "num_docs", "id_bytes", "tf_bytes", "max_tf", "min_norm_id",
+)
+
+
+def _scan_cols(need_positions: bool, available: list[str]) -> list[str]:
+    """The block columns a scan reads: the position streams — the widest
+    column — only when ``need_positions``."""
+    cols = list(_SCAN_COLS)
+    if need_positions:
+        cols.insert(8, "pos_bytes")
+    return [c for c in cols if c in available]
+
+
 def seg_scan(
     segments: DataFrame, terms: list[str], need_positions: bool
 ) -> DataFrame:
     """The block scan pruned to ``terms`` (the ``term IN`` predicate is
-    pushed to parquet).  The position streams — the widest column — are
-    read only when ``need_positions`` (column pruning reaches the parquet
-    ReadSchema)."""
-    cols = [
-        "segment_id", "term", "block_id", "first_doc_id", "last_doc_id",
-        "num_docs", "id_bytes", "tf_bytes", "max_tf", "min_norm_id",
-    ]
-    if need_positions:
-        cols.insert(8, "pos_bytes")
+    pushed to parquet; column pruning reaches the parquet ReadSchema)."""
     return segments.filter(F.col("term").isin(sorted(set(terms)))).select(
-        *[c for c in cols if c in segments.columns]
+        *_scan_cols(need_positions, segments.columns)
     )
 
 
+# The driver site scores a request in-process when its estimate is below
+# DRIVER_SITE_POSTINGS; larger requests take the Spark job (0: never the
+# driver).  The estimate, known before any read, is the postings the
+# request scans — Σ over its queries of Σ term_df over each query's scan
+# terms — plus KERNEL_CALL_POSTINGS per (segment, query) kernel call: on
+# the driver every call runs one after the other, and its fixed cost
+# (~3.3 ms, against ~0.9 µs per posting) dominates once an index has more
+# segments than the Spark site has cores.  Sweep on a 4-core host,
+# local[4], perfbench corpus seed 1 (8192 docs), cached doc-id handle,
+# search_batch of n distinct rare_or/and2/and3/or4 queries, median of 3
+# (seconds, driver / Spark):
+#   2 segments:  n=1 0.08/0.80  n=32 0.45/1.10  n=64 0.88/1.44
+#                n=128 1.57/2.33  n=256 2.40/3.32
+#   16 segments: n=8 0.84/1.68  n=12 0.94/1.27  n=16 1.42/1.45
+#                n=24 2.13/1.70  n=32 2.71/2.11
+#   64 segments: n=2 0.57/1.19  n=4 1.31/1.37  n=8 2.04/1.48
+# Both crossovers sit at ~256 kernel calls (≈ 1.0M with the call
+# weight); with 2 segments the Spark site runs only 2 tasks and loses up
+# to n=256, so there the rule errs toward the Spark site above n≈120.
+DRIVER_SITE_POSTINGS = 1_000_000
+KERNEL_CALL_POSTINGS = 4_000
+
+
+class DriverScan(NamedTuple):
+    """What the driver site reads: the local parquet files a handle
+    pinned at open (the files Spark listed for its table, so the driver
+    sees the same snapshot as the Spark views), the handle's norms split,
+    its ``term_df`` lookup and segment count for the estimate."""
+
+    files: tuple[str, ...]
+    split: NormsSplit
+    term_df: Callable[[list[str]], dict[str, int]]
+    segments: int
+
+
+def pin_driver_scan(
+    files: tuple[str, ...],
+    split: NormsSplit,
+    term_df: Callable[[list[str]], dict[str, int]],
+) -> DriverScan | None:
+    """The handle's :class:`DriverScan` over ``files`` (from
+    :func:`local_paths`), its segments counted from the norms rows — or
+    None when pyarrow cannot read the files on the driver."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+
+    try:
+        seg = pads.dataset(list(files), format="parquet").to_table(
+            columns=["segment_id"], filter=split.arrow_rows(),
+        ).column("segment_id")
+    except (OSError, pa.ArrowInvalid):
+        return None
+    return DriverScan(files, split, term_df, len(pc.unique(seg)))
+
+
+def local_paths(uris: list[str]) -> tuple[str, ...] | None:
+    """The driver-readable paths behind Spark's ``inputFiles()`` URIs, or
+    None unless every one is a local ``file:`` URI (object stores, HDFS
+    and friends are read by the Spark site only)."""
+    from urllib.parse import urlparse
+    from urllib.request import url2pathname
+
+    out = []
+    for uri in uris:
+        u = urlparse(uri)
+        if u.scheme != "file" or u.netloc not in ("", "localhost"):
+            return None
+        out.append(url2pathname(u.path))
+    return tuple(out) or None
+
+
+def read_driver(
+    src: DriverScan, terms: list[str], need_positions: bool
+) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """→ (blocks, norms) frames of every segment, read with pyarrow from
+    the pinned files — the columns and rows the Spark site's cogroup
+    delivers: blocks are the non-norms rows with ``term IN terms``,
+    norms the split's sentinel rows under their aliases."""
+    import pyarrow.dataset as pads
+
+    ds = pads.dataset(list(src.files), format="parquet")
+    norms_rows = src.split.arrow_rows()
+    blocks = ds.to_table(
+        columns=_scan_cols(need_positions, ds.schema.names),
+        filter=pads.field("term").isin(pa.array(terms, pa.string()))
+        & ~norms_rows,
+    ).to_pandas()
+    norms = ds.to_table(
+        columns=[c for _, c in src.split.cols], filter=norms_rows,
+    ).to_pandas()
+    norms.columns = [a for a, _ in src.split.cols]
+    return blocks, norms
+
+
+def _empty_frame(schema: str) -> pd.DataFrame:
+    """An empty pandas frame typed like the DDL ``schema``."""
+    dtypes = {"int": "int32", "long": "int64", "double": "float64",
+              "string": "object"}
+    return pd.DataFrame({
+        name: pd.Series([], dtype=dtypes[typ])
+        for name, typ in (c.split() for c in schema.split(","))
+    })
+
+
 def per_segment(
-    seg_filtered: DataFrame,
+    segments: DataFrame,
     norms: DataFrame,
+    scans: list[list[str]],
+    need_positions: bool,
     score: Callable[[SegmentView | None], pd.DataFrame],
     schema: str = _RESULT_SCHEMA,
-) -> DataFrame:
-    """Cogroup the pruned block scan with the norms on ``segment_id`` and
-    run ``score`` once per segment over its :func:`segment_view`."""
+    driver: DriverScan | None = None,
+) -> DataFrame | pd.DataFrame:
+    """Run ``score`` once per segment over its :func:`segment_view` — the
+    one dispatch point of every query shape.  ``scans`` holds each
+    query's scan terms; the blocks read are their union.
 
-    def run(key, blocks_pdf: pd.DataFrame, norms_pdf: pd.DataFrame) -> pd.DataFrame:
+    * **Driver site** — when ``driver`` is given and the request's
+      estimate (Σ over ``scans`` of Σ term_df, plus
+      :data:`KERNEL_CALL_POSTINGS` per segment and query) is below
+      :data:`DRIVER_SITE_POSTINGS`: read the pinned files with pyarrow
+      (:func:`read_driver`), score the segments in segment-id order
+      in-process, and return the concatenated per-segment rows as a
+      pandas frame.  A pyarrow ``OSError`` / ``ArrowInvalid`` falls back
+      to the Spark site.
+    * **Spark site** — otherwise: cogroup the pruned block scan with the
+      norms on ``segment_id`` in one Python-UDF job; returns that plan.
+
+    The cut helpers (:func:`topk_rows`, :func:`fold_count_topk`,
+    :func:`fold_metrics_topk`, :func:`batch_topk`) accept either."""
+    terms = sorted({t for scan in scans for t in scan})
+    if driver is not None and driver.files:
+        dfs = driver.term_df(terms)
+        est = sum(dfs.get(t, 0) for scan in scans for t in set(scan))
+        est += KERNEL_CALL_POSTINGS * driver.segments * len(scans)
+        if est < DRIVER_SITE_POSTINGS:
+            try:
+                blocks, norms_pdf = read_driver(driver, terms, need_positions)
+            except (OSError, pa.ArrowInvalid):
+                # unreadable on the driver (a file gone since open, a
+                # corrupt footer): the Spark reader is the safe superset
+                pass
+            else:
+                return _score_on_driver(blocks, norms_pdf, score, schema)
+
+    def run(key: tuple, blocks_pdf: pd.DataFrame,
+            norms_pdf: pd.DataFrame) -> pd.DataFrame:
         return score(segment_view(blocks_pdf, norms_pdf))
 
     return (
-        seg_filtered.groupBy("segment_id")
+        seg_scan(segments, terms, need_positions).groupBy("segment_id")
         .cogroup(norms.groupBy("segment_id"))
         .applyInPandas(run, schema)
+    )
+
+
+def _score_on_driver(
+    blocks: pd.DataFrame,
+    norms: pd.DataFrame,
+    score: Callable[[SegmentView | None], pd.DataFrame],
+    schema: str,
+) -> pd.DataFrame:
+    """The cogroup's semantics in-process: ``score`` once per segment id
+    present on either side (the missing side empty), in segment-id
+    order."""
+    by_blocks = dict(tuple(blocks.groupby("segment_id")))
+    by_norms = dict(tuple(norms.groupby("segment_id")))
+    outs = [
+        score(segment_view(by_blocks.get(seg, blocks.iloc[:0]),
+                           by_norms.get(seg, norms.iloc[:0])))
+        for seg in sorted(by_blocks.keys() | by_norms.keys())
+    ]
+    return pd.concat(outs, ignore_index=True) if outs else _empty_frame(schema)
+
+
+_TOP_ARROW = pa.schema([("doc_id", pa.int64()), ("score", pa.float64())])
+_BATCH_ARROW = pa.schema([
+    ("query_id", pa.string()), ("doc_id", pa.int64()), ("score", pa.float64()),
+])
+
+
+def local_result(spark, pdf: pd.DataFrame, schema: pa.Schema) -> DataFrame:
+    """A driver-side result as a DataFrame: a local relation built from
+    Arrow (under ``spark.sql.execution.arrow.localRelationThreshold``),
+    so its ``collect()`` starts no Spark job — unlike
+    ``createDataFrame`` of a Python list, which ships the rows through a
+    Python job.  The frame is marked so the handles' plan memo skips it
+    (:func:`driver_result`)."""
+    df = spark.createDataFrame(
+        pa.Table.from_pandas(pdf, schema=schema, preserve_index=False)
+    )
+    df._driver_site = True
+    return df
+
+
+def driver_result(df: DataFrame) -> bool:
+    """True for a result :func:`local_result` built (already scored)."""
+    return vars(df).get("_driver_site", False)
+
+
+def empty_topk(spark) -> DataFrame:
+    """The no-match (doc_id, score) result, with no Spark job."""
+    return local_result(spark, _empty_frame("doc_id long, score double"),
+                        _TOP_ARROW)
+
+
+def empty_batch(spark) -> DataFrame:
+    """The no-match (query_id, doc_id, score) batch result, no Spark job."""
+    return local_result(spark, _empty_frame(_BATCH_SCHEMA), _BATCH_ARROW)
+
+
+def _driver_rank(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Rows in (score desc, doc_id asc) order — the engine-wide tie
+    contract."""
+    return pdf.iloc[np.lexsort((pdf["doc_id"].to_numpy(),
+                                -pdf["score"].to_numpy()))]
+
+
+def _driver_top(pdf: pd.DataFrame, k: int) -> list[tuple[int, float]]:
+    top = _driver_rank(pdf[pdf["doc_id"] >= 0]).iloc[:k]
+    return [(int(d), float(s)) for d, s in zip(top["doc_id"], top["score"])]
+
+
+def _sentinel_sum(pdf: pd.DataFrame, doc_id: int) -> int:
+    """Σ score over the kernel sentinel rows ``doc_id`` (−1 count, −2/−3
+    blocks decoded/total)."""
+    return int(pdf.loc[pdf["doc_id"] == doc_id, "score"].sum())
+
+
+def topk_rows(per_seg: DataFrame | pd.DataFrame, k: int, spark) -> DataFrame:
+    """The global top-k (doc_id, score) of :func:`per_segment`'s rows,
+    ordered (score desc, doc_id asc): Catalyst's TakeOrderedAndProject on
+    the Spark site, a driver-side sort into a local relation on the
+    driver site."""
+    if isinstance(per_seg, pd.DataFrame):
+        top = _driver_rank(per_seg).iloc[:k]
+        return local_result(spark, top[["doc_id", "score"]], _TOP_ARROW)
+    return (
+        per_seg
+        .select("doc_id", "score")
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(k)
     )
 
 
@@ -1602,22 +1846,38 @@ def batch_segment_topk(
 
 
 def batch_topk(
-    seg_filtered: DataFrame,
+    segments: DataFrame,
     norms: DataFrame,
     specs: list[tuple[str, dict]],
+    scans: list[list[str]],
+    need_positions: bool,
     kernel: Callable[..., pd.DataFrame],
     k: int,
+    driver: DriverScan | None = None,
 ) -> DataFrame:
-    """The plan behind both handles' ``search_batch``: the pruned scan
-    cogrouped with the norms, :func:`batch_segment_topk` per segment,
-    then the per-query cut.  The ≤ segments × queries × k candidate rows
-    (never posting data) move to ONE partition, where row_number ≤ k
-    keeps each query's top-k and rows leave sorted (query_id, score
-    desc, doc_id asc) — no range-sampling job of a global orderBy."""
+    """The result behind both handles' ``search_batch``:
+    :func:`batch_segment_topk` per segment through :func:`per_segment`
+    (``scans`` holds each spec's scan terms, so the estimate counts
+    every query), then the per-query cut — rows (query_id, doc_id,
+    score) sorted (query_id, score desc, doc_id asc), each query's
+    top-k.  On the Spark site the ≤ segments × queries × k candidate
+    rows (never posting data) move to ONE partition, where row_number ≤
+    k keeps each query's top-k — no range-sampling job of a global
+    orderBy; on the driver site the same cut runs in pandas into a local
+    relation."""
     per_seg = per_segment(
-        seg_filtered, norms,
+        segments, norms, scans, need_positions,
         lambda view: batch_segment_topk(view, specs, kernel), _BATCH_SCHEMA,
+        driver,
     )
+    if isinstance(per_seg, pd.DataFrame):
+        qcode = pd.factorize(per_seg["query_id"], sort=True)[0]
+        order = np.lexsort((
+            per_seg["doc_id"].to_numpy(), -per_seg["score"].to_numpy(), qcode,
+        ))
+        rank = pd.Series(qcode[order]).groupby(qcode[order]).cumcount()
+        cut = per_seg.iloc[order[rank.to_numpy() < k]]
+        return local_result(segments.sparkSession, cut, _BATCH_ARROW)
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc("doc_id")
     )
@@ -1640,6 +1900,7 @@ def wand_topk_count(
     k: int = 10,
     mode: str = "must",
     analyzer: str = "ascii",
+    driver: DriverScan | None = None,
 ) -> tuple[list[tuple[int, float]], int]:
     """Top-k AND the exact total match count in ONE pass (the reference's
     count-alongside-top-k collector): each segment kernel appends a
@@ -1651,15 +1912,14 @@ def wand_topk_count(
     spec = _query_spec(pq, mode, num_docs, avgdl, term_df, k)
     if spec is None:
         return [], 0
-    seg_filtered = seg_scan(
-        segments,
-        pq.all_match_terms + spec["neg_terms"] + spec["filter_terms"]
-        + [DELETES_TERM],
+    per_seg = per_segment(
+        segments, norms,
+        [pq.all_match_terms + spec["neg_terms"] + spec["filter_terms"]
+         + [DELETES_TERM]],
         bool(pq.phrases),
+        lambda view: _segment_topk_kernel(view, **spec, with_count=True),
+        driver=driver,
     )
-    per_seg = per_segment(seg_filtered, norms, lambda view: _segment_topk_kernel(
-        view, **spec, with_count=True,
-    ))
     return fold_count_topk(per_seg, k)
 
 
@@ -1684,7 +1944,9 @@ def _topk_structs(k: int):
     ).alias("_top")
 
 
-def fold_count_topk(per_seg: DataFrame, k: int) -> tuple[list[tuple[int, float]], int]:
+def fold_count_topk(
+    per_seg: DataFrame | pd.DataFrame, k: int
+) -> tuple[list[tuple[int, float]], int]:
     """Fold per-segment (top-k rows + count sentinels) into the global
     (top-k, total) SPARK-SIDE: one JVM aggregate sums the doc_id −1
     sentinels and sort-slices the candidate structs, so the driver
@@ -1695,7 +1957,10 @@ def fold_count_topk(per_seg: DataFrame, k: int) -> tuple[list[tuple[int, float]]
     Sort key: struct(−score, doc_id) ascending == (score desc, doc_id
     asc), the engine-wide tie contract.  collect_list is bounded at
     segments×k structs of 16 bytes — the same data volume the driver
-    previously received, now folded on an executor."""
+    previously received, now folded on an executor.  A driver-site
+    frame folds the same way in pandas."""
+    if isinstance(per_seg, pd.DataFrame):
+        return _driver_top(per_seg, k), _sentinel_sum(per_seg, -1)
     row = count_topk_agg(per_seg, k).collect()[0]
     total = int(row["_total"] or 0)
     top = [(int(x["d"]), -float(x["ns"])) for x in row["_top"]]
@@ -1703,12 +1968,17 @@ def fold_count_topk(per_seg: DataFrame, k: int) -> tuple[list[tuple[int, float]]
 
 
 def fold_metrics_topk(
-    per_seg: DataFrame, k: int
+    per_seg: DataFrame | pd.DataFrame, k: int
 ) -> tuple[list[tuple[int, float]], dict]:
     """Fold per-segment (top-k rows + pruning sentinels −2/−3) into the
     global (top-k list, metrics) in ONE JVM aggregate — the metrics twin
     of :func:`fold_count_topk`: the driver receives a single row
-    regardless of segment count."""
+    regardless of segment count.  A driver-site frame folds in pandas."""
+    if isinstance(per_seg, pd.DataFrame):
+        return _driver_top(per_seg, k), {
+            "blocks_decoded": _sentinel_sum(per_seg, -2),
+            "blocks_total": _sentinel_sum(per_seg, -3),
+        }
     row = per_seg.agg(
         F.sum(
             F.when(F.col("doc_id") == -2, F.col("score"))
@@ -1798,8 +2068,11 @@ def wand_facet_counts(
             "aggregate its collected page instead"
         )
     if not pq.all_match_terms:
-        return segments.sparkSession.createDataFrame(
-            [], "facet_value string, match_count long"
+        return local_result(
+            segments.sparkSession,
+            _empty_frame("facet_value string, match_count long"),
+            pa.schema([("facet_value", pa.string()),
+                       ("match_count", pa.int64())]),
         )
     prefix = ATTR_PREFIX + facet_field + ":"
     filter_terms = sorted(
@@ -1837,7 +2110,7 @@ def wand_facet_counts(
     match_terms = list(pq.uniq_terms)
     drop_terms = list(dict.fromkeys(neg + [DELETES_TERM]))
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         by_term = {t: g for t, g in pdf.groupby("term")}
 
         def raw_ids(t: str) -> np.ndarray:

@@ -43,7 +43,14 @@ from pyspark.sql import functions as F
 
 from ..functions.tokenizer import analyzer_fingerprint
 from ..operators.postings import assign_doc_ids, build_postings, doc_stats
-from ..operators.segments import build_norms, build_segments, with_segment_id
+from ..operators.segments import (
+    UNIFIED_NORMS,
+    NormsSplit,
+    build_norms,
+    build_segments,
+    with_segment_id,
+)
+from ..operators.wand import DriverScan, local_paths, pin_driver_scan
 
 STAGES = ("postings", "doc_stats", "segments", "norms", "term_stats", "stats")
 
@@ -618,15 +625,20 @@ class IndexHandle:
       the stats ledger names it, ``streaming.ingest.registered_paths``);
     * the lazy ``term_stats`` and ``docmap`` tables;
     * :meth:`cache` — segments + norms co-partitioned and co-sorted;
+    * ``driver`` — the table's files pinned at open when all are local,
+      so small requests score on the driver
+      (:func:`~stractt_spark.operators.wand.per_segment`);
     * :meth:`term_df` and the plan memo;
     * the option guards, the orig-id mapping and the collector helpers
       (:meth:`search_list`, :meth:`search_diverse`,
       :meth:`search_corrected`).
 
-    A subclass supplies how the table splits into ``segments`` /
-    ``norms`` (:meth:`_open_tables`), how a query lowers to its
-    per-segment kernel (``search``), and its spell dictionary
-    (``spell_checker``)."""
+    A subclass supplies how the unified table splits into ``segments`` /
+    ``norms`` (``NORMS_SPLIT``, or an :meth:`_open_tables` override), how
+    a query lowers to its per-segment kernel (``search``), and its spell
+    dictionary (``spell_checker``)."""
+
+    NORMS_SPLIT: NormsSplit
 
     def __init__(self, spark: SparkSession, root: str) -> None:
         self.spark = spark
@@ -641,11 +653,21 @@ class IndexHandle:
         self._docmap_df: DataFrame | None = None
         self._tdf_memo: dict[str, int] = {}
         self._plan_memo: dict[tuple, DataFrame] = {}
+        self.driver: DriverScan | None = None
         self.segments, self.norms = self._open_tables()
 
     def _open_tables(self) -> tuple[DataFrame, DataFrame]:
-        """→ (segments, norms) views over the persisted index."""
-        raise NotImplementedError
+        """→ (segments, norms) views over the unified table, split by
+        ``NORMS_SPLIT``.  Pins the files Spark listed for the table as
+        ``driver`` when every one is local: the driver site then reads
+        the same snapshot (deletes and streamed batches become visible
+        on reopen, as for the Spark views)."""
+        unified = self._read_unified()
+        split = self.NORMS_SPLIT
+        files = local_paths(unified.inputFiles())
+        if files:
+            self.driver = pin_driver_scan(files, split, self.term_df)
+        return unified.filter(~split.rows()), split.select(unified)
 
     def _read_unified(self) -> DataFrame:
         from ..streaming.ingest import registered_paths
@@ -743,17 +765,30 @@ class IndexHandle:
                 self._tdf_memo[t] = int(found.get(t, 0))
         return {t: self._tdf_memo[t] for t in terms if self._tdf_memo[t]}
 
-    def _memoize(self, key: tuple, plan: DataFrame) -> DataFrame:
-        """Plan memo: the SAME logical query re-issued against this handle
-        returns the SAME DataFrame object.  Building a plan costs ~190
-        py4j round trips (~120 ms driver-side) plus JVM re-analysis on
-        first execution; a repeated query (interactive refresh, the
-        bench's best-of-N) pays only execution.  This caches the PLAN,
-        never results: every collect() re-executes against the index."""
+    def _memoize(
+        self, key: tuple | None, top: DataFrame, orig_ids: bool = False
+    ) -> DataFrame:
+        """Map ``top`` to original ids when asked, then the plan memo: the
+        SAME logical query re-issued against this handle returns the SAME
+        DataFrame object.  Building a plan costs ~190 py4j round trips
+        (~120 ms driver-side) plus JVM re-analysis on first execution; a
+        repeated query (interactive refresh, the bench's best-of-N) pays
+        only execution.  This caches Spark-site PLANS only, never
+        results: every collect() re-executes against the index.  A
+        driver-site result (``wand.driver_result``) is already scored, so
+        it is returned unmemoized and every call scores again; so is any
+        result with ``key`` None."""
+        from ..operators.wand import driver_result
+
+        on_driver = driver_result(top)
+        if orig_ids:
+            top = self._to_orig_ids(top)
+        if key is None or on_driver:
+            return top
         if len(self._plan_memo) >= 256:
             self._plan_memo.clear()
-        self._plan_memo[key] = plan
-        return plan
+        self._plan_memo[key] = top
+        return top
 
     # ------------------------------------------------------------ guards
 
@@ -915,11 +950,12 @@ class SegmentIndex(IndexHandle):
     """Query handle over a persisted single-field index directory (staged
     or fused)."""
 
+    NORMS_SPLIT = UNIFIED_NORMS
+
     def _open_tables(self) -> tuple[DataFrame, DataFrame]:
         if self.stats.get("layout") == "fused":
-            from ..operators.segments import split_unified
-
-            return split_unified(self._read_unified())
+            return super()._open_tables()
+        # staged layout: separate segments / norms tables, Spark site only
         return (
             self.spark.read.parquet(self.paths.segments),
             self.spark.read.parquet(self.paths.norms),
@@ -973,11 +1009,9 @@ class SegmentIndex(IndexHandle):
             self.stats["num_docs"], self.stats["avgdl"], tdf,
             k=k + offset, mode=mode, analyzer=self.analyzer,
             max_docs_per_segment=max_docs_per_segment,
-            add_pre=with_pre_score,
+            add_pre=with_pre_score, driver=self.driver,
         )
-        if orig_ids:
-            top = self._to_orig_ids(top)
-        return self._memoize(memo_key, top)
+        return self._memoize(memo_key, top, orig_ids)
 
     def search_batch(
         self,
@@ -991,8 +1025,10 @@ class SegmentIndex(IndexHandle):
         throughput shape for offline query workloads (relevance
         harvesting, eval sets, training-data mining).  Per segment,
         grouping the blocks by term costs O(union terms) once, then each
-        query pays only its own scoring; the per-query top-k cut runs
-        in a single partition (see ``operators.wand.wand_topk_batch``)."""
+        query pays only its own scoring, then the per-query top-k cut
+        (see ``operators.wand.wand_topk_batch``).  A batch whose summed
+        scan estimate is small scores on the driver and returns a local
+        relation; results are never memoized."""
         from ..functions.query_parse import parse_query
         from ..operators.wand import wand_topk_batch
 
@@ -1008,7 +1044,7 @@ class SegmentIndex(IndexHandle):
             self.segments, self.norms,
             [(qid, pq, mode) for qid, pq, mode in parsed],
             self.stats["num_docs"], self.stats["avgdl"], tdf,
-            k=k, analyzer=self.analyzer,
+            k=k, analyzer=self.analyzer, driver=self.driver,
         )
 
     def search_with_metrics(
@@ -1040,7 +1076,7 @@ class SegmentIndex(IndexHandle):
             self.stats["num_docs"], self.stats["avgdl"], tdf,
             k=k, mode=mode, analyzer=self.analyzer,
             max_docs_per_segment=max_docs_per_segment,
-            add_pre=with_pre_score, with_metrics=True,
+            add_pre=with_pre_score, with_metrics=True, driver=self.driver,
         )
 
     def search_goggle(
@@ -1076,7 +1112,7 @@ class SegmentIndex(IndexHandle):
             self.stats["num_docs"], self.stats["avgdl"], tdf,
             k=k, mode=mode, analyzer=self.analyzer,
             const_clauses=clauses, has_empty_discard=has_empty_discard,
-            score_coeff=coeff, extra_neg_terms=neg_site,
+            score_coeff=coeff, extra_neg_terms=neg_site, driver=self.driver,
         )
 
     def search_with_count(
@@ -1092,6 +1128,7 @@ class SegmentIndex(IndexHandle):
         return wand_topk_count(
             self.segments, self.norms, pq, self.stats["num_docs"],
             self.stats["avgdl"], tdf, k=k, mode=mode, analyzer=self.analyzer,
+            driver=self.driver,
         )
 
     def facet_counts(
@@ -1127,6 +1164,7 @@ class SegmentIndex(IndexHandle):
             self.segments, self.norms, pq, self.stats["num_docs"],
             self.stats["avgdl"], tdf, k=k, mode=mode,
             analyzer=self.analyzer, ladder=PROXIMITY_LADDER,
+            driver=self.driver,
         ).collect()
         return [(r["doc_id"], r["score"]) for r in rows]
 

@@ -15,3 +15,13 @@ def spark():
     s = get_spark(app_name="stractt-tests", cpus=4, shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def spark_site(monkeypatch):
+    """Pin every search to the Spark site (the cogroup job) for tests
+    that assert its plan: no estimate is below a driver-site constant of
+    0."""
+    from stractt_spark.operators import wand
+
+    monkeypatch.setattr(wand, "DRIVER_SITE_POSTINGS", 0)

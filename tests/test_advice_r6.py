@@ -40,6 +40,7 @@ def roots(spark):
     return {"sf": f"{BASE}/sf", "mf": f"{BASE}/mf"}
 
 
+@pytest.mark.usefixtures("spark_site")
 @pytest.mark.parametrize("kind", ["sf", "mf"])
 def test_cache_drops_plans_memoized_before_it(spark, roots, kind):
     cls = SegmentIndex if kind == "sf" else MultiFieldSegmentIndex

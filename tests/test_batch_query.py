@@ -67,6 +67,7 @@ def test_batch_respects_k(built):
     assert counts["q_or"] == 3
 
 
+@pytest.mark.usefixtures("spark_site")
 def test_batch_single_scan_plan(built, spark):
     """The batch plan reads the index parquet exactly twice — one
     segments side + one norms side of the single cogroup — however many

@@ -92,6 +92,7 @@ def test_trailing_anchor_semantics(spark, lowered):
     assert 1 in by_id and 1 not in boosted  # contains "join" mid-doc only
 
 
+@pytest.mark.usefixtures("spark_site")
 def test_lowered_plan_never_scans_documents(spark, lowered):
     """The whole point: the goggle query reads ONLY the index — no
     documents-table scan per instruction (round-2's apply_goggle path

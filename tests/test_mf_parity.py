@@ -92,6 +92,7 @@ def test_mf_batch_matches_single(spark, mf):
         _close(by_qid.get(f"q{i}", []), want)
 
 
+@pytest.mark.usefixtures("spark_site")
 def test_mf_batch_plan_has_two_scans(spark, mf):
     """The whole point of batching: N queries, ONE pruned index scan (+
     the norms-side scan) — not N."""
@@ -251,6 +252,7 @@ def test_mf_goggle_field_selector(spark, mf):
     _close(got, want)
 
 
+@pytest.mark.usefixtures("spark_site")
 def test_mf_goggle_plan_never_scans_documents(spark, mf):
     idx, _, _ = mf
     df = idx.search_goggle(

@@ -129,6 +129,7 @@ def test_persisted_multifield_stats(mf_persisted, mf):
         assert math.isclose(idx.avgdl[f_], stats["avgdl"][f_], rel_tol=1e-12)
 
 
+@pytest.mark.usefixtures("spark_site")
 def test_persisted_multifield_term_scan_pruned(spark, mf):
     """The physical-term filter reaches the parquet scan (PushedFilters) —
     per-field postings ride the ordinary segment machinery.  Dedicated

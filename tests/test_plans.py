@@ -35,6 +35,7 @@ def idx(spark):
     return SegmentIndex(spark, path)
 
 
+@pytest.mark.usefixtures("spark_site")
 def test_term_filter_pushed_to_scan(idx):
     plan = _formatted_plan(idx.search("merge sort", k=10))
     assert "PushedFilters" in plan
@@ -44,6 +45,7 @@ def test_term_filter_pushed_to_scan(idx):
     assert "In(term, [" in plan.replace("  ", " ")
 
 
+@pytest.mark.usefixtures("spark_site")
 def test_nonphrase_query_prunes_position_column(idx):
     plan = _formatted_plan(idx.search("merge sort", k=10))
     # segments scan ReadSchema must NOT include pos_bytes for term queries
@@ -57,11 +59,13 @@ def test_nonphrase_query_prunes_position_column(idx):
     assert "pos_bytes" in plan_ph
 
 
+@pytest.mark.usefixtures("spark_site")
 def test_final_topk_is_take_ordered(idx):
     plan = _formatted_plan(idx.search("the", k=10, mode="should"))
     assert "TakeOrderedAndProject" in plan
 
 
+@pytest.mark.usefixtures("spark_site")
 def test_norms_scan_prunes_columns(idx):
     plan = _formatted_plan(idx.search("buffer", k=10))
     # the norms side must not read tf_bytes/max_tf etc.
@@ -117,6 +121,7 @@ def test_ann_probe_predicate_pushed_to_signature_scan(spark, tmp_path):
     assert "ReadSchema" in plan
 
 
+@pytest.mark.usefixtures("spark_site")
 def test_count_fold_is_one_aggregate_row(spark, idx):
     """VERDICT r3 #9: the count-alongside-top-k fold happens SPARK-SIDE —
     the driver receives exactly ONE row (k structs + 1 scalar) from a

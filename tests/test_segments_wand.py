@@ -57,6 +57,16 @@ def test_wand_rank_identity(built, query, mode):
         assert math.isclose(s1, s2, rel_tol=1e-9, abs_tol=1e-12), (query, d1)
 
 
+def test_staged_layout_takes_spark_site(built):
+    """A staged-layout index (separate segments / norms tables) pins no
+    files for the driver site: every search is a Spark plan."""
+    from stractt_spark.operators.wand import driver_result
+
+    index, _, _, _ = built
+    assert index.driver is None
+    assert not driver_result(index.search("merge sort", k=10))
+
+
 def test_block_roundtrip_through_spark(built, spark):
     index, _, _, _ = built
     segs = index.segments.toPandas()
