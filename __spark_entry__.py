@@ -219,17 +219,17 @@ _WAND_INDEX_CACHE: dict[str, object] = {}
 def _wand_index(spark: SparkSession, sf_dir: str):
     """Persisted segments index over sf_dir's documents, built once per
     process (stable cache key: hash() is PYTHONHASHSEED-randomized, which
-    would defeat build_index's resume cache across runs)."""
+    would defeat build_index_fused's resume cache across runs)."""
     import hashlib
 
-    from stractt_spark.plans.build import SegmentIndex, build_index
+    from stractt_spark.plans.build import SegmentIndex, build_index_fused
 
     key = sf_dir
     if key not in _WAND_INDEX_CACHE:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         out = "/tmp/stractt_entry_idx_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-        build_index(spark, docs, out, text_col="text", id_col="doc_id",
-                    analyzer="ascii", docs_per_segment=256)
+        build_index_fused(spark, docs, out, text_col="text", id_col="doc_id",
+                          analyzer="ascii", docs_per_segment=256)
         _WAND_INDEX_CACHE[key] = SegmentIndex(spark, out)
     return _WAND_INDEX_CACHE[key]
 

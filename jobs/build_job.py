@@ -29,8 +29,6 @@ def main() -> None:
     ap.add_argument("--dps", type=int, default=4096)
     ap.add_argument("--assign-id", action="store_true",
                     help="assign dense doc_id = rank over (repo,path,commit)")
-    ap.add_argument("--staged", action="store_true",
-                    help="staged build (persists a postings table) instead of fused")
     ap.add_argument("--aligned", action="store_true",
                     help="input is range-partitioned by id with segment-"
                          "aligned boundaries → ZERO-shuffle build "
@@ -42,7 +40,7 @@ def main() -> None:
     # master/conf come from spark-submit
     spark = SparkSession.builder.appName("stractt-build").getOrCreate()
     from stractt_spark.operators.postings import assign_doc_ids
-    from stractt_spark.plans.build import build_index, build_index_fused
+    from stractt_spark.plans.build import build_index_fused
 
     docs = spark.read.parquet(args.input)
     cores = spark.sparkContext.defaultParallelism
@@ -61,13 +59,12 @@ def main() -> None:
         lambda it: it, "id long"
     ).count()
 
-    build = build_index if args.staged else build_index_fused
-    extra = {"aligned_input": True} if (args.aligned and not args.staged) else {}
     t0 = time.time()
-    build(
+    build_index_fused(
         spark, docs, args.out,
         text_col=args.text_col, id_col=args.id_col,
-        analyzer=args.analyzer, docs_per_segment=args.dps, **extra,
+        analyzer=args.analyzer, docs_per_segment=args.dps,
+        aligned_input=args.aligned,
     )
     dt = time.time() - t0
     n = docs.count()

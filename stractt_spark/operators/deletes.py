@@ -60,12 +60,7 @@ def delete_docs(
     from pyspark.sql import functions as F
 
     paths = IndexPaths(index_dir)
-    with open(paths.stats) as f:
-        stats = json.load(f)
-    if stats.get("layout") != "fused":
-        raise ValueError(
-            "delete_docs needs the fused unified layout (build_index_fused)"
-        )
+    stats = paths.read_stats()
     ids = sorted({int(i) for i in doc_ids})
     if not ids:
         return 0
@@ -73,15 +68,9 @@ def delete_docs(
 
     if stats.get("presorted"):
         # caller speaks ORIGINAL ids; tombstones store INTERNAL ids
-        from ..streaming.ingest import batch_docmap_dir
+        from ..streaming.ingest import registered_docmaps
 
-        dm_dirs = [paths.docmap] + [
-            batch_docmap_dir(index_dir, b)
-            for b in stats.get("stream_batches", [])
-        ]
-        dm = spark.read.parquet(
-            *[d for d in dm_dirs if os.path.isdir(d)]
-        )
+        dm = spark.read.parquet(*registered_docmaps(index_dir, stats))
         req = spark.createDataFrame(
             [(i,) for i in ids], "orig_id long"
         )
@@ -173,17 +162,13 @@ def read_tombstones(spark: SparkSession, index_dir: str) -> np.ndarray:
     driver-side array for compaction-time bookkeeping and tests; query
     kernels never call this (they read the per-segment rows off the
     scan)."""
-    import json
-
     from ..plans.build import IndexPaths
     from ..streaming.ingest import registered_paths
     from .segments import DELETES_TERM
 
     from pyspark.sql import functions as F
 
-    paths = IndexPaths(index_dir)
-    with open(paths.stats) as f:
-        stats = json.load(f)
+    stats = IndexPaths(index_dir).read_stats()
     rows = (
         spark.read.parquet(*registered_paths(index_dir, stats))
         .filter(F.col("term") == DELETES_TERM)

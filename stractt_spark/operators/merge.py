@@ -13,9 +13,11 @@ Reference semantics re-expressed for Spark:
   — :func:`lpt_buckets` reproduces that assignment; the merged index is
   then re-segmented to contiguous doc ranges, which is what makes the
   packed-norms addressing and block-max skipping work post-merge.
-* the heavy lifting is ONE sort-merge shuffle keyed (segment_id, term)
-  inside ``build_segments`` — the Spark-native replacement for the
-  reference's pairwise index fold (SURVEY.md §4 partitioning row).
+* the heavy lifting is ONE cogroup keyed on the new segment id inside
+  :func:`reencode_fused` — the Spark-native replacement for the
+  reference's pairwise index fold (SURVEY.md §4 partitioning row).  Like
+  the reference's merged segments, the output has the same format as a
+  freshly built index: every merge writes the fused unified table.
 
 Posting decode for the merge is a cogrouped Arrow pass (segments ⋈ norms
 per source segment) — no join shuffle, both tables are already keyed by
@@ -64,18 +66,16 @@ def lpt_buckets(sizes: list[int], n_buckets: int) -> list[int]:
 def decode_postings(
     segments: DataFrame,
     norms: DataFrame,
-    doc_offset: int = 0,
     include_positions: bool = False,
 ) -> DataFrame:
     """segments + packed norms → postings rows
-    ``(doc_id [+offset], term, tf, dl, norm_id [, positions])`` — the exact
+    ``(doc_id, term, tf, dl, norm_id [, positions])`` — the exact
     inverse of the segment encode, so build/merge roundtrips are testable
     and merged indexes keep phrase capability.
 
-    ``dl`` is the *quantized* decode of norm_id (the exact dl is not stored
-    in the index; it is only used for avgdl, which merge takes from the
-    source stats sums — matching the reference, where merged avgdl is
-    likewise the sum of per-segment totals)."""
+    ``dl`` is the *quantized* decode of norm_id; the exact per-doc token
+    counts live in the sentinel rows (:func:`decode_exact_dls`), which is
+    where merges take their norms and stats from."""
     from ..functions.fieldnorm import FIELD_NORMS_TABLE
     from .postings import POSTINGS_POS_SCHEMA, POSTINGS_SCHEMA
     from .segments import decode_subset_positions
@@ -129,7 +129,7 @@ def decode_postings(
                     continue
             nid = narr[ids - base].astype(np.int32)
             out = {
-                "doc_id": pd.Series(ids + doc_offset, dtype="int64"),
+                "doc_id": pd.Series(ids, dtype="int64"),
                 "term": pd.Series([term] * len(ids), dtype="object"),
                 "tf": pd.Series(tfs.astype(np.int32), dtype="int32"),
                 "dl": pd.Series(
@@ -186,27 +186,20 @@ def merge_indexes(
     out_dir: str,
     docs_per_segment: int | None = None,
 ) -> "IndexPaths":
-    """Merge N independently-built indexes into one re-segmented index.
+    """Merge N independently-built indexes into one re-segmented fused
+    index — the same table a one-shot build over the union writes.
 
-    Sources are taken in the given order; doc ids are remapped by prefix-sum
-    offsets over each source's id span max(next_doc_id, num_docs), which
-    covers streaming appends past num_docs.  Global stats and term dfs are
-    sums over sources (disjoint doc spaces).
+    Sources are taken in the given order.  Doc-id sources keep their ids
+    shifted by prefix-sum offsets over each source's id span
+    max(next_doc_id, num_docs), which covers streaming appends past
+    num_docs; presorted sources are re-ranked globally; multi-field
+    sources merge per field.  Global stats and term dfs are sums over
+    sources (disjoint doc spaces), minus the tombstoned docs the merge
+    drops.
     """
-    import json
-    import os
-
     from ..plans.build import IndexPaths
-    from .segments import build_norms, build_segments
 
-    from pyspark.sql import functions as F
-
-    srcs = [IndexPaths(d) for d in source_dirs]
-    stats = []
-    for s in srcs:
-        with open(s.stats) as f:
-            stats.append(json.load(f))
-    dps = docs_per_segment or stats[0]["docs_per_segment"]
+    stats = [IndexPaths(d).read_stats() for d in source_dirs]
     analyzer = stats[0]["analyzer"]
     if any(st["analyzer"] != analyzer for st in stats):
         raise ValueError("cannot merge indexes built with different analyzers")
@@ -233,112 +226,15 @@ def merge_indexes(
             "sources: their term namespaces are disjoint by construction"
         )
     n_pre = sum(bool(st.get("presorted")) for st in stats)
-    if n_pre == len(stats) and stats:
-        return _merge_presorted(
-            spark, source_dirs, stats, out_dir, docs_per_segment
-        )
-    if n_pre:
+    if n_pre not in (0, len(stats)):
         raise ValueError(
             "merge_indexes cannot mix PRESORTED and doc-id-ordered "
             "sources: the merged order would be neither (docs without "
             "pre-scores cannot be globally re-ranked)"
         )
-    # merged index keeps positions iff EVERY source has them
-    positions = all(st.get("positions") for st in stats)
-
-    # Each source's id space is sized by max(next_doc_id, num_docs):
-    # streaming appends assign ids past num_docs (fresh segment boundary
-    # after the high-water mark, streaming/ingest.py), so sizing by
-    # num_docs alone would collide remapped ids across sources.  For a
-    # never-appended source this degenerates to the dense num_docs offset.
-    offsets = []
-    acc = 0
-    for st in stats:
-        offsets.append(acc)
-        acc += max(st.get("next_doc_id", 0), st["num_docs"])
-
-    parts = []
-    from ..streaming.ingest import registered_paths
-    from .segments import split_unified
-
-    for d, s, st, off in zip(source_dirs, srcs, stats, offsets):
-        if st.get("layout") == "fused":
-            # union the main table AND every ledgered streaming batch dir —
-            # reading paths.index alone silently drops streamed docs
-            seg, nrm = split_unified(
-                spark.read.parquet(*registered_paths(d, st))
-            )
-        else:
-            seg = spark.read.parquet(s.segments)
-            nrm = spark.read.parquet(s.norms)
-        parts.append(
-            decode_postings(seg, nrm, doc_offset=off, include_positions=positions)
-        )
-    postings = parts[0]
-    for p in parts[1:]:
-        postings = postings.unionByName(p)
-
-    os.makedirs(out_dir, exist_ok=True)
-    out = IndexPaths(out_dir)
-    postings.write.mode("overwrite").parquet(out.postings)
-    postings = spark.read.parquet(out.postings)
-
-    seg = build_segments(postings, dps)
-    (
-        seg.sortWithinPartitions("segment_id", "term", "block_id")
-        .write.mode("overwrite")
-        .parquet(out.segments)
+    return _merge_single_field(
+        spark, source_dirs, stats, out_dir, docs_per_segment, n_pre > 0
     )
-    from .postings import doc_stats
-
-    build_norms(doc_stats(postings), dps).write.mode("overwrite").parquet(out.norms)
-    postings.groupBy("term").agg(F.count("*").alias("df")).write.mode(
-        "overwrite"
-    ).parquet(out.term_stats)
-
-    # tombstoned docs were dropped during decode; their counts and exact
-    # token totals (fused sentinels store per-doc dls) leave the stats —
-    # post-merge scores equal a fresh build without the deleted docs
-    del_count, del_tokens = 0, 0
-    for d, s, st in zip(source_dirs, srcs, stats):
-        if not st.get("deleted_docs"):
-            continue
-        tombs = source_tombstones(spark, d, st)
-        _, nrm_t = split_unified(
-            spark.read.parquet(*registered_paths(d, st))
-        )
-        row = (
-            decode_exact_dls(nrm_t).join(tombs, "doc_id")
-            .agg(F.count("*").alias("n"), F.sum("dl").alias("t"))
-            .collect()[0]
-        )
-        del_count += int(row["n"])
-        del_tokens += int(row["t"] or 0)
-
-    merged = {
-        "num_docs": sum(st["num_docs"] for st in stats) - del_count,
-        "total_tokens": sum(st["total_tokens"] for st in stats) - del_tokens,
-        # high-water mark for future appends: the full remapped id span
-        "next_doc_id": acc,
-        "analyzer": analyzer,
-        "analyzer_fp": _source_fp(stats),
-        "docs_per_segment": dps,
-        "positions": positions,
-        "merged_from": [
-            {"dir": d, "offset": off, "num_docs": st["num_docs"]}
-            for d, off, st in zip(source_dirs, offsets, stats)
-        ],
-    }
-    merged["avgdl"] = (
-        merged["total_tokens"] / merged["num_docs"] if merged["num_docs"] else 0.0
-    )
-    with open(out.stats, "w") as f:
-        json.dump(merged, f, indent=2)
-    with open(out.manifest, "w") as f:
-        json.dump({"stages": {s: {"ok": True, "fingerprint": "merge"} for s in
-                              ("postings", "segments", "norms", "term_stats", "stats")}},
-                  f)
-    return out
 
 
 def decode_exact_dls(norms: DataFrame) -> DataFrame:
@@ -398,22 +294,22 @@ def decode_exact_dls(norms: DataFrame) -> DataFrame:
     ).mapInPandas(run, "doc_id long, dl long")
 
 
-def reencode_fused_presorted(
+def reencode_fused(
     postings: DataFrame,
     docside: DataFrame,
     docs_per_segment: int,
     include_positions: bool,
 ) -> DataFrame:
-    """(remapped postings, per-doc (doc_id, pre_score, dl)) → unified fused
-    rows BYTE-IDENTICAL to what ``build_index_fused(pre_scores=...)`` would
-    write for the same logical corpus: same block encode, same packed
-    norms (recomputed from the exact dls), same packed f32 pre-scores and
-    exact dl tail in the sentinel.  One cogroup on the new segment id —
-    postings arrive already remapped, so this is the merge's only wide
-    exchange over posting rows."""
-    from ..functions.codec import varint_encode
+    """(remapped postings, per-doc (doc_id, dl [, pre_score])) → unified
+    fused rows BYTE-IDENTICAL to what ``build_index_fused`` (with
+    ``pre_scores=...`` when the doc side carries ``pre_score``) writes for
+    the same logical corpus: same block encode, same packed norms
+    (recomputed from the exact dls), same sentinel through
+    :func:`~stractt_spark.operators.segments.segment_rows`.  One cogroup
+    on the new segment id — postings arrive already remapped, so this is
+    the merge's only wide exchange over posting rows."""
     from ..functions.fieldnorm import fieldnorm_to_id
-    from .segments import NORMS_SENTINEL, SEGMENTS_SCHEMA, encode_segment_arrays
+    from .segments import SEGMENTS_SCHEMA, segment_rows
 
     dps = docs_per_segment
 
@@ -425,64 +321,26 @@ def reencode_fused_presorted(
         dls = doc_pdf["dl"].to_numpy("int64")
         narr = np.zeros(span, dtype=np.uint8)
         narr[local_d] = fieldnorm_to_id(dls).astype(np.uint8)
-        parr = np.zeros(span, dtype=np.float32)
-        parr[local_d] = doc_pdf["pre_score"].to_numpy("float64").astype(
-            np.float32
-        )
         dl_span = np.zeros(span, dtype=np.uint64)
         dl_span[local_d] = dls.astype(np.uint64)
+        pre = None
+        if "pre_score" in doc_pdf.columns:
+            pre = np.zeros(span, dtype=np.float32)
+            pre[local_d] = doc_pdf["pre_score"].to_numpy(
+                "float64"
+            ).astype(np.float32)
 
-        def meta_row(n_postings: int, n_blocks: int, nbytes: int):
-            stats_vals = np.concatenate([
-                np.array(
-                    [int(dls.sum()), len(doc_pdf), n_postings, n_blocks,
-                     nbytes],
-                    dtype=np.uint64,
-                ),
-                dl_span,
-            ])
-            return pd.DataFrame({
-                "segment_id": pd.Series([seg], dtype="int32"),
-                "term": pd.Series([NORMS_SENTINEL], dtype="object"),
-                "block_id": pd.Series([-1], dtype="int32"),
-                "first_doc_id": pd.Series([base], dtype="int64"),
-                "last_doc_id": pd.Series([base + span - 1], dtype="int64"),
-                "num_docs": pd.Series([span], dtype="int32"),
-                "id_bytes": pd.Series([narr.tobytes()], dtype="object"),
-                "tf_bytes": pd.Series([varint_encode(stats_vals)],
-                                      dtype="object"),
-                "pos_bytes": pd.Series([parr.tobytes()], dtype="object"),
-                "max_tf": pd.Series([0], dtype="int32"),
-                "min_norm_id": pd.Series([0], dtype="int32"),
-            })
+        def col(name: str, dtype):
+            # a segment with no postings may arrive as a column-less frame
+            if not len(post_pdf):
+                return np.zeros(0, dtype=dtype)
+            return post_pdf[name].to_numpy(dtype=dtype)
 
-        if not len(post_pdf):
-            return meta_row(0, 0, 0)
-        codes, uniq = pd.factorize(post_pdf["term"], sort=True)
-        ids = post_pdf["doc_id"].to_numpy(dtype=np.int64)
-        order = np.lexsort((ids, codes))
-        tfs = post_pdf["tf"].to_numpy(dtype=np.int64)[order]
-        positions_flat = None
-        if include_positions:
-            pos_obj = post_pdf["positions"].to_numpy(dtype=object)[order]
-            positions_flat = np.fromiter(
-                (v for sub in pos_obj for v in sub),
-                dtype=np.int64, count=int(tfs.sum()),
-            )
-        ids_sorted = ids[order]
-        blocks = encode_segment_arrays(
-            seg, codes[order], np.asarray(uniq, dtype=object),
-            ids_sorted, tfs,
-            narr[ids_sorted - base].astype(np.int64),
-            positions_flat,
-        )
-        nbytes = int(
-            blocks["id_bytes"].str.len().sum()
-            + blocks["tf_bytes"].str.len().sum()
-        )
-        return pd.concat(
-            [meta_row(len(ids_sorted), len(blocks), nbytes), blocks],
-            ignore_index=True,
+        return segment_rows(
+            seg, base, col("term", object), col("doc_id", np.int64),
+            col("tf", np.int64),
+            col("positions", object) if include_positions else None,
+            narr, dl_span, len(doc_pdf), pre,
         )
 
     return (
@@ -717,7 +575,7 @@ def _merge_multifield(
     from pyspark.sql import functions as F
 
     from ..plans.build import IndexPaths
-    from ..streaming.ingest import batch_docmap_dir, registered_paths
+    from ..streaming.ingest import registered_docmaps, registered_paths
     from .multifield import MF_NORMS_PREFIX
     from .postings import assign_doc_ids
 
@@ -749,17 +607,10 @@ def _merge_multifield(
     out = IndexPaths(out_dir)
     os.makedirs(out_dir, exist_ok=True)
 
-    def read_src_dm(d: str, st: dict) -> DataFrame:
-        p = IndexPaths(d)
-        dirs = [p.docmap] + [
-            batch_docmap_dir(d, b) for b in st.get("stream_batches", [])
-        ]
-        return spark.read.parquet(*[x for x in dirs if os.path.isdir(x)])
-
     if presorted:
         all_dm = None
         for d, st in zip(source_dirs, stats):
-            x = read_src_dm(d, st)
+            x = spark.read.parquet(*registered_docmaps(d, st))
             if st.get("deleted_docs"):
                 x = x.join(source_tombstones(spark, d, st), "doc_id",
                            "left_anti")
@@ -793,7 +644,7 @@ def _merge_multifield(
             return df.withColumn("doc_id", F.col("doc_id") + F.lit(off))
         return (
             df.withColumnRenamed("doc_id", "_old")
-            .join(read_src_dm(d, st).select(
+            .join(spark.read.parquet(*registered_docmaps(d, st)).select(
                 F.col("doc_id").alias("_old"), "orig_id"), "_old")
             .drop("_old")
             .join(spark.read.parquet(out.docmap).select(
@@ -939,33 +790,39 @@ def _merge_multifield(
     return out
 
 
-def _merge_presorted(
+def _merge_single_field(
     spark: SparkSession,
     source_dirs: list[str],
     stats: list[dict],
     out_dir: str,
     docs_per_segment: int | None,
+    presorted: bool,
 ) -> "IndexPaths":
-    """Merge N PRESORTED indexes into one globally re-sorted presorted
-    index — the deferred re-sort that completes the streaming story:
-    streamed appends keep each new segment internally pre-ordered
-    (batch-local rank), and the merge restores the INDEX-WIDE pre-score
-    order the reference maintains (src/inverted_index.rs:100-106), so the
-    max-docs quota is sound again with the tightest possible cut.
+    """Merge N single-field indexes into one fused index whose unified
+    table is byte-identical to a one-shot ``build_index_fused`` over the
+    union (with ``pre_scores`` when ``presorted``).
 
-    Internal ids are reassigned by global (pre desc, orig id asc) rank
-    over the UNION of every source's docmap (build docmap + ledgered
-    batch docmaps); postings are decoded once per source, remapped
-    internal → orig → new id, and re-encoded into fused unified rows
-    byte-identical to a one-shot ``build_index_fused(pre_scores=...)``
-    over the union."""
+    * **doc-id** sources: a source's ids shift by its prefix-sum offset;
+      tombstoned ids leave the doc side and the postings and stay unused.
+    * **presorted** sources: the deferred re-sort that completes the
+      streaming story — streamed appends keep each new segment internally
+      pre-ordered (batch-local rank), and the merge restores the
+      INDEX-WIDE pre-score order the reference maintains
+      (src/inverted_index.rs:100-106), so the max-docs quota is sound
+      again with the tightest possible cut.  Internal ids are reassigned
+      by global (pre desc, orig id asc) rank over the UNION of every
+      source's docmap (build docmap + ledgered batch docmaps), minus
+      tombstoned docs; ids remap internal → orig → new.
+
+    Postings are decoded once per source and re-encoded by
+    :func:`reencode_fused` with the exact per-doc dls of the sentinels."""
     import json
     import os
 
     from pyspark.sql import functions as F
 
     from ..plans.build import IndexPaths
-    from ..streaming.ingest import batch_docmap_dir, registered_paths
+    from ..streaming.ingest import registered_docmaps, registered_paths
     from .postings import assign_doc_ids
     from .segments import split_unified
 
@@ -975,97 +832,107 @@ def _merge_presorted(
     out = IndexPaths(out_dir)
     os.makedirs(out_dir, exist_ok=True)
 
-    # 1. every source's visible docmap (build map ∪ ledgered batch maps);
-    # read FRESH per use — shared scans across the final cogroup's two
-    # sides trip the analyzer's ambiguous-self-join check
+    # every source's visible docmap, read FRESH per use — shared scans
+    # across the final cogroup's two sides trip the analyzer's
+    # ambiguous-self-join check
     def read_src_dm(d: str, st: dict) -> DataFrame:
-        p = IndexPaths(d)
-        dirs = [p.docmap] + [
-            batch_docmap_dir(d, b) for b in st.get("stream_batches", [])
-        ]
-        return spark.read.parquet(*[x for x in dirs if os.path.isdir(x)])
+        return spark.read.parquet(*registered_docmaps(d, st))
 
-    all_dm = None
-    for d, st in zip(source_dirs, stats):
-        x = read_src_dm(d, st)
-        if st.get("deleted_docs"):
-            # tombstoned docs leave the doc space entirely: not ranked,
-            # not counted, postings dropped in decode — the merge IS the
-            # compaction
-            x = x.join(source_tombstones(spark, d, st), "doc_id",
-                       "left_anti")
-        all_dm = x if all_dm is None else all_dm.unionByName(x)
-    counts = all_dm.agg(
-        F.count("*").alias("n"),
-        F.countDistinct("orig_id").alias("u"),
-    ).collect()[0]
-    if counts["n"] != counts["u"]:
-        raise ValueError(
-            f"presorted merge: original ids collide across sources "
-            f"({counts['n']} docmap rows, {counts['u']} distinct orig ids)"
+    def to_orig(df: DataFrame, d: str, st: dict) -> DataFrame:
+        return (
+            df.withColumnRenamed("doc_id", "_old")
+            .join(read_src_dm(d, st).select(
+                F.col("doc_id").alias("_old"), "orig_id"), "_old")
+            .drop("_old")
         )
-    num_docs = int(counts["n"])
 
-    # 2. global docmap: new internal ids by (pre desc, orig asc) — the
-    # identical ranking rule the presorted build uses
-    ranked = all_dm.select("orig_id", "pre_score").withColumn(
-        "_neg_pre", -F.col("pre_score")
-    )
-    assign_doc_ids(ranked, ["_neg_pre", "orig_id"]).select(
-        "doc_id", "orig_id", "pre_score"
-    ).write.mode("overwrite").parquet(out.docmap)
-    # two INDEPENDENT reads: the remapped postings and the doc side both
-    # descend from the docmap — sharing one scan makes the final cogroup
-    # an (ambiguous) self-join in the analyzer
-    dm_for_posts = spark.read.parquet(out.docmap)
-    dm_for_docside = spark.read.parquet(out.docmap)
+    offsets = [0] * len(stats)
+    if presorted:
+        all_dm = None
+        for d, st in zip(source_dirs, stats):
+            x = read_src_dm(d, st)
+            if st.get("deleted_docs"):
+                # tombstoned docs leave the doc space entirely: not
+                # ranked, not counted, postings dropped in decode — the
+                # merge IS the compaction
+                x = x.join(source_tombstones(spark, d, st), "doc_id",
+                           "left_anti")
+            all_dm = x if all_dm is None else all_dm.unionByName(x)
+        counts = all_dm.agg(
+            F.count("*").alias("n"),
+            F.countDistinct("orig_id").alias("u"),
+        ).collect()[0]
+        if counts["n"] != counts["u"]:
+            raise ValueError(
+                f"presorted merge: original ids collide across sources "
+                f"({counts['n']} docmap rows, {counts['u']} distinct orig ids)"
+            )
+        num_docs = next_doc_id = int(counts["n"])
+        # global docmap: new internal ids by (pre desc, orig asc) — the
+        # identical ranking rule the presorted build uses
+        ranked = all_dm.select("orig_id", "pre_score").withColumn(
+            "_neg_pre", -F.col("pre_score")
+        )
+        assign_doc_ids(ranked, ["_neg_pre", "orig_id"]).select(
+            "doc_id", "orig_id", "pre_score"
+        ).write.mode("overwrite").parquet(out.docmap)
+    else:
+        # a source's id span is max(next_doc_id, num_docs): streaming
+        # appends assign ids past num_docs (fresh segment boundary after
+        # the high-water mark), so sizing by num_docs alone would collide
+        # remapped ids across sources
+        next_doc_id = 0
+        for i, st in enumerate(stats):
+            offsets[i] = next_doc_id
+            next_doc_id += max(st.get("next_doc_id", 0), st["num_docs"])
+        # tombstones only ever name live docs (delete_docs' contract)
+        num_docs = sum(
+            st["num_docs"] - st.get("deleted_docs", 0) for st in stats
+        )
 
-    # 3. decode each source once; remap internal → orig → new id
+    # decode each source once; tombstoned docs' postings drop in the
+    # decode, their dl rows leave the doc side below
     post_parts, dl_parts = [], []
-    for d, st in zip(source_dirs, stats):
-        seg, nrm = split_unified(
-            spark.read.parquet(*registered_paths(d, st))
-        )
-        dec = (
-            decode_postings(seg, nrm, include_positions=positions)
-            .drop("dl", "norm_id")
-            .withColumnRenamed("doc_id", "_old")
-            .join(read_src_dm(d, st).select(
-                F.col("doc_id").alias("_old"), "orig_id"), "_old")
-            .drop("_old")
-        )
-        post_parts.append(dec)
-        seg2, nrm2 = split_unified(
-            spark.read.parquet(*registered_paths(d, st))
-        )
-        dls = (
-            decode_exact_dls(nrm2)
-            .withColumnRenamed("doc_id", "_old")
-            .join(read_src_dm(d, st).select(
-                F.col("doc_id").alias("_old"), "orig_id"), "_old")
-            .drop("_old")
-        )
+    for d, st, off in zip(source_dirs, stats, offsets):
+        seg, nrm = split_unified(spark.read.parquet(*registered_paths(d, st)))
+        posts = decode_postings(
+            seg, nrm, include_positions=positions
+        ).drop("dl", "norm_id")
+        _, nrm2 = split_unified(spark.read.parquet(*registered_paths(d, st)))
+        dls = decode_exact_dls(nrm2)
+        if presorted:
+            posts, dls = to_orig(posts, d, st), to_orig(dls, d, st)
+        else:
+            if st.get("deleted_docs"):
+                dls = dls.join(source_tombstones(spark, d, st), "doc_id",
+                               "left_anti")
+            shifted = F.col("doc_id") + F.lit(off)
+            posts = posts.withColumn("doc_id", shifted)
+            dls = dls.withColumn("doc_id", shifted)
+        post_parts.append(posts)
         dl_parts.append(dls)
     posts = post_parts[0]
     for p_ in post_parts[1:]:
         posts = posts.unionByName(p_)
-    posts = (
-        posts.join(dm_for_posts.select("orig_id", "doc_id"), "orig_id")
-        .drop("orig_id")
-    )
-    dl_all = dl_parts[0]
+    docside = dl_parts[0]
     for p_ in dl_parts[1:]:
-        dl_all = dl_all.unionByName(p_)
-    docside = dm_for_docside.join(dl_all, "orig_id").select(
-        "doc_id", "pre_score", "dl"
-    ).withColumn(
-        "segment_id", (F.col("doc_id") / F.lit(dps)).cast("int")
-    )
-    posts = posts.withColumn(
-        "segment_id", (F.col("doc_id") / F.lit(dps)).cast("int")
-    )
+        docside = docside.unionByName(p_)
+    if presorted:
+        # two INDEPENDENT docmap reads: the remapped postings and the doc
+        # side both descend from the docmap — sharing one scan makes the
+        # final cogroup an (ambiguous) self-join in the analyzer
+        posts = posts.join(
+            spark.read.parquet(out.docmap).select("orig_id", "doc_id"),
+            "orig_id",
+        ).drop("orig_id")
+        docside = spark.read.parquet(out.docmap).join(
+            docside, "orig_id"
+        ).select("doc_id", "pre_score", "dl")
+    seg_id = (F.col("doc_id") / F.lit(dps)).cast("int")
+    posts = posts.withColumn("segment_id", seg_id)
+    docside = docside.withColumn("segment_id", seg_id)
 
-    unified = reencode_fused_presorted(posts, docside, dps, positions)
+    unified = reencode_fused(posts, docside, dps, positions)
     (
         unified.sortWithinPartitions("segment_id", "term", "block_id")
         .write.mode("overwrite").parquet(out.index)
@@ -1079,38 +946,37 @@ def _merge_presorted(
     )
 
     if any(st.get("deleted_docs") for st in stats):
-        # exact: the dl side already excludes tombstoned docs (docside is
-        # the global docmap ⋈ exact dls, and the docmap dropped them)
-        total_tokens = int(
-            docside.agg(F.sum("dl")).collect()[0][0] or 0
-        )
+        # exact: the doc side already excludes tombstoned docs
+        total_tokens = int(docside.agg(F.sum("dl")).collect()[0][0] or 0)
     else:
         total_tokens = sum(int(st.get("total_tokens", 0)) for st in stats)
     merged = {
         "num_docs": num_docs,
         "total_tokens": total_tokens,
         "avgdl": total_tokens / num_docs if num_docs else 0.0,
-        "next_doc_id": num_docs,
+        "next_doc_id": next_doc_id,
         "analyzer": analyzer,
         "analyzer_fp": _source_fp(stats),
         "docs_per_segment": dps,
         "layout": "fused",
         "positions": positions,
-        "presorted": True,
+        "presorted": presorted,
         "text_col": stats[0].get("text_col", "content"),
         "id_col": stats[0].get("id_col", "doc_id"),
         "merged_from": [
             {"dir": d, "num_docs": st["num_docs"]}
-            for d, st in zip(source_dirs, stats)
+            | ({} if presorted else {"offset": off})
+            for d, st, off in zip(source_dirs, stats, offsets)
         ],
     }
     if any("attr_cols" in st for st in stats):
         merged["attr_cols"] = stats[0].get("attr_cols")
     with open(out.stats, "w") as f:
         json.dump(merged, f, indent=2)
+    fp = "merge_presorted" if presorted else "merge"
     with open(out.manifest, "w") as f:
         json.dump(
-            {"stages": {s: {"ok": True, "fingerprint": "merge_presorted"}
+            {"stages": {s: {"ok": True, "fingerprint": fp}
                         for s in ("index", "term_stats", "stats")}}, f,
         )
     return out

@@ -1,4 +1,5 @@
-"""Segment build: postings → compressed per-segment posting blocks.
+"""Segment build: docs → the unified index table of compressed
+per-segment posting blocks plus one sentinel row per segment.
 
 Spark-first re-expression of the reference's segment writer + posting
 format ([tantivy contract]; usage /root/reference/src/inverted_index.rs:
@@ -27,15 +28,15 @@ format ([tantivy contract]; usage /root/reference/src/inverted_index.rs:
   (``norm_bytes[local_id]``), mirroring the reference's fieldnorm cache
   (src/fastfield_cache.rs).
 
-Shuffle accounting: exactly ONE wide exchange — the groupBy
-(segment_id, term) that brings each posting list together (the reference's
-pairwise index-merge fold, replaced by a single sort-merge shuffle,
-SURVEY.md §4).  Encoding is a narrow Arrow pass over grouped rows.
+Shuffle accounting: exactly ONE wide exchange — the repartition on
+segment_id that brings each segment's docs together (the reference's
+pairwise index-merge fold, replaced by a single shuffle, SURVEY.md §4);
+none with ``aligned_input``.  Encoding is a narrow Arrow pass per
+segment, and merges re-encode through the same :func:`segment_rows`.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from typing import NamedTuple
 
 import numpy as np
@@ -72,22 +73,6 @@ SEGMENTS_SCHEMA = StructType(
         StructField("min_norm_id", IntegerType(), False),
     ]
 )
-
-NORMS_SCHEMA = StructType(
-    [
-        StructField("segment_id", IntegerType(), False),
-        StructField("base_doc_id", LongType(), False),
-        StructField("n_docs", IntegerType(), False),
-        StructField("norm_bytes", BinaryType(), False),
-    ]
-)
-
-
-def with_segment_id(postings: DataFrame, docs_per_segment: int) -> DataFrame:
-    return postings.withColumn(
-        "segment_id", (F.col("doc_id") / F.lit(docs_per_segment)).cast("int")
-    )
-
 
 def encode_segment_arrays(
     seg: int,
@@ -186,50 +171,6 @@ def encode_segment_arrays(
     )
 
 
-def build_segments(postings: DataFrame, docs_per_segment: int) -> DataFrame:
-    """postings (doc_id, term, tf, norm_id) → block rows (SEGMENTS_SCHEMA).
-
-    One shuffle (groupBy segment_id — flat Tungsten rows, NO collect_list:
-    JVM array-aggregation object churn measurably anti-scaled with cores),
-    then one vectorized Arrow encode per segment.  A segment's postings
-    must fit a worker's memory — that is the ``docs_per_segment`` knob,
-    mirroring the reference's 1 GB-per-segment writer budget
-    (/root/reference/src/inverted_index.rs:130)."""
-
-    def encode(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return pd.DataFrame()
-        # integer sort: factorize terms (sort=True → codes follow
-        # lexicographic term order), then ONE lexsort on (code, doc_id)
-        codes, uniq = pd.factorize(pdf["term"], sort=True)
-        ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-        order = np.lexsort((ids, codes))
-        tfs = pdf["tf"].to_numpy(dtype=np.int64)[order]
-        positions_flat = None
-        if "positions" in pdf.columns:
-            pos_obj = pdf["positions"].to_numpy(dtype=object)[order]
-            positions_flat = np.fromiter(
-                (v for sub in pos_obj for v in sub),
-                dtype=np.int64,
-                count=int(tfs.sum()),
-            )
-        return encode_segment_arrays(
-            int(key[0]),
-            codes[order],
-            np.asarray(uniq, dtype=object),
-            ids[order],
-            tfs,
-            pdf["norm_id"].to_numpy(dtype=np.int64)[order],
-            positions_flat,
-        )
-
-    return (
-        with_segment_id(postings, docs_per_segment)
-        .groupBy("segment_id")
-        .applyInPandas(encode, SEGMENTS_SCHEMA)
-    )
-
-
 # Sentinel "term" for per-segment metadata rows in the fused unified table:
 # sorts before every real token (no real token starts with \x00) and carries
 # the packed norm bytes + exact token totals of its segment.
@@ -250,6 +191,93 @@ ATTR_PREFIX = "\x01"
 
 def attr_term(fieldname: str, value: str) -> str:
     return f"{ATTR_PREFIX}{fieldname}:{value}"
+
+
+def segment_rows(
+    seg: int,
+    base: int,
+    terms: np.ndarray,
+    doc_ids: np.ndarray,
+    tfs: np.ndarray,
+    positions,
+    narr: np.ndarray,
+    dl_span: np.ndarray,
+    n_docs: int,
+    pre: np.ndarray | None,
+) -> pd.DataFrame:
+    """ONE segment's unified rows — its NORMS_SENTINEL row, then its
+    posting blocks — from its postings (``terms`` / ``doc_ids`` / ``tfs``
+    per posting, in any order; ``positions``: per-posting position lists
+    or None) and its span-aligned doc side: packed norm ids ``narr``,
+    exact token counts ``dl_span`` and, for presorted indexes, float32
+    pre-scores ``pre`` (``[local_id]``, 0 for absent docs).  The
+    single-field build, its streamed batches and every single-field merge
+    write through here, so a merged segment is the segment a one-shot
+    build over the same docs writes.
+
+    The sentinel row: ``id_bytes`` = ``narr``, ``pos_bytes`` = ``pre``
+    (None when not presorted), ``tf_bytes`` = varint [exact total tokens,
+    ``n_docs``, postings, blocks, compressed bytes, then ``dl_span``].
+    All per-segment build metrics ride there so the stats/lineage stage
+    reads ONLY pruned sentinel columns, never the block binaries; the dl
+    tail is the reference's num_tokens fast field
+    (src/ranking/goggles/pattern_query.rs:243,290 reads it for
+    trailing-anchor pattern matching) — quantized norms alone cannot
+    answer "is this the document's last token"."""
+    from ..functions.codec import varint_encode
+
+    span = len(narr)
+
+    def sentinel(n_postings: int, n_blocks: int, nbytes: int) -> pd.DataFrame:
+        stats_vals = np.concatenate([
+            np.array(
+                [int(dl_span.sum()), n_docs, n_postings, n_blocks, nbytes],
+                dtype=np.uint64,
+            ),
+            dl_span.astype(np.uint64),
+        ])
+        return pd.DataFrame({
+            "segment_id": pd.Series([seg], dtype="int32"),
+            "term": pd.Series([NORMS_SENTINEL], dtype="object"),
+            "block_id": pd.Series([-1], dtype="int32"),
+            "first_doc_id": pd.Series([base], dtype="int64"),
+            "last_doc_id": pd.Series([base + span - 1], dtype="int64"),
+            "num_docs": pd.Series([span], dtype="int32"),
+            "id_bytes": pd.Series([narr.tobytes()], dtype="object"),
+            "tf_bytes": pd.Series([varint_encode(stats_vals)], dtype="object"),
+            "pos_bytes": pd.Series(
+                [None if pre is None else pre.tobytes()], dtype="object"
+            ),
+            "max_tf": pd.Series([0], dtype="int32"),
+            "min_norm_id": pd.Series([0], dtype="int32"),
+        })
+
+    if not len(doc_ids):
+        return sentinel(0, 0, 0)
+    # integer sort: factorize terms (sort=True → codes follow
+    # lexicographic term order), then ONE lexsort on (code, doc_id)
+    codes, uniq = pd.factorize(terms, sort=True)
+    order = np.lexsort((doc_ids, codes))
+    ids = doc_ids[order]
+    tfs = tfs[order]
+    positions_flat = None
+    if positions is not None:
+        pos_obj = np.empty(len(ids), dtype=object)
+        pos_obj[:] = positions
+        positions_flat = np.fromiter(
+            (v for sub in pos_obj[order] for v in sub),
+            dtype=np.int64, count=int(tfs.sum()),
+        )
+    blocks = encode_segment_arrays(
+        seg, codes[order], np.asarray(uniq, dtype=object), ids, tfs,
+        narr[ids - base].astype(np.int64), positions_flat,
+    )
+    nbytes = int(
+        blocks["id_bytes"].str.len().sum() + blocks["tf_bytes"].str.len().sum()
+    )
+    return pd.concat(
+        [sentinel(len(ids), len(blocks), nbytes), blocks], ignore_index=True
+    )
 
 
 def build_segments_fused(
@@ -283,17 +311,14 @@ def build_segments_fused(
     receives a complete doc-range segment and builds its full posting
     blocks locally (the reference's indexing worker does the same per job,
     /root/reference/src/entrypoint/indexer.rs:80-184, writer commit
-    src/inverted_index.rs:166-177).  Compared to the staged path it skips
-    persisting an intermediate row-oriented postings table (at 10^12 files
-    that's two full extra passes over the largest intermediate in the
-    system) and shuffles raw doc text once, grouped by segment — the only
-    wide exchange in the build.
+    src/inverted_index.rs:166-177).  No row-oriented postings table is
+    ever persisted (at 10^12 files that would be two full extra passes
+    over the largest intermediate in the system): raw doc text is shuffled
+    once, grouped by segment — the only wide exchange in the build.
 
-    Output: SEGMENTS_SCHEMA rows; per segment one extra NORMS_SENTINEL row
-    holding (id_bytes = packed norm bytes, tf_bytes = varint
-    [exact_total_tokens, n_docs_with_tokens], first_doc_id = segment base).
+    Output: SEGMENTS_SCHEMA rows, per segment its NORMS_SENTINEL row and
+    its posting blocks (:func:`segment_rows`).
     """
-    from ..functions.codec import varint_encode
     from ..functions.fieldnorm import fieldnorm_to_id
     from ..functions.tokenizer import get_analyzer
 
@@ -350,89 +375,23 @@ def build_segments_fused(
                 all_terms.extend(tf.keys())
                 all_tfs.append(list(tf.values()))
                 all_docs.append(np.full(len(tf), doc_ids_in[i], dtype=np.int64))
-        norm_ids = fieldnorm_to_id(dls)
-        # packed norms row
         local = doc_ids_in - base
         span = int(local.max()) + 1 if len(local) else 0
         narr = np.zeros(span, dtype=np.uint8)
-        narr[local] = norm_ids.astype(np.uint8)
-        pre_packed = None
+        narr[local] = fieldnorm_to_id(dls).astype(np.uint8)
+        dl_span = np.zeros(span, dtype=np.uint64)
+        dl_span[local] = dls.astype(np.uint64)
+        pre = None
         if pre_col:
-            parr = np.zeros(span, dtype=np.float32)
-            parr[local] = pdf["_pre"].to_numpy(dtype=np.float64).astype(np.float32)
-            pre_packed = parr.tobytes()
-
-        def meta_row(n_postings: int, n_blocks: int, bytes_compressed: int):
-            # all per-segment build metrics ride in the sentinel row so the
-            # stats/lineage stage reads ONLY pruned sentinel columns, never
-            # the block binaries.  After the 5 metric values the varint
-            # stream carries the EXACT per-doc token counts (span-aligned,
-            # 0 for absent docs) — the reference's num_tokens fast field
-            # (src/ranking/goggles/pattern_query.rs:243,290 reads it for
-            # trailing-anchor pattern matching); quantized norms alone
-            # cannot answer "is this the document's last token".
-            dl_span = np.zeros(span, dtype=np.uint64)
-            dl_span[local] = dls.astype(np.uint64)
-            stats_vals = np.concatenate([
-                np.array(
-                    [int(dls.sum()), len(texts), n_postings, n_blocks,
-                     bytes_compressed],
-                    dtype=np.uint64,
-                ),
-                dl_span,
-            ])
-            return pd.DataFrame(
-                {
-                    "segment_id": pd.Series([seg], dtype="int32"),
-                    "term": pd.Series([NORMS_SENTINEL], dtype="object"),
-                    "block_id": pd.Series([-1], dtype="int32"),
-                    "first_doc_id": pd.Series([base], dtype="int64"),
-                    "last_doc_id": pd.Series([base + span - 1], dtype="int64"),
-                    "num_docs": pd.Series([span], dtype="int32"),
-                    "id_bytes": pd.Series([narr.tobytes()], dtype="object"),
-                    "tf_bytes": pd.Series([varint_encode(stats_vals)], dtype="object"),
-                    # sentinel pos_bytes carries the packed float32
-                    # pre-score array (None for non-presorted builds)
-                    "pos_bytes": pd.Series([pre_packed], dtype="object"),
-                    "max_tf": pd.Series([0], dtype="int32"),
-                    "min_norm_id": pd.Series([0], dtype="int32"),
-                }
-            )
-
-        if not all_terms:
-            return meta_row(0, 0, 0)
-        terms_arr = np.array(all_terms, dtype=object)
-        ids_arr = np.concatenate(all_docs)
-        tfs_arr = np.fromiter(
-            (v for sub in all_tfs for v in sub), dtype=np.int64, count=len(terms_arr)
-        )
-        norms_per_posting = np.repeat(norm_ids, [len(x) for x in all_tfs])
-        codes, uniq = pd.factorize(terms_arr, sort=True)
-        order = np.lexsort((ids_arr, codes))
-        positions_flat = None
-        if include_positions:
-            pos_obj = np.empty(len(all_pos), dtype=object)
-            pos_obj[:] = all_pos
-            pos_obj = pos_obj[order]
-            positions_flat = np.fromiter(
-                (v for sub in pos_obj for v in sub),
-                dtype=np.int64,
-                count=int(tfs_arr.sum()),
-            )
-        blocks = encode_segment_arrays(
-            seg,
-            codes[order],
-            np.asarray(uniq, dtype=object),
-            ids_arr[order],
-            tfs_arr[order],
-            norms_per_posting[order],
-            positions_flat,
-        )
-        nbytes = int(
-            blocks["id_bytes"].str.len().sum() + blocks["tf_bytes"].str.len().sum()
-        )
-        return pd.concat(
-            [meta_row(len(ids_arr), len(blocks), nbytes), blocks], ignore_index=True
+            pre = np.zeros(span, dtype=np.float32)
+            pre[local] = pdf["_pre"].to_numpy(dtype=np.float64).astype(np.float32)
+        return segment_rows(
+            seg, base, np.array(all_terms, dtype=object),
+            np.concatenate(all_docs),
+            np.fromiter((v for sub in all_tfs for v in sub), dtype=np.int64,
+                        count=len(all_terms)),
+            all_pos if include_positions else None,
+            narr, dl_span, len(texts), pre,
         )
 
     def encode(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -528,33 +487,6 @@ def split_unified(unified: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Unified fused table → (segments view, norms view) — pure filters,
     pushed to the parquet scan (:data:`UNIFIED_NORMS`)."""
     return unified.filter(~UNIFIED_NORMS.rows()), UNIFIED_NORMS.select(unified)
-
-
-def build_norms(doc_stats_df: DataFrame, docs_per_segment: int) -> DataFrame:
-    """doc_stats (doc_id, dl, norm_id) → one packed row per segment:
-    ``norm_bytes[doc_id - base_doc_id] = norm_id`` (0 for absent docs)."""
-
-    staged = doc_stats_df.withColumn(
-        "segment_id", (F.col("doc_id") / F.lit(docs_per_segment)).cast("int")
-    )
-
-    def pack(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        seg = int(key[0])
-        base = seg * docs_per_segment
-        local = pdf["doc_id"].to_numpy(dtype=np.int64) - base
-        n = int(local.max()) + 1
-        arr = np.zeros(n, dtype=np.uint8)
-        arr[local] = pdf["norm_id"].to_numpy(dtype=np.int64).astype(np.uint8)
-        return pd.DataFrame(
-            {
-                "segment_id": pd.Series([seg], dtype="int32"),
-                "base_doc_id": pd.Series([base], dtype="int64"),
-                "n_docs": pd.Series([n], dtype="int32"),
-                "norm_bytes": pd.Series([arr.tobytes()], dtype="object"),
-            }
-        )
-
-    return staged.groupBy("segment_id").applyInPandas(pack, NORMS_SCHEMA)
 
 
 def decode_term_blocks(

@@ -8,8 +8,8 @@ src/inverted_index.rs:179-190 and src/collector.rs:105-211):
    call, known before any read — and pick the site in
    :func:`per_segment`: below :data:`DRIVER_SITE_POSTINGS` on a handle
    whose pinned files are all local runs on the DRIVER, anything else
-   (larger scans, non-``file:`` paths, staged layouts, bare DataFrames)
-   launches the Spark job;
+   (larger scans, non-``file:`` paths, bare DataFrames) launches the
+   Spark job;
 2. scan the segment blocks filtered to the query terms — the ``term IN``
    predicate reaches the parquet read on both sites (pyarrow filter on
    the driver, PushedFilters in Spark);
@@ -1610,7 +1610,9 @@ class DriverScan(NamedTuple):
     """What the driver site reads: the local parquet files a handle
     pinned at open (the files Spark listed for its table, so the driver
     sees the same snapshot as the Spark views), the handle's norms split,
-    its ``term_df`` lookup and segment count for the estimate."""
+    its ``term_df`` lookup and segment count for the estimate.  Every
+    index directory holds the one fused table, so every handle over
+    local files pins one."""
 
     files: tuple[str, ...]
     split: NormsSplit
@@ -1708,8 +1710,10 @@ def per_segment(
       in-process, and return the concatenated per-segment rows as a
       pandas frame.  A pyarrow ``OSError`` / ``ArrowInvalid`` falls back
       to the Spark site.
-    * **Spark site** — otherwise: cogroup the pruned block scan with the
-      norms on ``segment_id`` in one Python-UDF job; returns that plan.
+    * **Spark site** — otherwise (also when ``driver`` is None: files
+      that are not all local, or bare DataFrames): cogroup the pruned
+      block scan with the norms on ``segment_id`` in one Python-UDF job;
+      returns that plan.
 
     The cut helpers (:func:`topk_rows`, :func:`fold_count_topk`,
     :func:`fold_metrics_topk`, :func:`batch_topk`) accept either."""

@@ -1,12 +1,17 @@
-"""Resumable index build: docs → postings → segments + norms + stats.
+"""Resumable index build: docs → the fused unified index table + stats.
 
 Stage graph (each stage idempotent, checkpointed, skippable on resume):
 
-  1. ``postings``    docs → (doc_id, term, tf, dl, norm_id) parquet
-  2. ``segments``    postings → 128-doc compressed blocks parquet
-  3. ``norms``       postings → packed per-segment fieldnorm bytes parquet
-  4. ``term_stats``  postings → (term, df) parquet
-  5. ``stats``       N / total_tokens / avgdl → stats.json
+  0. ``docmap``      presorted builds only: (doc_id, orig_id, pre_score)
+  1. ``index``       docs → unified table: 128-doc compressed posting
+                     blocks + one sentinel row per segment (packed norms,
+                     exact per-doc token counts, pre-scores, build metrics)
+  2. ``term_stats``  index → (term, df) parquet
+  3. ``stats``       sentinel rows → N / total_tokens / avgdl → stats.json
+
+This is the ONE on-disk layout: every build, streamed batch, merge and
+compaction writes it (``stats.json`` ``layout: "fused"``), and
+:meth:`IndexPaths.read_stats` refuses any other directory.
 
 Checkpointing: every stage writes its output table plus an entry in
 ``_manifest.json`` keyed by a fingerprint of the build parameters; a re-run
@@ -15,19 +20,19 @@ in for Iceberg snapshot commits in this sandbox — on a real deployment each
 stage is an Iceberg table write and the manifest is the snapshot id, which
 gives the same resume semantics transactionally).
 
-Lineage: after stages 1-2 a per-partition metrics table is appended to
+Lineage: the stats stage appends a per-segment metrics row to
 ``lineage.parquet`` — docs tokenized, postings emitted, bytes compressed,
-block counts per segment (north-rule requirement).  Metrics derive from the
-persisted outputs, so they are exact regardless of task retries.
+blocks (north-rule requirement).  Metrics come from the persisted sentinel
+rows, so they are exact regardless of task retries.
 
-Stage outputs are written sorted (``segment_id, term, block_id``) so the
-query path gets parquet row-group pruning on both the term filter and the
+The index is written sorted (``segment_id, term, block_id``) so the query
+path gets parquet row-group pruning on both the term filter and the
 segment grouping.
 
 Mirrors: the reference's indexer lifecycle (SURVEY.md §3.1) — map =
-tokenize+segment-build, reduce = the term shuffle inside build_segments;
-its FrozenIndex shipping + pairwise fold disappears (segments live in
-shared storage; one sort-merge shuffle replaces the fold, strictly better).
+tokenize+segment-build, reduce = the segment shuffle inside
+build_segments_fused; its FrozenIndex shipping + pairwise fold disappears
+(segments live in shared storage; one shuffle replaces the fold).
 """
 
 from __future__ import annotations
@@ -36,23 +41,16 @@ import hashlib
 import json
 import os
 import time
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.tokenizer import analyzer_fingerprint
-from ..operators.postings import assign_doc_ids, build_postings, doc_stats
-from ..operators.segments import (
-    UNIFIED_NORMS,
-    NormsSplit,
-    build_norms,
-    build_segments,
-    with_segment_id,
-)
+from ..operators.postings import assign_doc_ids
+from ..operators.segments import UNIFIED_NORMS, NormsSplit
 from ..operators.wand import DriverScan, local_paths, pin_driver_scan
-
-STAGES = ("postings", "doc_stats", "segments", "norms", "term_stats", "stats")
 
 
 def _check_analyzer_fp(stats: dict) -> None:
@@ -84,22 +82,6 @@ class IndexPaths:
         return os.path.join(self.root, "index.parquet")
 
     @property
-    def postings(self) -> str:
-        return os.path.join(self.root, "postings.parquet")
-
-    @property
-    def doc_stats(self) -> str:
-        return os.path.join(self.root, "doc_stats.parquet")
-
-    @property
-    def segments(self) -> str:
-        return os.path.join(self.root, "segments.parquet")
-
-    @property
-    def norms(self) -> str:
-        return os.path.join(self.root, "norms.parquet")
-
-    @property
     def term_stats(self) -> str:
         return os.path.join(self.root, "term_stats.parquet")
 
@@ -118,6 +100,21 @@ class IndexPaths:
     @property
     def manifest(self) -> str:
         return os.path.join(self.root, "_manifest.json")
+
+    def read_stats(self) -> dict:
+        """``stats.json`` — where every reader and writer opens an index
+        directory, and so the one layout check: only the fused unified
+        table exists, and any other directory is refused here instead of
+        being half-read."""
+        with open(self.stats) as f:
+            stats = json.load(f)
+        if stats.get("layout") != "fused":
+            raise ValueError(
+                f"{self.root} is not a fused index (stats.json layout="
+                f"{stats.get('layout')!r}): rebuild it with "
+                "build_index_fused"
+            )
+        return stats
 
 
 def _read_manifest(paths: IndexPaths) -> dict:
@@ -178,153 +175,6 @@ def _append_lineage(spark: SparkSession, paths: IndexPaths, rows: list[dict]) ->
 
 class StageAborted(RuntimeError):
     """Raised by the fail_after test hook to simulate a mid-build crash."""
-
-
-def build_index(
-    spark: SparkSession,
-    docs: DataFrame,
-    out_dir: str,
-    text_col: str = "content",
-    id_col: str = "doc_id",
-    analyzer: str = "ascii",
-    docs_per_segment: int = 4096,
-    positions: bool = False,
-    fail_after: str | None = None,
-    log: bool = False,
-) -> IndexPaths:
-    paths = IndexPaths(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-    fp = hashlib.sha256(
-        json.dumps(
-            {"analyzer": analyzer,
-             "analyzer_fp": analyzer_fingerprint(analyzer),
-             "dps": docs_per_segment, "text": text_col,
-             "id": id_col, "positions": positions, "v": 1},
-            sort_keys=True,
-        ).encode()
-    ).hexdigest()[:16]
-    manifest = _read_manifest(paths)
-
-    def done(stage: str) -> bool:
-        e = manifest["stages"].get(stage)
-        return bool(e and e.get("fingerprint") == fp and e.get("ok"))
-
-    _t_last = [time.time()]
-
-    def mark(stage: str, **extra) -> None:
-        elapsed = round(time.time() - _t_last[0], 2)
-        _t_last[0] = time.time()
-        manifest["stages"][stage] = {
-            "fingerprint": fp, "ok": True, "completed_at": time.time(),
-            "elapsed_sec": elapsed, **extra,
-        }
-        _write_manifest(paths, manifest)
-        if log:
-            print(f"[build] stage {stage} done in {elapsed}s {extra}")
-        if fail_after == stage:
-            raise StageAborted(stage)
-
-    # -- 1. postings ------------------------------------------------------
-    if not done("postings"):
-        p = build_postings(docs, text_col, id_col, analyzer,
-                           include_positions=positions)
-        p.write.mode("overwrite").parquet(paths.postings)
-        n = spark.read.parquet(paths.postings).count()
-        mark("postings", rows=n)
-    postings = spark.read.parquet(paths.postings)
-
-    # -- 1.5 doc_stats — materialized ONCE (norms + global stats both need
-    # the per-doc (dl, norm_id) reduction; recomputing it per stage doubled
-    # the largest groupBy in the build) -----------------------------------
-    if not done("doc_stats"):
-        doc_stats(postings).write.mode("overwrite").parquet(paths.doc_stats)
-        mark("doc_stats")
-    doc_stats_df = spark.read.parquet(paths.doc_stats)
-
-    # -- 2. segments ------------------------------------------------------
-    if not done("segments"):
-        seg = build_segments(postings, docs_per_segment)
-        # build_segments already shuffled by (segment_id, term); a
-        # repartitionByRange here would run the encode TWICE (range-sampling
-        # pass + real pass).  sortWithinPartitions is shuffle-free and gives
-        # the same parquet row-group locality for term/segment pruning.
-        (
-            seg.sortWithinPartitions("segment_id", "term", "block_id")
-            .write.mode("overwrite")
-            .parquet(paths.segments)
-        )
-        segs = spark.read.parquet(paths.segments)
-        lin = (
-            segs.groupBy("segment_id")
-            .agg(
-                F.sum("num_docs").alias("postings"),
-                F.count("*").alias("blocks"),
-                F.sum(F.length("id_bytes") + F.length("tf_bytes")).alias("bytes"),
-            )
-            .collect()
-        )
-        _append_lineage(
-            spark, paths,
-            [
-                {"stage": "segments", "partition_id": r["segment_id"],
-                 "postings": r["postings"], "blocks": r["blocks"],
-                 "bytes_compressed": r["bytes"], "fingerprint": fp}
-                for r in lin
-            ],
-        )
-        mark("segments", segments=len(lin))
-
-    # -- 3. norms ---------------------------------------------------------
-    if not done("norms"):
-        build_norms(doc_stats_df, docs_per_segment).write.mode("overwrite").parquet(
-            paths.norms
-        )
-        lin = (
-            spark.read.parquet(paths.norms)
-            .select("segment_id", "n_docs")
-            .collect()
-        )
-        _append_lineage(
-            spark, paths,
-            [
-                {"stage": "norms", "partition_id": r["segment_id"],
-                 "docs": r["n_docs"], "fingerprint": fp}
-                for r in lin
-            ],
-        )
-        mark("norms", segments=len(lin))
-
-    # -- 4. term_stats ----------------------------------------------------
-    if not done("term_stats"):
-        (
-            postings.groupBy("term")
-            .agg(F.count("*").alias("df"))
-            .write.mode("overwrite")
-            .parquet(paths.term_stats)
-        )
-        mark("term_stats")
-
-    # -- 5. global stats --------------------------------------------------
-    if not done("stats"):
-        n_docs = docs.count()
-        total = doc_stats_df.agg(F.sum("dl")).collect()[0][0] or 0
-        stats = {
-            "num_docs": int(n_docs),
-            "total_tokens": int(total),
-            "avgdl": (int(total) / n_docs) if n_docs else 0.0,
-            "analyzer": analyzer,
-            "analyzer_fp": analyzer_fingerprint(analyzer),
-            "docs_per_segment": docs_per_segment,
-            "positions": positions,
-            "fingerprint": fp,
-        }
-        tmp = paths.stats + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(stats, f, indent=2)
-        os.replace(tmp, paths.stats)
-        mark("stats", **{"num_docs": int(n_docs)})
-
-    return paths
 
 
 def write_docmap(pre_scores: DataFrame, id_col: str, docmap_dir: str) -> None:
@@ -394,10 +244,8 @@ def build_index_fused(
 ) -> IndexPaths:
     """Fused build: docs → unified index table in ONE shuffle + ONE Arrow
     pass (see operators.segments.build_segments_fused), then tiny
-    term_stats / stats stages reading back only pruned columns.  The
-    production path — the staged :func:`build_index` additionally persists
-    a row-oriented postings table (useful for ad-hoc analysis, 2 extra full
-    passes).
+    term_stats / stats stages reading back only pruned columns.  The one
+    index build: merges and compactions write the same table.
 
     ``pre_scores``: optional (id_col, pre_score) DataFrame of
     query-independent scores (operators.signals.precompute_score).  When
@@ -571,8 +419,7 @@ def _rebuild_query(new_pos_terms: list, pq) -> str:
 
 
 def _local_term_df(
-    spark: SparkSession,
-    term_stats_df: DataFrame,
+    open_term_stats: Callable[[], DataFrame],
     term_stats_dir: str,
     terms: list[str],
 ) -> dict[str, int]:
@@ -586,7 +433,9 @@ def _local_term_df(
     TermDictionary is mmapped per segment); parquet row-group pruning plays
     the role of the dictionary's block index.  Falls back to the Spark
     filter+collect path when the directory is not driver-readable (e.g. an
-    object-store URI in cluster mode) or a parquet file is corrupt."""
+    object-store URI in cluster mode) or a parquet file is corrupt; only
+    then is the Spark table opened (``open_term_stats``), because opening
+    it reads the parquet footers in a Spark job."""
     import pyarrow as pa
     import pyarrow.dataset as pads
 
@@ -613,14 +462,15 @@ def _local_term_df(
         # unreadable on the driver (object-store URI) or a corrupt /
         # partially-written parquet footer: the Spark reader is the safe
         # superset
-        rows = term_stats_df.filter(F.col("term").isin(terms)).collect()
+        rows = open_term_stats().filter(F.col("term").isin(terms)).collect()
         return {r["term"]: int(r["df"]) for r in rows}
 
 
 class IndexHandle:
     """What every query handle over a persisted index shares:
 
-    * **open** — ``stats.json``, the analyzer fingerprint check, and the
+    * **open** — ``stats.json`` (:meth:`IndexPaths.read_stats`: the
+      layout check), the analyzer fingerprint check, and the
       main table ∪ every LEDGERED streamed batch (a batch is visible once
       the stats ledger names it, ``streaming.ingest.registered_paths``);
     * the lazy ``term_stats`` and ``docmap`` tables;
@@ -634,9 +484,8 @@ class IndexHandle:
       :meth:`search_corrected`).
 
     A subclass supplies how the unified table splits into ``segments`` /
-    ``norms`` (``NORMS_SPLIT``, or an :meth:`_open_tables` override), how
-    a query lowers to its per-segment kernel (``search``), and its spell
-    dictionary (``spell_checker``)."""
+    ``norms`` (``NORMS_SPLIT``), how a query lowers to its per-segment
+    kernel (``search``), and its spell dictionary (``spell_checker``)."""
 
     NORMS_SPLIT: NormsSplit
 
@@ -644,8 +493,7 @@ class IndexHandle:
         self.spark = spark
         self.paths = IndexPaths(root)
         self._root = root
-        with open(self.paths.stats) as f:
-            self.stats = json.load(f)
+        self.stats = self.paths.read_stats()
         self.analyzer = self.stats["analyzer"]
         _check_analyzer_fp(self.stats)
         self.presorted = bool(self.stats.get("presorted"))
@@ -653,26 +501,21 @@ class IndexHandle:
         self._docmap_df: DataFrame | None = None
         self._tdf_memo: dict[str, int] = {}
         self._plan_memo: dict[tuple, DataFrame] = {}
-        self.driver: DriverScan | None = None
-        self.segments, self.norms = self._open_tables()
-
-    def _open_tables(self) -> tuple[DataFrame, DataFrame]:
-        """→ (segments, norms) views over the unified table, split by
-        ``NORMS_SPLIT``.  Pins the files Spark listed for the table as
-        ``driver`` when every one is local: the driver site then reads
-        the same snapshot (deletes and streamed batches become visible
-        on reopen, as for the Spark views)."""
-        unified = self._read_unified()
-        split = self.NORMS_SPLIT
-        files = local_paths(unified.inputFiles())
-        if files:
-            self.driver = pin_driver_scan(files, split, self.term_df)
-        return unified.filter(~split.rows()), split.select(unified)
-
-    def _read_unified(self) -> DataFrame:
+        # the unified table ∪ every ledgered streamed batch, split by
+        # NORMS_SPLIT.  The files Spark listed are pinned as ``driver``
+        # when every one is local: the driver site then reads the same
+        # snapshot (deletes and streamed batches become visible on
+        # reopen, as for the Spark views)
         from ..streaming.ingest import registered_paths
 
-        return self.spark.read.parquet(*registered_paths(self._root, self.stats))
+        unified = spark.read.parquet(*registered_paths(root, self.stats))
+        split = self.NORMS_SPLIT
+        files = local_paths(unified.inputFiles())
+        self.driver: DriverScan | None = (
+            pin_driver_scan(files, split, self.term_df) if files else None
+        )
+        self.segments = unified.filter(~split.rows())
+        self.norms = split.select(unified)
 
     @property
     def term_stats(self) -> DataFrame:
@@ -690,16 +533,10 @@ class IndexHandle:
         if not self.presorted:
             return None
         if self._docmap_df is None:
-            from ..streaming.ingest import batch_docmap_dir
+            from ..streaming.ingest import registered_docmaps
 
-            # docmap = the batch build's map ∪ every LEDGERED streamed
-            # batch's map (same visibility rule as the segment dirs)
-            dm_dirs = [self.paths.docmap] + [
-                batch_docmap_dir(self._root, b)
-                for b in self.stats.get("stream_batches", [])
-            ]
             self._docmap_df = self.spark.read.parquet(
-                *[d for d in dm_dirs if os.path.isdir(d)]
+                *registered_docmaps(self._root, self.stats)
             )
         return self._docmap_df
 
@@ -759,7 +596,7 @@ class IndexHandle:
         missing = [t for t in terms if t not in self._tdf_memo]
         if missing:
             found = _local_term_df(
-                self.spark, self.term_stats, self.paths.term_stats, missing
+                lambda: self.term_stats, self.paths.term_stats, missing
             )
             for t in missing:
                 self._tdf_memo[t] = int(found.get(t, 0))
@@ -947,19 +784,10 @@ class IndexHandle:
 
 
 class SegmentIndex(IndexHandle):
-    """Query handle over a persisted single-field index directory (staged
-    or fused)."""
+    """Query handle over a persisted single-field index directory — a
+    ``build_index_fused`` output, or any merge or compaction of one."""
 
     NORMS_SPLIT = UNIFIED_NORMS
-
-    def _open_tables(self) -> tuple[DataFrame, DataFrame]:
-        if self.stats.get("layout") == "fused":
-            return super()._open_tables()
-        # staged layout: separate segments / norms tables, Spark site only
-        return (
-            self.spark.read.parquet(self.paths.segments),
-            self.spark.read.parquet(self.paths.norms),
-        )
 
     def search(
         self,

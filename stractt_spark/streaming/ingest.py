@@ -62,6 +62,15 @@ def registered_paths(index_dir: str, stats: dict) -> list[str]:
     ]
 
 
+def registered_docmaps(index_dir: str, stats: dict) -> list[str]:
+    """A presorted index's docmap dirs: the build's map ∪ every LEDGERED
+    streamed batch's map (the same visibility rule as the segment dirs)."""
+    dirs = [IndexPaths(index_dir).docmap] + [
+        batch_docmap_dir(index_dir, b) for b in stats.get("stream_batches", [])
+    ]
+    return [d for d in dirs if os.path.isdir(d)]
+
+
 def append_batch(
     spark: SparkSession,
     batch_df: DataFrame,
@@ -83,8 +92,7 @@ def append_batch(
     The batch's (doc_id, orig_id, pre_score) rows land in a per-batch
     docmap dir, visible only once the batch id is ledgered."""
     paths = IndexPaths(index_dir)
-    with open(paths.stats) as f:
-        stats = json.load(f)
+    stats = paths.read_stats()
     if batch_id in set(stats.get("stream_batches", [])):
         return  # already committed
     mf = stats.get("multifield")

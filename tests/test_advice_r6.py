@@ -57,7 +57,7 @@ def test_cache_drops_plans_memoized_before_it(spark, roots, kind):
 
 def test_local_term_df_falls_back_on_corrupt_parquet(spark, roots):
     idx = SegmentIndex(spark, roots["sf"])
-    want = _local_term_df(spark, idx.term_stats, idx.paths.term_stats,
+    want = _local_term_df(lambda: idx.term_stats, idx.paths.term_stats,
                           ["merge", "tree"])
     assert want["merge"] > 0
     bad = f"{BASE}/corrupt_term_stats"
@@ -65,8 +65,9 @@ def test_local_term_df_falls_back_on_corrupt_parquet(spark, roots):
     os.makedirs(bad)
     with open(os.path.join(bad, "part-00000.parquet"), "wb") as f:
         f.write(b"not a parquet file" * 4)
-    # the Spark reader (term_stats_df) still reads the real table
-    got = _local_term_df(spark, idx.term_stats, bad, ["merge", "tree"])
+    # the Spark reader (opened only on this fallback) still reads the
+    # real table
+    got = _local_term_df(lambda: idx.term_stats, bad, ["merge", "tree"])
     assert got == want
 
 

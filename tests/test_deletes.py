@@ -21,6 +21,7 @@ from stractt_spark.operators.deletes import (
 )
 from stractt_spark.plans.build import SegmentIndex, build_index_fused
 from stractt_spark.sources.corpus import make_corpus
+from stractt_spark.streaming.ingest import append_batch
 
 BASE = "/tmp/stractt_deletes_test"
 DPS = 96
@@ -42,6 +43,20 @@ def _pre_docs(spark, rows, lo, hi):
         "pre_score",
         F.lit(2048.0) * ((F.col("doc_id") * F.lit(2654435761)) % 1000)
         / F.lit(1000.0),
+    )
+
+
+def _index_rows(spark, root):
+    return sorted(
+        (
+            (r["segment_id"], r["term"], r["block_id"],
+             r["first_doc_id"], r["last_doc_id"], r["num_docs"],
+             bytes(r["id_bytes"]), bytes(r["tf_bytes"]),
+             bytes(r["pos_bytes"]) if r["pos_bytes"] is not None
+             else None, r["max_tf"], r["min_norm_id"])
+            for r in spark.read.parquet(f"{root}/index.parquet").collect()
+        ),
+        key=lambda t: (t[0], t[1], t[2]),
     )
 
 
@@ -190,20 +205,7 @@ def test_multifield_delete_mask_and_compaction(deleted, spark):
         fields, docs_per_segment=DPS, positions=True,
     )
 
-    def rows_of(d):
-        return sorted(
-            (
-                (r["segment_id"], r["term"], r["block_id"],
-                 r["first_doc_id"], r["last_doc_id"], r["num_docs"],
-                 bytes(r["id_bytes"]), bytes(r["tf_bytes"]),
-                 bytes(r["pos_bytes"]) if r["pos_bytes"] is not None
-                 else None, r["max_tf"], r["min_norm_id"])
-                for r in spark.read.parquet(f"{d}/index.parquet").collect()
-            ),
-            key=lambda t: (t[0], t[1], t[2]),
-        )
-
-    assert rows_of(out) == rows_of(fresh)
+    assert _index_rows(spark, out) == _index_rows(spark, fresh)
     import json
 
     with open(f"{out}/stats.json") as f:
@@ -232,6 +234,9 @@ def test_compacted_plain_equals_fresh_build(deleted, spark):
         want = json.load(f)
     assert got["num_docs"] == want["num_docs"] == 500 - len(DELETED)
     assert got["total_tokens"] == want["total_tokens"]
+    # the compaction writes the table a fresh build over the survivors
+    # (same ids, deleted ones left unused) writes
+    assert _index_rows(spark, out) == _index_rows(spark, fresh)
     cidx = SegmentIndex(spark, out)
     fidx = SegmentIndex(spark, fresh)
     for q, m in QUERIES:
@@ -240,6 +245,50 @@ def test_compacted_plain_equals_fresh_build(deleted, spark):
         assert [d for d, _ in a] == [d for d, _ in b], (q, m)
         for (_, s1), (_, s2) in zip(a, b):
             assert math.isclose(s1, s2, rel_tol=1e-12), (q, m)
+
+
+def test_compacted_doc_id_index_stays_writable(deleted, spark):
+    """A compacted doc-id index is an ordinary fused index: it keeps its
+    attr columns, scores on the driver, takes further deletes and
+    appends, and serves appended docs and facets."""
+    rows = deleted["rows"]
+    src = f"{BASE}/attr"
+    build_index_fused(
+        spark,
+        spark.createDataFrame(
+            [(i, rows[i]["content"], f"s{i % 3}.com") for i in range(300)],
+            "doc_id long, content string, site string",
+        ),
+        src, text_col="content", docs_per_segment=DPS, attr_cols=["site"],
+    )
+    assert delete_docs(spark, src, [3, 4, 5]) == 3
+    out = f"{BASE}/attr_compacted"
+    compact_index(spark, src, out)
+    idx = SegmentIndex(spark, out)
+    assert idx.stats["layout"] == "fused"
+    assert idx.stats["attr_cols"] == ["site"]
+    assert idx.stats["num_docs"] == 297
+    assert idx.driver is not None
+    assert delete_docs(spark, out, [7]) == 1
+    append_batch(
+        spark,
+        spark.createDataFrame(
+            [("r", f"p{i}", "c", f"zzzuniqueword doc {i}", "s9.com")
+             for i in range(5)],
+            "repo string, path string, commit string, content string, "
+            "site string",
+        ),
+        0, out,
+    )
+    idx = SegmentIndex(spark, out)
+    assert idx.stats["num_docs"] == 302
+    hits = idx.search_list("zzzuniqueword", k=10)
+    assert len(hits) == 5 and all(d >= 300 for d, _ in hits)
+    facets = {
+        r["facet_value"]: r["match_count"]
+        for r in idx.facet_counts("zzzuniqueword", "site").collect()
+    }
+    assert facets == {"s9.com": 5}
 
 
 def test_compacted_presorted_byte_identical(deleted, spark):
@@ -258,20 +307,7 @@ def test_compacted_presorted_byte_identical(deleted, spark):
         positions=True, pre_scores=live.select("doc_id", "pre_score"),
     )
 
-    def rows_of(d):
-        return sorted(
-            (
-                (r["segment_id"], r["term"], r["block_id"],
-                 r["first_doc_id"], r["last_doc_id"], r["num_docs"],
-                 bytes(r["id_bytes"]), bytes(r["tf_bytes"]),
-                 bytes(r["pos_bytes"]) if r["pos_bytes"] is not None
-                 else None, r["max_tf"], r["min_norm_id"])
-                for r in spark.read.parquet(f"{d}/index.parquet").collect()
-            ),
-            key=lambda t: (t[0], t[1], t[2]),
-        )
-
-    assert rows_of(out) == rows_of(fresh)
+    assert _index_rows(spark, out) == _index_rows(spark, fresh)
     # and the quota is sound again post-compaction
     idx = SegmentIndex(spark, out)
     full = idx.search_list("merge sort", k=10, mode="should",

@@ -7,9 +7,9 @@ and batch rows must be identical — same kernel, same cut, so bit-equal
 scores.  The driver site must start no Spark job on ``collect()``; a
 Spark-site request starts at least one.  Fixtures cover the index
 flavours whose files differ: presorted with a streamed batch (pre +
-bm25, quota, orig ids), tombstoned doc-id order, a tombstoned
-multi-field index with site attrs and positions (goggle, ladder,
-must_fields, phrase), and its compaction.
+bm25, quota, orig ids), tombstoned doc-id order and its compaction, a
+tombstoned multi-field index with site attrs and positions (goggle,
+ladder, must_fields, phrase), and its compaction.
 """
 
 import itertools
@@ -69,8 +69,8 @@ def indexes(spark):
     build_index_fused(spark, docs, f"{BASE}/del", text_col="content",
                       docs_per_segment=DPS, attr_cols=["site"])
     assert delete_docs(spark, f"{BASE}/del", DELETED) == len(DELETED)
-    # multi-field tombstones ride the norms side; its compaction stays
-    # fused (a doc-id single-field compaction writes the staged layout)
+    compact_index(spark, f"{BASE}/del", f"{BASE}/del_compacted")
+    # multi-field tombstones ride the norms side
     build_index_fused_multifield(
         spark, docs, f"{BASE}/mf", {"path": "path", "content": "content"},
         docs_per_segment=DPS, positions=True, attr_cols=["site"],
@@ -80,6 +80,7 @@ def indexes(spark):
     return {
         "pre": SegmentIndex(spark, f"{BASE}/pre").cache(),
         "del": SegmentIndex(spark, f"{BASE}/del"),
+        "del_compacted": SegmentIndex(spark, f"{BASE}/del_compacted"),
         "mf": MultiFieldSegmentIndex(spark, f"{BASE}/mf"),
         "compacted": MultiFieldSegmentIndex(spark, f"{BASE}/compacted"),
     }
@@ -99,7 +100,7 @@ def _outputs(h, kind):
     out = {qid: _rows(h.search(q, k=10, mode=mode, **kw))
            for qid, q, mode in QUERIES}
     out["batch"] = _rows(h.search_batch(QUERIES, k=5))
-    if kind in ("del", "mf"):
+    if kind in ("del", "del_compacted", "mf"):
         out["count"] = h.search_with_count("chunk heap -merge", k=10,
                                            mode="must")
     if kind in ("pre", "mf"):
@@ -148,7 +149,9 @@ def _jobs(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(gid))
 
 
-@pytest.mark.parametrize("kind", ["pre", "del", "mf", "compacted"])
+@pytest.mark.parametrize(
+    "kind", ["pre", "del", "del_compacted", "mf", "compacted"]
+)
 def test_sites_return_identical_results(indexes, monkeypatch, kind):
     h = indexes[kind]
     assert h.driver is not None  # fused + local files: driver-eligible
@@ -161,7 +164,7 @@ def test_sites_return_identical_results(indexes, monkeypatch, kind):
     # the fixtures are not vacuous: queries match, tombstones are gone
     assert all(on_driver[qid] for qid, _, _ in QUERIES[:2])
     assert on_driver.get("count", (None, 1))[1] > 0
-    if kind in ("del", "mf"):
+    if kind in ("del", "del_compacted", "mf"):
         assert not {r[0] for r in on_driver["q0"]} & set(DELETED)
 
 
@@ -181,6 +184,16 @@ def test_driver_site_starts_no_job(spark, indexes, monkeypatch):
         lambda: h.search("merge tree", k=10, mode="should").collect(),
     ))
     assert jobs >= 1
+
+
+def test_fresh_handle_first_batch_starts_no_job(spark, indexes):
+    """The first ``term_df`` of a handle reads term_stats with pyarrow
+    and never opens the Spark table, so on the driver site even a fresh
+    handle's first request starts no job."""
+    h = SegmentIndex(spark, f"{BASE}/pre")
+    rows, jobs = _jobs(spark, lambda: h.search_batch(QUERIES, k=5).collect())
+    assert rows and jobs == 0
+    assert h._term_stats_df is None
 
 
 def test_driver_results_are_not_memoized(indexes, monkeypatch):

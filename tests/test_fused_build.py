@@ -1,40 +1,43 @@
-"""Fused build path: identical results to the staged path and the oracle."""
+"""Fused build path: the row postings it encodes, and the oracle."""
 
 import shutil
 
 import pytest
 
 from stractt_spark.operators.merge import decode_postings
+from stractt_spark.operators.postings import build_postings
 from stractt_spark.oracle import build_oracle
-from stractt_spark.plans.build import SegmentIndex, build_index, build_index_fused
+from stractt_spark.plans.build import SegmentIndex, build_index_fused
 from stractt_spark.sources.corpus import make_corpus
 
 
 @pytest.fixture(scope="module")
-def pair(spark, tmp_path_factory):
+def built(spark, tmp_path_factory):
     root = tmp_path_factory.mktemp("fused")
     rows = make_corpus(500)
     docs = spark.createDataFrame(
         [(i, r["content"]) for i, r in enumerate(rows)], "doc_id long, content string"
     )
-    fused_dir, staged_dir = str(root / "fused"), str(root / "staged")
+    fused_dir = str(root / "fused")
     build_index_fused(spark, docs, fused_dir, docs_per_segment=96)
-    build_index(spark, docs, staged_dir, docs_per_segment=96)
+    # the row-oriented postings table the blocks encode: one
+    # (doc_id, term, tf, dl, norm_id) row per posting
+    postings = build_postings(docs).toPandas()
     oracle = build_oracle([(i, r["content"]) for i, r in enumerate(rows)])
-    return SegmentIndex(spark, fused_dir).cache(), SegmentIndex(spark, staged_dir), oracle
+    return SegmentIndex(spark, fused_dir).cache(), postings, oracle
 
 
-def test_stats_match(pair):
-    fused, staged, oracle = pair
-    assert fused.stats["num_docs"] == staged.stats["num_docs"] == oracle.num_docs
-    assert fused.stats["total_tokens"] == staged.stats["total_tokens"]
+def test_stats_match(built):
+    fused, postings, oracle = built
+    assert fused.stats["num_docs"] == oracle.num_docs
+    total = int(postings.groupby("doc_id")["dl"].first().sum())
+    assert fused.stats["total_tokens"] == total
     assert abs(fused.stats["avgdl"] - oracle.avgdl) < 1e-12
 
 
-def test_postings_identical_to_staged(pair, spark):
-    fused, staged, _ = pair
+def test_postings_identical_to_row_postings(built, spark):
+    fused, b, _ = built
     a = decode_postings(fused.segments, fused.norms).toPandas()
-    b = decode_postings(staged.segments, staged.norms).toPandas()
     key = ["doc_id", "term"]
     a = a.sort_values(key).reset_index(drop=True)
     b = b.sort_values(key).reset_index(drop=True)
@@ -48,12 +51,14 @@ def test_postings_identical_to_staged(pair, spark):
     [("the", "should"), ("merge sort", "must"), ("buffer -scan", "must"),
      ("read file into buffer", "should"), ("zzz_no", "must")],
 )
-def test_fused_rank_identity(pair, query, mode):
-    fused, staged, oracle = pair
+def test_fused_rank_identity(built, query, mode):
+    fused, _, oracle = built
     got = fused.search_list(query, k=10, mode=mode)
     expected = oracle.search(query, k=10, mode=mode)
     assert [d for d, _ in got] == [d for d, _ in expected], (query, mode)
-    assert got == staged.search_list(query, k=10, mode=mode)
+    assert [s for _, s in got] == pytest.approx(
+        [s for _, s in expected], rel=1e-9
+    )
 
 
 def test_fused_resume(spark, tmp_path):

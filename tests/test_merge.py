@@ -7,7 +7,7 @@ import pytest
 
 from stractt_spark.operators.merge import decode_postings, lpt_buckets, merge_indexes
 from stractt_spark.oracle import build_oracle
-from stractt_spark.plans.build import SegmentIndex, build_index
+from stractt_spark.plans.build import SegmentIndex, build_index_fused
 from stractt_spark.sources.corpus import make_corpus
 
 
@@ -36,7 +36,7 @@ def merged_vs_global(spark, tmp_path_factory):
             "doc_id long, content string",
         )
         d = str(root / f"sub{ci}")
-        build_index(spark, docs, d, docs_per_segment=48)
+        build_index_fused(spark, docs, d, docs_per_segment=48)
         sub_dirs.append(d)
     merged_dir = str(root / "merged")
     merge_indexes(spark, sub_dirs, merged_dir, docs_per_segment=64)
@@ -45,7 +45,7 @@ def merged_vs_global(spark, tmp_path_factory):
         [(i, r["content"]) for i, r in enumerate(rows)], "doc_id long, content string"
     )
     global_dir = str(root / "global")
-    build_index(spark, global_docs, global_dir, docs_per_segment=64)
+    build_index_fused(spark, global_docs, global_dir, docs_per_segment=64)
     oracle = build_oracle([(i, r["content"]) for i, r in enumerate(rows)])
     return (
         SegmentIndex(spark, merged_dir).cache(),
@@ -58,6 +58,31 @@ def test_merged_stats_equal_global(merged_vs_global):
     merged, glob, _ = merged_vs_global
     assert merged.stats["num_docs"] == glob.stats["num_docs"]
     assert merged.stats["total_tokens"] == glob.stats["total_tokens"]
+
+
+def _index_rows(spark, root):
+    return sorted(
+        (
+            (r["segment_id"], r["term"], r["block_id"], r["first_doc_id"],
+             r["last_doc_id"], r["num_docs"], bytes(r["id_bytes"]),
+             bytes(r["tf_bytes"]),
+             None if r["pos_bytes"] is None else bytes(r["pos_bytes"]),
+             r["max_tf"], r["min_norm_id"])
+            for r in spark.read.parquet(f"{root}/index.parquet").collect()
+        ),
+        key=lambda t: (t[0], t[1], t[2]),
+    )
+
+
+def test_merged_index_rows_equal_one_shot_build(merged_vs_global, spark):
+    """The merge writes the fused table a one-shot build over the
+    concatenated corpus writes: same blocks, same sentinel rows."""
+    merged, glob, _ = merged_vs_global
+    assert merged.stats["layout"] == "fused"
+    assert not merged.stats["presorted"]
+    assert _index_rows(spark, merged.paths.root) == _index_rows(
+        spark, glob.paths.root
+    )
 
 
 def test_merged_postings_identical(merged_vs_global, spark):

@@ -11,12 +11,15 @@ import pytest
 
 from stractt_spark.operators.postings import build_postings
 from stractt_spark.operators.segments import (
-    build_segments,
     decode_block_subset,
     decode_term_blocks,
 )
 from stractt_spark.oracle import build_oracle
-from stractt_spark.plans.build import SegmentIndex, StageAborted, build_index
+from stractt_spark.plans.build import (
+    SegmentIndex,
+    StageAborted,
+    build_index_fused,
+)
 from stractt_spark.sources.corpus import make_corpus
 
 IDX = "/tmp/stractt_test_index"
@@ -42,7 +45,7 @@ def built(spark):
     )
     shutil.rmtree(IDX, ignore_errors=True)
     # small segments so the corpus spans several (700 docs / 96 ≈ 8 segments)
-    paths = build_index(spark, docs, IDX, docs_per_segment=96)
+    paths = build_index_fused(spark, docs, IDX, docs_per_segment=96)
     oracle = build_oracle([(i, r["content"]) for i, r in enumerate(rows)])
     return SegmentIndex(spark, IDX).cache(), oracle, docs, paths
 
@@ -57,14 +60,34 @@ def test_wand_rank_identity(built, query, mode):
         assert math.isclose(s1, s2, rel_tol=1e-9, abs_tol=1e-12), (query, d1)
 
 
-def test_staged_layout_takes_spark_site(built):
-    """A staged-layout index (separate segments / norms tables) pins no
-    files for the driver site: every search is a Spark plan."""
-    from stractt_spark.operators.wand import driver_result
+def test_non_fused_stats_raise_at_open(built, spark, tmp_path):
+    """Only the fused unified table exists: a directory whose stats.json
+    lacks ``layout: "fused"`` (the separate segments / norms tables older
+    builds and merges wrote) is refused wherever stats.json is loaded —
+    open, delete, append, merge — with the rebuild named."""
+    import json
 
-    index, _, _, _ = built
-    assert index.driver is None
-    assert not driver_result(index.search("merge sort", k=10))
+    from stractt_spark.operators.deletes import delete_docs
+    from stractt_spark.operators.merge import merge_indexes
+    from stractt_spark.operators.multifield import MultiFieldSegmentIndex
+    from stractt_spark.streaming.ingest import append_batch
+
+    index, _, docs, _ = built
+    old = dict(index.stats)
+    del old["layout"]
+    d = str(tmp_path / "old")
+    os.makedirs(d)
+    with open(f"{d}/stats.json", "w") as f:
+        json.dump(old, f)
+    for use in (
+        lambda: SegmentIndex(spark, d),
+        lambda: MultiFieldSegmentIndex(spark, d),
+        lambda: delete_docs(spark, d, [1]),
+        lambda: append_batch(spark, docs, 0, d, order_cols=("doc_id",)),
+        lambda: merge_indexes(spark, [d], str(tmp_path / "merged")),
+    ):
+        with pytest.raises(ValueError, match="rebuild it with build_index_fused"):
+            use()
 
 
 def test_block_roundtrip_through_spark(built, spark):
@@ -100,13 +123,13 @@ def test_blocks_are_128_docs(built):
 def test_lineage_written(built, spark):
     index, _, docs, paths = built
     lin = spark.read.parquet(paths.lineage).toPandas()
-    seg_rows = lin[lin.stage == "segments"]
+    seg_rows = lin[lin.stage == "index"]
+    assert len(seg_rows) == index.norms.count()
     assert seg_rows["bytes_compressed"].sum() > 0
-    # postings accounted in lineage == total postings rows
-    total_postings = spark.read.parquet(paths.postings).count()
-    assert int(seg_rows["postings"].sum()) == total_postings
-    norm_rows = lin[lin.stage == "norms"]
-    assert int(norm_rows["docs"].sum()) >= docs.count()
+    # postings accounted in lineage == the row postings the blocks encode
+    assert int(seg_rows["postings"].sum()) == build_postings(docs).count()
+    assert int(seg_rows["blocks"].sum()) == index.segments.count()
+    assert int(seg_rows["docs"].sum()) == docs.count()
 
 
 def test_resume_skips_completed_stages(spark, tmp_path):
@@ -116,14 +139,17 @@ def test_resume_skips_completed_stages(spark, tmp_path):
     )
     out = str(tmp_path / "idx")
     with pytest.raises(StageAborted):
-        build_index(spark, docs, out, docs_per_segment=64, fail_after="segments")
-    # segments written, norms absent
-    assert os.path.isdir(os.path.join(out, "segments.parquet"))
-    assert not os.path.isdir(os.path.join(out, "norms.parquet"))
-    seg_mtime = os.path.getmtime(os.path.join(out, "segments.parquet"))
-    # resume: completes remaining stages without rewriting segments
-    build_index(spark, docs, out, docs_per_segment=64)
-    assert os.path.getmtime(os.path.join(out, "segments.parquet")) == seg_mtime
+        build_index_fused(spark, docs, out, docs_per_segment=64,
+                          fail_after="term_stats")
+    # index and term_stats written, stats absent
+    assert os.path.isdir(os.path.join(out, "term_stats.parquet"))
+    assert not os.path.exists(os.path.join(out, "stats.json"))
+    mtimes = [os.path.getmtime(os.path.join(out, t))
+              for t in ("index.parquet", "term_stats.parquet")]
+    # resume: completes the stats stage without rewriting either table
+    build_index_fused(spark, docs, out, docs_per_segment=64)
+    assert [os.path.getmtime(os.path.join(out, t))
+            for t in ("index.parquet", "term_stats.parquet")] == mtimes
     idx = SegmentIndex(spark, out)
     assert len(idx.search_list("buffer", k=5)) > 0
 
