@@ -30,7 +30,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from .segments import decode_term_blocks
+from .segments import decode_term_blocks, term_blocks
 
 
 def _source_fp(stats: list[dict]) -> str | None:
@@ -107,15 +107,14 @@ def decode_postings(
         base = int(norm_pdf["base_doc_id"].iloc[0])
         narr = np.frombuffer(norm_pdf["norm_bytes"].iloc[0], dtype=np.uint8)
         outs = []
-        for term, g in seg_pdf.groupby("term"):
-            g = g.sort_values("block_id")
-            ids, tfs = decode_term_blocks(g)
+        for term, tb in term_blocks(seg_pdf).items():
+            ids, tfs = decode_term_blocks(tb)
             ids = ids.astype(np.int64)
             pos_rows = None
             if include_positions:
                 # decode with the ORIGINAL tfs (position offsets align to
                 # the undeleted stream), THEN filter rows
-                pos, offs = decode_subset_positions(g, tfs)
+                pos, offs = decode_subset_positions(tb, tfs)
                 pos_rows = [
                     pos[offs[i]:offs[i + 1]].tolist()
                     for i in range(len(ids))
@@ -368,16 +367,15 @@ def decode_blocks(
         if not len(pdf):
             return pd.DataFrame(cols)
         outs = []
-        for term, g in pdf.groupby("term"):
-            g = g.sort_values("block_id")
-            ids, tfs = decode_term_blocks(g)
+        for term, tb in term_blocks(pdf).items():
+            ids, tfs = decode_term_blocks(tb)
             out = {
                 "doc_id": pd.Series(ids.astype(np.int64), dtype="int64"),
                 "term": pd.Series([term] * len(ids), dtype="object"),
                 "tf": pd.Series(tfs.astype(np.int32), dtype="int32"),
             }
             if include_positions:
-                pos, offs = decode_subset_positions(g, tfs)
+                pos, offs = decode_subset_positions(tb, tfs)
                 out["positions"] = pd.Series(
                     [pos[offs[i]:offs[i + 1]].tolist()
                      for i in range(len(ids))],

@@ -38,12 +38,15 @@ from ..plans.build import IndexHandle, IndexPaths, join_docmap, write_docmap
 from .score import decoded_dl
 from .segments import NormsSplit
 from .wand import (
+    _NO_MATCH,
+    SegmentTopK,
     SegmentView,
-    _empty_topk,
+    _ranked,
     batch_topk,
     empty_batch,
     empty_topk,
     per_segment,
+    result_frame,
     topk_rows,
 )
 
@@ -737,7 +740,7 @@ class MultiFieldSegmentIndex(IndexHandle):
         per_seg = per_segment(
             self.segments, self.norms, [spec["scan_terms"] + clause_terms],
             bool(spec["phrases"]) or clause_patterns or _ladder is not None,
-            lambda view: _mf_segment_topk(
+            lambda view: result_frame(view.seg, _mf_segment_topk(
                 view, s["uniq_sorted"], sorted(self_fields), s["weights"],
                 self_avgdl, k_eff, s["mode"], s["neg_phys"], s["phrases"],
                 s["pweights"], max_docs=max_docs, add_pre=add_pre,
@@ -746,7 +749,7 @@ class MultiFieldSegmentIndex(IndexHandle):
                 must_fields=s.get("must_fields"),
                 ladder=_ladder, ladder_field=_ladder_field,
                 ladder_terms=_ladder_terms, ladder_w=_ladder_w,
-            ),
+            )),
             driver=self.driver,
         )
         if with_metrics:
@@ -827,12 +830,12 @@ class MultiFieldSegmentIndex(IndexHandle):
         per_seg = per_segment(
             self.segments, self.norms, [spec["scan_terms"]],
             bool(spec["phrases"]),
-            lambda view: _mf_segment_topk(
+            lambda view: result_frame(view.seg, _mf_segment_topk(
                 view, spec["uniq_sorted"], self_fields, spec["weights"],
                 self_avgdl, k, spec["mode"], spec["neg_phys"],
                 spec["phrases"], spec["pweights"],
                 filter_phys=spec["filter_phys"], with_count=True,
-            ),
+            )),
             driver=self.driver,
         )
         return fold_count_topk(per_seg, k)
@@ -950,7 +953,7 @@ class MultiFieldSegmentIndex(IndexHandle):
 
 
 def _mf_segment_topk(
-    view: SegmentView | None,
+    view: SegmentView,
     uniq_sorted: list[str],
     fields_sorted: list[str],
     weights: dict[str, float],
@@ -973,14 +976,14 @@ def _mf_segment_topk(
     ladder_field: str | None = None,
     ladder_terms: list[str] | None = None,
     ladder_w: float = 0.0,
-) -> pd.DataFrame:
+) -> SegmentTopK:
     """Per-segment multi-field exact top-k: per logical term the docset is
     the union over fields; Must intersects logical docsets, Should unions;
     score folds sorted (term, field) contributions, then phrases in
     (joined-text, field) order (canonical fp order, identical to
     MultiFieldOracle).  A phrase matches per field via that field's
     position streams; its Must docset is the union over fields.
-    ``view``: the segment's :func:`~.wand.segment_view` (None → empty).
+    ``view``: the segment's :func:`~.wand.segment_view`.
 
     ``max_docs`` / ``add_pre``: the presorted composition — each logical
     term's driving docset is truncated to its best-pre max_docs docs (ids
@@ -989,41 +992,43 @@ def _mf_segment_topk(
     import numpy as np
 
     from ..functions.bm25 import B, K1
-    from ..functions.fieldnorm import FIELD_NORMS_TABLE
     from .segments import NORMS_SENTINEL, decode_term_blocks
+    from .wand import _DL_TABLE as dl_table
 
     phrases = phrases or []
     pweights = pweights or {}
 
-    if view is None:
-        return _empty_topk()
-    seg, by_term, deleted, norms_pdf = view
+    _seg, by_term, deleted, nm = view
     # base MUST come from a norms sentinel row: tombstone rows
     # (DELETES_TERM, appended as separate parquet parts) also land on the
     # norms side and carry base_doc_id = min deleted id, and cogroup row
-    # order is not guaranteed — iloc[0] over the whole frame could pick a
-    # tombstone and wrap every (id - base) lookup
-    _sent_mask = norms_pdf["sentinel"].str.startswith(MF_NORMS_PREFIX) | (
-        norms_pdf["sentinel"] == NORMS_SENTINEL
-    )
-    if not _sent_mask.any():
-        return _empty_topk()
-    base = int(norms_pdf.loc[_sent_mask, "base_doc_id"].iloc[0])
+    # order is not guaranteed — the first row could be a tombstone and
+    # wrap every (id - base) lookup
+    base: int | None = None
+    main_row: int | None = None
+    field_row: dict[str, int] = {}
+    for i, snt in enumerate(nm["sentinel"].tolist()):
+        if snt.startswith(MF_NORMS_PREFIX):
+            field_row.setdefault(snt[len(MF_NORMS_PREFIX):], i)
+        elif snt == NORMS_SENTINEL:
+            if main_row is None:
+                main_row = i
+        else:
+            continue
+        if base is None:
+            base = int(nm["base_doc_id"][i])
+    if base is None:
+        return _NO_MATCH
     norms_by_field = {
-        r["sentinel"][len(MF_NORMS_PREFIX):]: np.frombuffer(
-            r["norm_bytes"], dtype=np.uint8
-        )
-        for _, r in norms_pdf.iterrows()
-        if r["sentinel"].startswith(MF_NORMS_PREFIX)
+        f_: np.frombuffer(nm["norm_bytes"][i], dtype=np.uint8)
+        for f_, i in field_row.items()
     }
     pre: np.ndarray | None = None
     if add_pre:
-        main = norms_pdf[norms_pdf["sentinel"] == NORMS_SENTINEL]
-        pb = main["pre_bytes"].iloc[0] if len(main) else None
+        pb = nm["pre_bytes"][main_row] if main_row is not None else None
         if pb is None:
             raise ValueError("add_pre requires a presorted index (pre_bytes)")
         pre = np.frombuffer(pb, dtype=np.float32).astype(np.float64)
-    dl_table = FIELD_NORMS_TABLE.astype(np.float64)
 
     blk_cache: dict[str, dict] = {}
     kmetrics: dict | None = None
@@ -1035,26 +1040,19 @@ def _mf_segment_topk(
             "blocks_decoded": 0,
         }
 
-    def emit_metrics(out: pd.DataFrame) -> pd.DataFrame:
+    def metrics() -> tuple[int, int] | None:
         if kmetrics is None:
-            return out
+            return None
         # candidate-lookup decodes accumulate in blk_cache (full_union +
         # _lookup_tfs); count them here once, capped at total (a term
         # fully decoded via decode() never also populates blk_cache for
         # scoring, but phrase members can straddle both paths)
-        kmetrics["blocks_decoded"] = min(
+        return (min(
             kmetrics["blocks_total"],
             kmetrics["blocks_decoded"] + sum(
                 len(tc) for p_, tc in blk_cache.items() if p_ in weights
             ),
-        )
-        return pd.concat([out, pd.DataFrame(
-            {"segment_id": pd.Series([seg, seg], dtype="int32"),
-             "doc_id": pd.Series([-2, -3], dtype="int64"),
-             "score": pd.Series(
-                 [float(kmetrics["blocks_decoded"]),
-                  float(kmetrics["blocks_total"])], dtype="float64")}
-        )], ignore_index=True)
+        ), kmetrics["blocks_total"])
 
     decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
 
@@ -1086,10 +1084,10 @@ def _mf_segment_topk(
         and len(_present) >= 2
         and _seg_n > 0
         and all(
-            int(by_term[p]["num_docs"].sum()) > max(2 * k, _seg_n // 16)
+            by_term[p].postings > max(2 * k, _seg_n // 16)
             for p in _present
         )
-        and sum(int(by_term[p]["num_docs"].sum()) for p in _present)
+        and sum(by_term[p].postings for p in _present)
         >= (_seg_n * 3) // 5
     )
     if (mode != "must" and not phrases and not neg_phys
@@ -1113,7 +1111,7 @@ def _mf_segment_topk(
 
         present_phys = [p for p in weights if p in by_term]
         if not present_phys:
-            return _empty_topk()
+            return _NO_MATCH
         seg_n = _seg_n
         order_ = sorted(present_phys, key=lambda p: (tok(p), fld(p)))
 
@@ -1126,12 +1124,7 @@ def _mf_segment_topk(
             score_order=order_, pre=pre, base=base, excluded=deleted,
             metrics=kmetrics,
         )
-        ordr = np.lexsort((ids, -score))[:k]
-        return emit_metrics(pd.DataFrame(
-            {"segment_id": pd.Series(np.full(ordr.size, seg), dtype="int32"),
-             "doc_id": pd.Series(ids[ordr], dtype="int64"),
-             "score": pd.Series(score[ordr], dtype="float64")}
-        ))
+        return _ranked(ids, score, k, metrics=metrics())
 
     def phrase_freqs_field(ph: list[str], f_: str, cand: np.ndarray) -> np.ndarray:
         """Exact-adjacency phrase frequency per candidate in field f_
@@ -1144,7 +1137,7 @@ def _mf_segment_topk(
         sub = {m: by_term[m] for m in members}
         return _phrase_freqs(sub, members, cand)
 
-    from .wand import _cache_term_blocks, _lookup_tfs
+    from .wand import _cached_ids, _lookup_tfs
 
     def full_union(t: str, flds: list[str] | None = None) -> np.ndarray:
         """All docs containing logical term t in any field (full decode,
@@ -1161,13 +1154,7 @@ def _mf_segment_topk(
             g = by_term.get(p)
             if g is None:
                 continue
-            tc = blk_cache.setdefault(p, {})
-            need = g[~g["block_id"].isin(list(tc))]
-            if len(need):
-                _cache_term_blocks(g, need, tc)
-            parts.append(np.concatenate(
-                [tc[int(b)][0] for b in g["block_id"].to_numpy()]
-            ))
+            parts.append(_cached_ids(g, blk_cache.setdefault(p, {})))
         u = (np.unique(np.concatenate(parts)) if parts
              else np.zeros(0, dtype=np.int64))
         return u[:max_docs] if max_docs is not None else u
@@ -1191,7 +1178,7 @@ def _mf_segment_topk(
         # subset; scoring below still folds every weighted field.
         memb_flds = must_fields or fields_sorted
         sizes = {
-            t: sum(int(by_term[mf_term(f_, t)]["num_docs"].sum())
+            t: sum(by_term[mf_term(f_, t)].postings
                    for f_ in memb_flds if mf_term(f_, t) in by_term)
             for t in uniq_sorted
         }
@@ -1203,7 +1190,7 @@ def _mf_segment_topk(
             cand = None  # filled by the first phrase below
         for t in order_l[1:]:
             if cand.size == 0:
-                return _empty_topk()
+                return _NO_MATCH
             cand = cand[member_mask(t, cand, memb_flds)]
         for ph in phrases:
             if cand is None:
@@ -1227,7 +1214,7 @@ def _mf_segment_topk(
                     cand = cand[:max_docs]
                 continue
             if cand.size == 0:
-                return _empty_topk()
+                return _NO_MATCH
             m = np.zeros(cand.size, dtype=bool)
             for f_ in fields_sorted:
                 pf = phrase_freqs_field(ph, f_, cand)
@@ -1285,7 +1272,7 @@ def _mf_segment_topk(
     if deleted is not None and cand.size:
         cand = cand[~np.isin(cand, deleted)]
     if cand.size == 0:
-        return _empty_topk()
+        return _NO_MATCH
     score = np.zeros(cand.size, dtype=np.float64)
     for t in uniq_sorted:
         for f_ in fields_sorted:
@@ -1370,18 +1357,16 @@ def _mf_segment_topk(
         def dl_exact_for(f_: str):
             if f_ not in tails:
                 tails[f_] = None
-                if "meta_bytes" in norms_pdf.columns:
-                    row = norms_pdf[
-                        norms_pdf["sentinel"] == MF_NORMS_PREFIX + f_
-                    ]
-                    if len(row) and row["meta_bytes"].iloc[0] is not None:
-                        vals = varint_decode(bytes(row["meta_bytes"].iloc[0]))
-                        span = len(np.frombuffer(
-                            bytes(row["norm_bytes"].iloc[0]), dtype=np.uint8
-                        ))
-                        t = vals[2:2 + span]
-                        if len(t) == span:
-                            tails[f_] = np.asarray(t, dtype=np.int64)
+                i = field_row.get(f_)
+                if (
+                    "meta_bytes" in nm and i is not None
+                    and nm["meta_bytes"][i] is not None
+                ):
+                    vals = varint_decode(bytes(nm["meta_bytes"][i]))
+                    span = norms_by_field[f_].size
+                    t = vals[2:2 + span]
+                    if len(t) == span:
+                        tails[f_] = np.asarray(t, dtype=np.int64)
             return tails[f_]
 
         drop = np.zeros(cand.size, dtype=bool)
@@ -1414,24 +1399,8 @@ def _mf_segment_topk(
         # bare $discard with NO other lowered instruction: every doc is
         # discarded (same contract as the single-field kernel)
         cand, score = cand[:0], score[:0]
-    n_matched = int(cand.size)
-    ordr = np.lexsort((cand, -score))[:k]
-    out = pd.DataFrame(
-        {"segment_id": pd.Series(np.full(ordr.size, seg), dtype="int32"),
-         "doc_id": pd.Series(cand[ordr], dtype="int64"),
-         "score": pd.Series(score[ordr], dtype="float64")}
-    )
-    if with_count:
-        # count-alongside-top-k: one sentinel row per segment carries the
-        # full pre-cut match count (doc_id −1 never collides)
-        out = pd.concat(
-            [out, pd.DataFrame(
-                {"segment_id": pd.Series([seg], dtype="int32"),
-                 "doc_id": pd.Series([-1], dtype="int64"),
-                 "score": pd.Series([float(n_matched)], dtype="float64")}
-            )], ignore_index=True,
-        )
-    return emit_metrics(out)
+    return _ranked(cand, score, k, int(cand.size) if with_count else None,
+                   metrics())
 
 
 class MultiFieldOracle:

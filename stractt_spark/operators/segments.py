@@ -37,6 +37,7 @@ segment, and merges re-encode through the same :func:`segment_rows`.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
 from typing import NamedTuple
 
 import numpy as np
@@ -489,25 +490,94 @@ def split_unified(unified: DataFrame) -> tuple[DataFrame, DataFrame]:
     return unified.filter(~UNIFIED_NORMS.rows()), UNIFIED_NORMS.select(unified)
 
 
-def decode_term_blocks(
-    block_pdf: pd.DataFrame,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Decode ALL blocks of one (segment, term) — rows must be the complete
-    contiguous block set sorted by block_id.  One vectorized varint pass
-    over the concatenated byte stream, then a single cumsum.
+@dataclass(frozen=True, eq=False)
+class TermBlocks:
+    """One (segment, term)'s posting blocks as read-only numpy columns,
+    ascending by ``block_id`` — the array form every decode and every
+    per-segment kernel indexes (:func:`term_blocks` builds them).  Block
+    metadata is int64; the byte streams are object arrays of ``bytes``
+    (``pos_bytes`` None when the scan read no positions).  ``postings``
+    is the term's total posting count (Σ ``num_docs``); ``len()`` is its
+    block count.  A block subset is an index take (:meth:`take`), not a
+    frame filter."""
+
+    block_id: np.ndarray
+    first_doc_id: np.ndarray
+    last_doc_id: np.ndarray
+    num_docs: np.ndarray
+    max_tf: np.ndarray
+    min_norm_id: np.ndarray
+    id_bytes: np.ndarray
+    tf_bytes: np.ndarray
+    pos_bytes: np.ndarray | None
+    postings: int
+
+    def __len__(self) -> int:
+        return self.block_id.size
+
+    def take(self, rows: np.ndarray | slice) -> TermBlocks:
+        """The blocks at positions ``rows`` (ascending keeps block order)."""
+        nd = self.num_docs[rows]
+        return TermBlocks(
+            self.block_id[rows], self.first_doc_id[rows],
+            self.last_doc_id[rows], nd, self.max_tf[rows],
+            self.min_norm_id[rows], self.id_bytes[rows], self.tf_bytes[rows],
+            None if self.pos_bytes is None else self.pos_bytes[rows],
+            int(nd.sum()),
+        )
+
+
+_INT_COLS = ("block_id", "first_doc_id", "last_doc_id", "num_docs",
+             "max_tf", "min_norm_id")
+
+
+def term_blocks(blocks: pd.DataFrame) -> dict[str, TermBlocks]:
+    """Block rows of ONE segment → term → :class:`TermBlocks`: one
+    lexsort on (term, block_id), then each term's slice of the sorted
+    columns (views of read-only arrays, so no kernel can mutate them).
+    Rows need every :data:`SEGMENTS_SCHEMA` column except the optional
+    ``pos_bytes``."""
+    if not len(blocks):
+        return {}
+    codes, uniq = pd.factorize(blocks["term"].to_numpy(), sort=True)
+    order = np.lexsort((blocks["block_id"].to_numpy(), codes))
+    codes = codes[order]
+    cols: list[np.ndarray | None] = []
+    for c in _INT_COLS + ("id_bytes", "tf_bytes", "pos_bytes"):
+        if c == "pos_bytes" and c not in blocks.columns:
+            cols.append(None)
+            continue
+        a = blocks[c].to_numpy()[order]
+        if c in _INT_COLS:
+            a = a.astype(np.int64, copy=False)
+        a.flags.writeable = False
+        cols.append(a)
+    starts = np.flatnonzero(np.r_[True, codes[1:] != codes[:-1]])
+    ends = np.r_[starts[1:], codes.size]
+    totals = np.add.reduceat(cols[3], starts)
+    return {
+        uniq[codes[s]]: TermBlocks(
+            *(None if a is None else a[s:e] for a in cols), int(n)
+        )
+        for s, e, n in zip(starts.tolist(), ends.tolist(), totals.tolist())
+    }
+
+
+def decode_term_blocks(tb: TermBlocks) -> tuple[np.ndarray, np.ndarray]:
+    """Decode ALL blocks of one (segment, term) — the complete contiguous
+    block set.  One vectorized varint pass over the concatenated byte
+    stream, then a single cumsum.
 
     → (doc_ids uint64, tfs uint64)
     """
     from ..functions.codec import varint_decode
 
-    id_stream = b"".join(block_pdf["id_bytes"].values)
-    tf_stream = b"".join(block_pdf["tf_bytes"].values)
-    deltas = varint_decode(id_stream)
+    deltas = varint_decode(b"".join(tb.id_bytes))
     ids = np.cumsum(deltas, dtype=np.uint64)
-    return ids, varint_decode(tf_stream)
+    return ids, varint_decode(b"".join(tb.tf_bytes))
 
 
-def decode_block_subset(rows: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+def decode_block_subset(tb: TermBlocks) -> tuple[np.ndarray, np.ndarray]:
     """Decode an arbitrary subset of blocks of one (segment, term).
 
     Uses each block's absolute ``first_doc_id`` to re-anchor the delta
@@ -516,21 +586,18 @@ def decode_block_subset(rows: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
     """
     from ..functions.codec import varint_decode
 
-    id_stream = b"".join(rows["id_bytes"].values)
-    tf_stream = b"".join(rows["tf_bytes"].values)
-    deltas = varint_decode(id_stream)
+    deltas = varint_decode(b"".join(tb.id_bytes))
     raw = np.cumsum(deltas, dtype=np.uint64)
-    counts = rows["num_docs"].to_numpy(dtype=np.int64)
+    counts = tb.num_docs
     starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    firsts = rows["first_doc_id"].to_numpy(dtype=np.int64).astype(np.uint64)
     # correction so each block's first id equals its stored first_doc_id
-    corr = firsts - raw[starts]
+    corr = tb.first_doc_id.astype(np.uint64) - raw[starts]
     ids = raw + np.repeat(corr, counts)
-    return ids, varint_decode(tf_stream)
+    return ids, varint_decode(b"".join(tb.tf_bytes))
 
 
 def decode_subset_positions(
-    rows: pd.DataFrame, tfs: np.ndarray
+    tb: TermBlocks, tfs: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
     """Decode the position streams of a block subset (any contiguity —
     the delta chain resets at every posting row, so blocks are
@@ -541,7 +608,7 @@ def decode_subset_positions(
     """
     from ..functions.codec import varint_decode
 
-    pos_stream = b"".join(rows["pos_bytes"].values)
+    pos_stream = b"".join(tb.pos_bytes)
     deltas = varint_decode(pos_stream)
     raw = np.cumsum(deltas, dtype=np.uint64)
     offsets = np.zeros(len(tfs) + 1, dtype=np.int64)

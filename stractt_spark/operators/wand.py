@@ -14,14 +14,21 @@ src/inverted_index.rs:179-190 and src/collector.rs:105-211):
    predicate reaches the parquet read on both sites (pyarrow filter on
    the driver, PushedFilters in Spark);
 3. per segment, its blocks paired with its norms rows (a cogroup on the
-   Spark site, the same frames read in-process on the driver), an Arrow
-   kernel scores candidates and returns that segment's top-k;
+   Spark site, the same frames read in-process on the driver) become ONE
+   columnar :class:`SegmentView` — a read-only :class:`~.segments.
+   TermBlocks` of numpy block arrays per term, built with one lexsort —
+   shared by every query of the request; a kernel scores candidates over
+   those arrays and returns that segment's top-k as numpy arrays
+   (:class:`SegmentTopK`), and the dispatch builds one pandas frame per
+   segment per request;
 4. global top-k by (score desc, doc_id asc) over the tiny per-segment
    results — Catalyst's TakeOrderedAndProject on the Spark site, a
    driver-side sort into a local relation (no Spark job on ``collect()``)
    on the driver site.
 
-Per-segment kernel (numpy, no per-posting Python):
+Per-segment kernel (numpy, no per-posting Python and no pandas: block
+subsets are index takes on the view's arrays; both the single-field and
+the multi-field kernel share this array block core):
 
 * **must (AND)** — block-granular leapfrog intersection, rarest term
   first (the reference orders docsets by size_hint,
@@ -70,33 +77,31 @@ from .segments import (
     ATTR_PREFIX,
     DELETES_TERM,
     NormsSplit,
+    TermBlocks,
     attr_term,
     decode_block_subset,
     decode_subset_positions,
     decode_term_blocks,
+    term_blocks,
 )
 
 _RESULT_SCHEMA = "segment_id int, doc_id long, score double"
 _BATCH_SCHEMA = "query_id string, doc_id long, score double"
 
 
-def _empty_topk() -> pd.DataFrame:
-    """A kernel's no-match result (``_RESULT_SCHEMA``)."""
-    return _empty_frame(_RESULT_SCHEMA)
-
-
 class SegmentView(NamedTuple):
-    """One segment's cogrouped inputs, prepared ONCE per segment and
-    shared read-only by every query scored against it: ``by_term`` maps
-    each scanned term to its block frame sorted by ``block_id`` (no
-    tombstone rows), ``deleted`` holds the sorted tombstoned doc ids
-    (operators/deletes.py) or None, ``norms`` is the segment's norms-side
-    frame as the cogroup delivered it.  Kernels must not mutate it."""
+    """One segment's cogrouped inputs as read-only numpy columns,
+    prepared ONCE per segment and shared by every query scored against
+    it: ``by_term`` maps each scanned term to its :class:`TermBlocks`
+    (no tombstone rows), ``deleted`` holds the sorted tombstoned doc ids
+    (operators/deletes.py) or None, ``norms`` maps each norms-side column
+    to its array (one entry per norms row, in cogroup order).  Every
+    array is non-writeable and both mappings are read-only proxies."""
 
     seg: int
-    by_term: Mapping[str, pd.DataFrame]
+    by_term: Mapping[str, TermBlocks]
     deleted: np.ndarray | None
-    norms: pd.DataFrame
+    norms: Mapping[str, np.ndarray]
 
 
 def segment_view(blocks: pd.DataFrame, norms: pd.DataFrame) -> SegmentView | None:
@@ -107,10 +112,16 @@ def segment_view(blocks: pd.DataFrame, norms: pd.DataFrame) -> SegmentView | Non
     norms side (``sentinel`` / ``norm_bytes``)."""
     if len(blocks) == 0 or len(norms) == 0:
         return None
-    by_term = {t: g.sort_values("block_id") for t, g in blocks.groupby("term")}
-    raw = list(by_term.pop(DELETES_TERM)["id_bytes"]) if DELETES_TERM in by_term else []
-    if "sentinel" in norms.columns:
-        raw += list(norms.loc[norms["sentinel"] == DELETES_TERM, "norm_bytes"])
+    by_term = term_blocks(blocks)
+    tomb = by_term.pop(DELETES_TERM, None)
+    raw = list(tomb.id_bytes) if tomb is not None else []
+    cols = {}
+    for c in norms.columns:
+        a = norms[c].to_numpy()
+        a.flags.writeable = False
+        cols[c] = a
+    if "sentinel" in cols:
+        raw += list(cols["norm_bytes"][cols["sentinel"] == DELETES_TERM])
     deleted = None
     if raw:
         deleted = np.unique(np.concatenate(
@@ -118,7 +129,70 @@ def segment_view(blocks: pd.DataFrame, norms: pd.DataFrame) -> SegmentView | Non
         ))
         deleted.flags.writeable = False
     return SegmentView(int(blocks["segment_id"].iloc[0]),
-                       MappingProxyType(by_term), deleted, norms)
+                       MappingProxyType(by_term), deleted,
+                       MappingProxyType(cols))
+
+
+class SegmentTopK(NamedTuple):
+    """One kernel call's result: the segment's top-k ``ids`` / ``scores``
+    ranked (score desc, doc_id asc), the pre-cut match ``count`` when the
+    call asked for it (``with_count``), and ``metrics`` = (tf blocks
+    decoded, tf blocks total) when it asked for them
+    (``with_metrics``)."""
+
+    ids: np.ndarray
+    scores: np.ndarray
+    count: int | None = None
+    metrics: tuple[int, int] | None = None
+
+    def rows(self) -> tuple[np.ndarray, np.ndarray]:
+        """(doc_id, score) rows: the top-k, then the sentinel rows —
+        doc_id −1 carries the count, −2 / −3 the blocks decoded / total.
+        Negative ids never collide with real docs; the fold helpers
+        split them off."""
+        ids, scores = [self.ids], [self.scores]
+        if self.count is not None:
+            ids.append(np.array([-1], dtype=np.int64))
+            scores.append(np.array([float(self.count)]))
+        if self.metrics is not None:
+            ids.append(np.array([-2, -3], dtype=np.int64))
+            scores.append(np.array(self.metrics, dtype=np.float64))
+        if len(ids) == 1:
+            return self.ids, self.scores
+        return np.concatenate(ids), np.concatenate(scores)
+
+
+_NO_MATCH = SegmentTopK(np.zeros(0, dtype=np.int64), np.zeros(0))
+
+
+def _ranked(
+    ids: np.ndarray,
+    score: np.ndarray,
+    k: int,
+    count: int | None = None,
+    metrics: tuple[int, int] | None = None,
+) -> SegmentTopK:
+    """The bounded top-k with the FULL tie order (score desc, doc_id
+    asc): a bare argpartition cut breaks score ties at the k boundary by
+    array position, dropping the lower doc_id the oracle would keep."""
+    ordr = np.lexsort((ids, -score))[:k]
+    return SegmentTopK(ids[ordr].astype(np.int64, copy=False),
+                       score[ordr].astype(np.float64, copy=False),
+                       count, metrics)
+
+
+def result_frame(seg: int, res: SegmentTopK) -> pd.DataFrame:
+    """A single query's per-segment rows (``_RESULT_SCHEMA``), sentinel
+    rows included — the one pandas frame of the call."""
+    ids, scores = res.rows()
+    return pd.DataFrame({
+        "segment_id": np.full(ids.size, seg, dtype=np.int32),
+        "doc_id": ids, "score": scores,
+    })
+
+
+_DL_TABLE = FIELD_NORMS_TABLE.astype(np.float64)
+_DL_TABLE.flags.writeable = False
 
 
 def _tf_comp(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
@@ -127,15 +201,13 @@ def _tf_comp(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
     return tf / (tf + norm)
 
 
-def _blocks_for_candidates(g: pd.DataFrame, cand: np.ndarray) -> pd.DataFrame | None:
-    """Block skip: keep only blocks whose [first,last] doc range contains a
-    candidate (searchsorted on the sorted candidate ids)."""
-    firsts = g["first_doc_id"].to_numpy(dtype=np.int64)
-    lasts = g["last_doc_id"].to_numpy(dtype=np.int64)
-    lo = np.searchsorted(cand, firsts, side="left")
-    hi = np.searchsorted(cand, lasts, side="right")
-    keep = hi > lo
-    return g[keep] if keep.any() else None
+def _blocks_for_candidates(g: TermBlocks, cand: np.ndarray) -> np.ndarray:
+    """Block skip: the positions of the blocks whose [first,last] doc
+    range contains a candidate (searchsorted on the sorted candidate
+    ids), ascending."""
+    lo = np.searchsorted(cand, g.first_doc_id, side="left")
+    hi = np.searchsorted(cand, g.last_doc_id, side="right")
+    return np.flatnonzero(hi > lo)
 
 
 def sloppy_chain_count(pos_lists: list[np.ndarray], slop: int) -> int:
@@ -159,7 +231,7 @@ def sloppy_chain_count(pos_lists: list[np.ndarray], slop: int) -> int:
 
 
 def _candidate_positions(
-    by_term: dict[str, pd.DataFrame], terms: list[str], cand: np.ndarray
+    by_term: Mapping[str, TermBlocks], terms: list[str], cand: np.ndarray
 ):
     """Decode candidate-intersecting blocks of each term WITH positions →
     per term (sorted doc ids, positions flat, row offsets), or None if a
@@ -167,9 +239,10 @@ def _candidate_positions(
     out = []
     for t in terms:
         g = by_term.get(t)
-        sub = _blocks_for_candidates(g, cand) if g is not None else None
-        if sub is None:
+        rows = _blocks_for_candidates(g, cand) if g is not None else None
+        if rows is None or not rows.size:
             return None
+        sub = g.take(rows)
         ids, tfs = decode_block_subset(sub)
         pos, offs = decode_subset_positions(sub, tfs)
         out.append((ids.astype(np.int64), pos, offs))
@@ -177,7 +250,7 @@ def _candidate_positions(
 
 
 def _phrase_freqs(
-    by_term: dict[str, pd.DataFrame], ph: list[str], cand: np.ndarray
+    by_term: Mapping[str, TermBlocks], ph: list[str], cand: np.ndarray
 ) -> np.ndarray:
     """Exact-adjacency phrase frequency per candidate doc (slop 0) from the
     compressed position streams — decodes only candidate-intersecting
@@ -245,7 +318,7 @@ def _gather_ranges(flat: np.ndarray, starts: np.ndarray,
 
 
 def _ladder_freqs(
-    by_term: dict[str, pd.DataFrame],
+    by_term: Mapping[str, TermBlocks],
     terms: list[str],
     cand: np.ndarray,
     slops: list[int],
@@ -335,23 +408,34 @@ def _ladder_freqs(
 
 
 def _cache_term_blocks(
-    g: pd.DataFrame, rows: pd.DataFrame, tcache: dict
+    g: TermBlocks, rows: list[int], tcache: dict[int, tuple]
 ) -> None:
-    """Decode ``rows`` (a block subset of one term, sorted by block_id) in
+    """Decode the blocks of one term at positions ``rows`` (ascending) in
     one vectorized pass and store each block's (ids, tfs) under its
-    block_id.  Already-cached blocks must be filtered out by the caller."""
-    ids_new, tfs_new = decode_block_subset(rows)
-    counts = rows["num_docs"].to_numpy(dtype=np.int64)
-    offs = np.concatenate(([0], np.cumsum(counts)))
-    for i, b in enumerate(rows["block_id"].to_numpy()):
-        tcache[int(b)] = (
-            ids_new[offs[i]:offs[i + 1]].astype(np.int64),
-            tfs_new[offs[i]:offs[i + 1]].astype(np.int64),
-        )
+    position.  Already-cached blocks must be filtered out by the
+    caller."""
+    sub = g.take(np.asarray(rows, dtype=np.int64))
+    ids_new, tfs_new = decode_block_subset(sub)
+    ids_new = ids_new.astype(np.int64)
+    tfs_new = tfs_new.astype(np.int64)
+    offs = np.concatenate(([0], np.cumsum(sub.num_docs))).tolist()
+    for i, r in enumerate(rows):
+        tcache[r] = (ids_new[offs[i]:offs[i + 1]],
+                     tfs_new[offs[i]:offs[i + 1]])
+
+
+def _cached_ids(g: TermBlocks, tcache: dict[int, tuple]) -> np.ndarray:
+    """Every doc id of one term, its blocks decoded into ``tcache``
+    (those not cached yet in one pass)."""
+    rows = range(len(g))
+    need = [r for r in rows if r not in tcache]
+    if need:
+        _cache_term_blocks(g, need, tcache)
+    return np.concatenate([tcache[r][0] for r in rows])
 
 
 def _lookup_tfs(
-    by_term: dict[str, pd.DataFrame],
+    by_term: Mapping[str, TermBlocks],
     t: str,
     cand: np.ndarray,
     cache: dict[str, dict],
@@ -362,18 +446,17 @@ def _lookup_tfs(
     g = by_term.get(t)
     if g is None:
         return None
-    sub = _blocks_for_candidates(g, cand)
-    if sub is None:
+    rows = _blocks_for_candidates(g, cand).tolist()
+    if not rows:
         return None
     tcache = cache.setdefault(t, {})
-    sub_bids = sub["block_id"].to_numpy(dtype=np.int64)
-    need = [int(b) for b in sub_bids if int(b) not in tcache]
+    need = [r for r in rows if r not in tcache]
     if need:
-        _cache_term_blocks(g, sub[sub["block_id"].isin(need)], tcache)
+        _cache_term_blocks(g, need, tcache)
     # blocks are ascending doc ranges, so concatenation in block order is
     # globally sorted
-    ids = np.concatenate([tcache[int(b)][0] for b in sub_bids])
-    tfs = np.concatenate([tcache[int(b)][1] for b in sub_bids])
+    ids = np.concatenate([tcache[r][0] for r in rows])
+    tfs = np.concatenate([tcache[r][1] for r in rows])
     pos = np.searchsorted(ids, cand)
     pos_c = np.minimum(pos, ids.size - 1)
     match = ids[pos_c] == cand
@@ -383,7 +466,7 @@ def _lookup_tfs(
 
 
 def _score_candidates(
-    by_term: dict[str, pd.DataFrame],
+    by_term: Mapping[str, TermBlocks],
     present_sorted: list[str],
     qweights: dict[str, float],
     cand: np.ndarray,
@@ -473,7 +556,7 @@ def _sorted_merge_disjoint(a: np.ndarray, b: np.ndarray) -> np.ndarray:
 
 
 def _should_topk_blockmax(
-    by_term: dict[str, pd.DataFrame],
+    by_term: Mapping[str, TermBlocks],
     present: list[str],
     qweights: dict[str, float],
     avgdl: float,
@@ -519,7 +602,7 @@ def _should_topk_blockmax(
     present_s = score_order if score_order is not None else sorted(present)
     dl_for = dl_of_term or (lambda _t, ids: dl_of(ids))
     avgdl_for = avgdl_term or (lambda _t: avgdl)
-    counts = {t: int(by_term[t]["num_docs"].sum()) for t in present}
+    counts = {t: by_term[t].postings for t in present}
     cheap_limit = max(2 * k, seg_n // 16)
     cheap = [t for t in present if counts[t] <= cheap_limit]
     expensive = [t for t in present if counts[t] > cheap_limit]
@@ -550,13 +633,8 @@ def _should_topk_blockmax(
             kth = np.partition(allsc, allsc.size - k)[allsc.size - k]
 
     if cheap:
-        seeds = []
-        for t in cheap:
-            g = by_term[t]
-            tcache = cache.setdefault(t, {})
-            _cache_term_blocks(g, g, tcache)
-            seeds.append(np.concatenate([tcache[int(b)][0] for b in
-                                         g["block_id"].to_numpy()]))
+        seeds = [_cached_ids(by_term[t], cache.setdefault(t, {}))
+                 for t in cheap]
         seed_ids = np.unique(np.concatenate(seeds))
         if pre is not None and seed_ids.size > k:
             # PRESORTED seed pruning: exact scoring of a seed doc costs
@@ -578,11 +656,7 @@ def _should_topk_blockmax(
                 for t in present:
                     g = by_term[t]
                     t_ub = qweights[t] * _tf_comp(
-                        g["max_tf"].to_numpy(dtype=np.float64),
-                        dl_table[
-                            g["min_norm_id"].to_numpy(dtype=np.int64)
-                        ],
-                        avgdl_for(t),
+                        g.max_tf, dl_table[g.min_norm_id], avgdl_for(t),
                     )
                     ub_sum += float(t_ub.max()) if t_ub.size else 0.0
                 bound = pre[(rest - base).astype(np.int64)] + ub_sum + extra_ub
@@ -592,14 +666,11 @@ def _should_topk_blockmax(
             bank(seed_ids)
 
     if expensive:
-        firsts = {t: by_term[t]["first_doc_id"].to_numpy(dtype=np.int64)
-                  for t in expensive}
-        lasts = {t: by_term[t]["last_doc_id"].to_numpy(dtype=np.int64)
-                 for t in expensive}
+        firsts = {t: by_term[t].first_doc_id for t in expensive}
+        lasts = {t: by_term[t].last_doc_id for t in expensive}
         ubs = {
             t: qweights[t] * _tf_comp(
-                by_term[t]["max_tf"].to_numpy(dtype=np.float64),
-                dl_table[by_term[t]["min_norm_id"].to_numpy(dtype=np.int64)],
+                by_term[t].max_tf, dl_table[by_term[t].min_norm_id],
                 avgdl_for(t),
             )
             for t in expensive
@@ -647,12 +718,10 @@ def _should_topk_blockmax(
             new_parts = []
             for j in chunk:
                 t, row = flat_t[j], flat_row[j]
-                g = by_term[t]
-                bid = int(g["block_id"].iloc[row])
                 tcache = cache.setdefault(t, {})
-                if bid not in tcache:
-                    _cache_term_blocks(g, g.iloc[[row]], tcache)
-                new_parts.append(tcache[bid][0])
+                if row not in tcache:
+                    _cache_term_blocks(by_term[t], [row], tcache)
+                new_parts.append(tcache[row][0])
             cand = np.unique(np.concatenate(new_parts))
             # sorted membership + linear merge keep the banked-id check
             # O(m log n) per chunk (round-2 used isin + concat: quadratic)
@@ -671,7 +740,7 @@ def _should_topk_blockmax(
 
 
 def _clause_match_mask(
-    by_term: dict[str, pd.DataFrame],
+    by_term: Mapping[str, TermBlocks],
     clause: dict,
     ids: np.ndarray,
     dl_exact: np.ndarray | None,
@@ -692,10 +761,10 @@ def _clause_match_mask(
         g = by_term.get(st)
         if g is None:
             return np.zeros(ids.size, dtype=bool)
-        sub = _blocks_for_candidates(g, ids)
-        if sub is None:
+        rows = _blocks_for_candidates(g, ids)
+        if not rows.size:
             return np.zeros(ids.size, dtype=bool)
-        s_ids, _ = decode_block_subset(sub)
+        s_ids, _ = decode_block_subset(g.take(rows))
         mask &= _sorted_isin(s_ids.astype(np.int64), ids)
     pterms = clause.get("pattern_terms")
     if pterms:
@@ -734,7 +803,7 @@ def _clause_match_mask(
 
 
 def _segment_topk_kernel(
-    view: SegmentView | None,
+    view: SegmentView,
     terms: list[str],
     neg_terms: list[str],
     qweights: dict[str, float],
@@ -753,8 +822,8 @@ def _segment_topk_kernel(
     with_metrics: bool = False,
     ladder: tuple[tuple[float, int], ...] | None = None,
     ladder_w: float = 0.0,
-) -> pd.DataFrame:
-    """Top-k of one query over one segment's ``view`` (None → empty).
+) -> SegmentTopK:
+    """Top-k of one query over one segment's ``view``.
 
     ``ladder``: (boost, slop) proximity rungs scored IN-RETRIEVAL as
     Should clauses over the full query-term sequence (reference
@@ -780,26 +849,22 @@ def _segment_topk_kernel(
     (signal.rs:296-333).  The bm25-threshold pruning branches are bypassed
     in this mode (their banked thresholds don't include pre).
 
-    ``with_metrics``: append two sentinel rows per segment carrying the
-    pruning win — doc_id −2 → tf blocks DECODED for the scoring terms,
-    doc_id −3 → tf blocks TOTAL (position-stream decodes for phrase
-    verification are not counted).  Paths that evaluate every block
-    (TAAT fallback) honestly report decoded == total."""
+    ``with_metrics``: the result carries the pruning win — tf blocks
+    DECODED for the scoring terms and tf blocks TOTAL (position-stream
+    decodes for phrase verification are not counted).  Paths that
+    evaluate every block (TAAT fallback) honestly report decoded ==
+    total.  ``with_count``: the result carries the pre-cut match
+    count."""
     phrases = phrases or []
     pweights = pweights or []
     filter_terms = filter_terms or []
-    if view is None:
-        return _empty_topk()
-    seg, by_term, deleted, norm_row = view
-    base = int(norm_row["base_doc_id"].iloc[0])
-    norms = np.frombuffer(norm_row["norm_bytes"].iloc[0], dtype=np.uint8)
-    dl_table = FIELD_NORMS_TABLE.astype(np.float64)
+    _seg, by_term, deleted, norm_row = view
+    base = int(norm_row["base_doc_id"][0])
+    norms = np.frombuffer(norm_row["norm_bytes"][0], dtype=np.uint8)
+    dl_table = _DL_TABLE
     pre: np.ndarray | None = None
     if add_pre:
-        pb = (
-            norm_row["pre_bytes"].iloc[0]
-            if "pre_bytes" in norm_row.columns else None
-        )
+        pb = norm_row["pre_bytes"][0] if "pre_bytes" in norm_row else None
         if pb is None:
             raise ValueError("add_pre requires a presorted index (pre_bytes)")
         pre = np.frombuffer(pb, dtype=np.float32).astype(np.float64)
@@ -822,11 +887,11 @@ def _segment_topk_kernel(
     # Must-filters (attr terms): a segment lacking the filter term has no
     # matching docs at all
     if any(ft not in by_term for ft in filter_terms):
-        return _empty_topk()
+        return _NO_MATCH
     if mode == "must" and (len(present) < len(terms) or not phrase_ok):
-        return _empty_topk()
+        return _NO_MATCH
     if not present and not (phrases and phrase_ok):
-        return _empty_topk()
+        return _NO_MATCH
 
     kmetrics: dict | None = None
     if with_metrics:
@@ -855,12 +920,12 @@ def _segment_topk_kernel(
         for t in order_[1:]:
             if ids_.size == 0:
                 return None
-            sub = _blocks_for_candidates(by_term[t], ids_)
-            if sub is None:
+            rows = _blocks_for_candidates(by_term[t], ids_)
+            if not rows.size:
                 return None
             if kmetrics is not None and count_metrics and t in qweights:
-                kmetrics["blocks_decoded"] += len(sub)
-            t_ids, t_tfs = decode_block_subset(sub)
+                kmetrics["blocks_decoded"] += rows.size
+            t_ids, t_tfs = decode_block_subset(by_term[t].take(rows))
             t_ids = t_ids.astype(np.int64)
             pos = np.searchsorted(t_ids, ids_)
             pos_c = np.minimum(pos, t_ids.size - 1)
@@ -880,7 +945,7 @@ def _segment_topk_kernel(
         ``count_metrics=False`` for auxiliary rescoring passes (the
         proximity ladder) whose re-decodes would otherwise push
         blocks_decoded past blocks_total in the pruning metric."""
-        order_ = sorted(required, key=lambda t: int(by_term[t]["num_docs"].sum()))
+        order_ = sorted(required, key=lambda t: by_term[t].postings)
         first = order_[0]
         if kmetrics is not None and count_metrics and first in qweights:
             kmetrics["blocks_decoded"] += len(by_term[first])
@@ -940,16 +1005,14 @@ def _segment_topk_kernel(
         required = list(dict.fromkeys(
             present + [t for ph in phrases for t in ph] + filter_terms
         ))
-        order_ = sorted(
-            required, key=lambda t: int(by_term[t]["num_docs"].sum())
-        )
+        order_ = sorted(required, key=lambda t: by_term[t].postings)
         first = order_[0]
         g_first = by_term[first]
         ub_query = float(sum(qweights[t] for t in present) + sum(pweights))
         excluded_sorted = (
             np.sort(excluded) if excluded is not None else None
         )
-        firsts_arr = g_first["first_doc_id"].to_numpy(dtype=np.int64)
+        firsts_arr = g_first.first_doc_id
         bids: list[np.ndarray] = []
         bscs: list[np.ndarray] = []
         n_banked = 0
@@ -960,7 +1023,7 @@ def _segment_topk_kernel(
                 pre[int(firsts_arr[c0] - base)] + ub_query + extra_ub < kth
             ):
                 break  # every remaining doc's score is below the k-th
-            sub = g_first.iloc[c0:c0 + CHUNK]
+            sub = g_first.take(slice(c0, c0 + CHUNK))
             if kmetrics is not None and first in qweights:
                 kmetrics["blocks_decoded"] += len(sub)
             c_ids, c_tfs = decode_block_subset(sub)
@@ -1040,7 +1103,7 @@ def _segment_topk_kernel(
         ))
         res = intersect_terms(required, track=present)
         if res is None:
-            return _empty_topk()
+            return _NO_MATCH
         ids, cand_tfs = res
         # phrase adjacency verification narrows candidates further
         pfs: list[np.ndarray] = [np.zeros(0)] * len(phrases)
@@ -1048,7 +1111,7 @@ def _segment_topk_kernel(
             pf = _phrase_freqs(by_term, phrases[i], ids)
             keep = pf > 0
             if not keep.any():
-                return _empty_topk()
+                return _NO_MATCH
             ids = ids[keep]
             for prev in cand_tfs:
                 cand_tfs[prev] = cand_tfs[prev][keep]
@@ -1056,7 +1119,7 @@ def _segment_topk_kernel(
                 pfs[j] = pfs[j][keep]
             pfs[i] = pf[keep]
         if ids.size == 0:
-            return _empty_topk()
+            return _NO_MATCH
         dls = dl_of(ids)
         score = np.zeros(ids.size, dtype=np.float64)
         for t in sorted(present):  # canonical fp order: terms first
@@ -1082,11 +1145,7 @@ def _segment_topk_kernel(
         t = present[0]
         g = by_term[t]
         w = qweights[t]
-        ub = w * _tf_comp(
-            g["max_tf"].to_numpy(dtype=np.float64),
-            dl_table[g["min_norm_id"].to_numpy(dtype=np.int64)],
-            avgdl,
-        )
+        ub = w * _tf_comp(g.max_tf, dl_table[g.min_norm_id], avgdl)
         order_b = np.argsort(-ub)
         ids_parts: list[np.ndarray] = []
         score_parts: list[np.ndarray] = []
@@ -1099,7 +1158,7 @@ def _segment_topk_kernel(
             # equal-score doc that wins the doc_id tie-break
             if n_collected >= k and ub[chunk[0]] + extra_ub < kth:
                 break  # no remaining block can beat the k-th best
-            sub = g.iloc[np.sort(chunk)]
+            sub = g.take(np.sort(chunk))
             if kmetrics is not None:
                 kmetrics["blocks_decoded"] += len(sub)
             c_ids, c_tfs = decode_block_subset(sub)
@@ -1149,11 +1208,10 @@ def _segment_topk_kernel(
             # the pre spread gives real skew regardless of tf.
             pre is None
             and all(
-                int(by_term[t]["num_docs"].sum())
-                > max(2 * k, norms.size // 16)
+                by_term[t].postings > max(2 * k, norms.size // 16)
                 for t in present
             )
-            and sum(int(by_term[t]["num_docs"].sum()) for t in present)
+            and sum(by_term[t].postings for t in present)
             >= (norms.size * 3) // 5
         )
     ):
@@ -1284,10 +1342,7 @@ def _segment_topk_kernel(
         # clauses, goggles/mod.rs:166-260) — the collector below sees
         # FINAL scores, so no uncut base and no driver-side match sets
         dl_exact: np.ndarray | None = None
-        mb = (
-            norm_row["meta_bytes"].iloc[0]
-            if "meta_bytes" in norm_row.columns else None
-        )
+        mb = norm_row["meta_bytes"][0] if "meta_bytes" in norm_row else None
         if mb is not None:
             from ..functions.codec import varint_decode
 
@@ -1315,44 +1370,11 @@ def _segment_topk_kernel(
         # "some other instruction", so every doc is discarded — the
         # reference and the DataFrame fallback both return empty here
         ids, score = ids[:0], score[:0]
-    n_matched = int(ids.size)
-    # bounded top-k with the FULL tie order (score desc, doc_id asc): a
-    # bare argpartition cut breaks score ties at the k boundary by array
-    # position, dropping the lower doc_id the oracle would keep
-    ordr = np.lexsort((ids, -score))[:k]
-    ids, score = ids[ordr], score[ordr]
-    out = pd.DataFrame(
-        {
-            "segment_id": pd.Series(np.full(ids.size, seg), dtype="int32"),
-            "doc_id": pd.Series(ids, dtype="int64"),
-            "score": pd.Series(score, dtype="float64"),
-        }
+    return _ranked(
+        ids, score, k, int(ids.size) if with_count else None,
+        None if kmetrics is None else
+        (kmetrics["blocks_decoded"], kmetrics["blocks_total"]),
     )
-    if with_count:
-        # count-alongside-top-k (reference counting collector): one
-        # sentinel row per segment carries the full pre-cut match count;
-        # the pruned fast paths are bypassed in this mode, so the count is
-        # exact.  doc_id −1 never collides with a real doc.
-        out = pd.concat(
-            [out, pd.DataFrame(
-                {"segment_id": pd.Series([seg], dtype="int32"),
-                 "doc_id": pd.Series([-1], dtype="int64"),
-                 "score": pd.Series([float(n_matched)], dtype="float64")}
-            )], ignore_index=True,
-        )
-    if kmetrics is not None:
-        # pruning-win sentinels (−2 decoded, −3 total): negative ids never
-        # collide with real docs; the metrics collector splits them off
-        out = pd.concat(
-            [out, pd.DataFrame(
-                {"segment_id": pd.Series([seg, seg], dtype="int32"),
-                 "doc_id": pd.Series([-2, -3], dtype="int64"),
-                 "score": pd.Series(
-                     [float(kmetrics["blocks_decoded"]),
-                      float(kmetrics["blocks_total"])], dtype="float64")}
-            )], ignore_index=True,
-        )
-    return out
 
 
 def wand_topk(
@@ -1449,7 +1471,7 @@ def wand_topk(
         [pq.all_match_terms + spec["neg_terms"] + spec["filter_terms"]
          + clause_terms + [DELETES_TERM]],
         bool(pq.phrases) or clause_patterns or ladder is not None,
-        lambda view: _segment_topk_kernel(
+        lambda view: result_frame(view.seg, _segment_topk_kernel(
             view, **spec,
             max_docs=max_docs_per_segment,
             add_pre=add_pre,
@@ -1459,7 +1481,7 @@ def wand_topk(
             with_metrics=with_metrics,
             ladder=ladder,
             ladder_w=ladder_w,
-        ),
+        )),
         driver=driver,
     )
     if with_metrics:
@@ -1589,21 +1611,23 @@ def seg_scan(
 # request scans — Σ over its queries of Σ term_df over each query's scan
 # terms — plus KERNEL_CALL_POSTINGS per (segment, query) kernel call: on
 # the driver every call runs one after the other, and its fixed cost
-# (~3.3 ms, against ~0.9 µs per posting) dominates once an index has more
-# segments than the Spark site has cores.  Sweep on a 4-core host,
+# (~0.5 ms over the columnar segment views) dominates once an index has
+# more segments than the Spark site has cores.  Sweep on a 4-core host,
 # local[4], perfbench corpus seed 1 (8192 docs), cached doc-id handle,
 # search_batch of n distinct rare_or/and2/and3/or4 queries, median of 3
-# (seconds, driver / Spark):
-#   2 segments:  n=1 0.08/0.80  n=32 0.45/1.10  n=64 0.88/1.44
-#                n=128 1.57/2.33  n=256 2.40/3.32
-#   16 segments: n=8 0.84/1.68  n=12 0.94/1.27  n=16 1.42/1.45
-#                n=24 2.13/1.70  n=32 2.71/2.11
-#   64 segments: n=2 0.57/1.19  n=4 1.31/1.37  n=8 2.04/1.48
-# Both crossovers sit at ~256 kernel calls (≈ 1.0M with the call
-# weight); with 2 segments the Spark site runs only 2 tasks and loses up
-# to n=256, so there the rule errs toward the Spark site above n≈120.
+# (seconds, driver / Spark; two runs where the points repeat):
+#   2 segments:  n=1 0.05/0.70  n=32 0.11/0.75  n=64 0.18/0.72
+#                n=128 0.35/1.02  n=256 0.56/1.20  n=512 0.91/1.55
+#   16 segments: n=16 0.26/0.57  n=32 0.46/0.76  n=64 0.51/0.80, 0.77/0.99
+#                n=96 0.77/0.77, 0.89/1.30  n=128 1.77/1.35
+#   64 segments: n=4 0.18/0.61  n=8 0.26/0.70, 0.36/1.02
+#                n=16 0.64/0.61, 0.70/0.85  n=24 0.67/0.60, 0.81/0.91
+# The crossovers sit at ~1000-1500 kernel calls (≈ 1.0M with the call
+# weight, the lower end); with 2 segments the Spark site runs only 2
+# tasks and loses up to n=512, so there the rule errs toward the Spark
+# site above n≈400.
 DRIVER_SITE_POSTINGS = 1_000_000
-KERNEL_CALL_POSTINGS = 4_000
+KERNEL_CALL_POSTINGS = 1_000
 
 
 class DriverScan(NamedTuple):
@@ -1694,13 +1718,15 @@ def per_segment(
     norms: DataFrame,
     scans: list[list[str]],
     need_positions: bool,
-    score: Callable[[SegmentView | None], pd.DataFrame],
+    score: Callable[[SegmentView], pd.DataFrame],
     schema: str = _RESULT_SCHEMA,
     driver: DriverScan | None = None,
 ) -> DataFrame | pd.DataFrame:
     """Run ``score`` once per segment over its :func:`segment_view` — the
     one dispatch point of every query shape.  ``scans`` holds each
-    query's scan terms; the blocks read are their union.
+    query's scan terms; the blocks read are their union.  ``score``
+    returns the segment's rows typed like ``schema``, as ONE frame; a
+    segment with an empty side (no view) has no rows.
 
     * **Driver site** — when ``driver`` is given and the request's
       estimate (Σ over ``scans`` of Σ term_df, plus
@@ -1734,7 +1760,8 @@ def per_segment(
 
     def run(key: tuple, blocks_pdf: pd.DataFrame,
             norms_pdf: pd.DataFrame) -> pd.DataFrame:
-        return score(segment_view(blocks_pdf, norms_pdf))
+        view = segment_view(blocks_pdf, norms_pdf)
+        return _empty_frame(schema) if view is None else score(view)
 
     return (
         seg_scan(segments, terms, need_positions).groupBy("segment_id")
@@ -1746,18 +1773,17 @@ def per_segment(
 def _score_on_driver(
     blocks: pd.DataFrame,
     norms: pd.DataFrame,
-    score: Callable[[SegmentView | None], pd.DataFrame],
+    score: Callable[[SegmentView], pd.DataFrame],
     schema: str,
 ) -> pd.DataFrame:
     """The cogroup's semantics in-process: ``score`` once per segment id
-    present on either side (the missing side empty), in segment-id
-    order."""
+    present on both sides (a segment with an empty side has no rows), in
+    segment-id order."""
     by_blocks = dict(tuple(blocks.groupby("segment_id")))
     by_norms = dict(tuple(norms.groupby("segment_id")))
     outs = [
-        score(segment_view(by_blocks.get(seg, blocks.iloc[:0]),
-                           by_norms.get(seg, norms.iloc[:0])))
-        for seg in sorted(by_blocks.keys() | by_norms.keys())
+        score(segment_view(by_blocks[seg], by_norms[seg]))
+        for seg in sorted(by_blocks.keys() & by_norms.keys())
     ]
     return pd.concat(outs, ignore_index=True) if outs else _empty_frame(schema)
 
@@ -1774,17 +1800,23 @@ def local_result(spark, pdf: pd.DataFrame, schema: pa.Schema) -> DataFrame:
     so its ``collect()`` starts no Spark job — unlike
     ``createDataFrame`` of a Python list, which ships the rows through a
     Python job.  The frame is marked so the handles' plan memo skips it
-    (:func:`driver_result`)."""
+    (:func:`driver_result`) and keeps ``pdf`` (:func:`driver_frame`)."""
     df = spark.createDataFrame(
         pa.Table.from_pandas(pdf, schema=schema, preserve_index=False)
     )
-    df._driver_site = True
+    df._driver_frame = pdf
     return df
+
+
+def driver_frame(df: DataFrame) -> pd.DataFrame | None:
+    """The pandas rows a :func:`local_result` was built from, or None for
+    any other DataFrame."""
+    return vars(df).get("_driver_frame")
 
 
 def driver_result(df: DataFrame) -> bool:
     """True for a result :func:`local_result` built (already scored)."""
-    return vars(df).get("_driver_site", False)
+    return driver_frame(df) is not None
 
 
 def empty_topk(spark) -> DataFrame:
@@ -1833,20 +1865,23 @@ def topk_rows(per_seg: DataFrame | pd.DataFrame, k: int, spark) -> DataFrame:
 
 
 def batch_segment_topk(
-    view: SegmentView | None,
+    view: SegmentView,
     specs: list[tuple[str, dict]],
-    kernel: Callable[..., pd.DataFrame],
+    kernel: Callable[..., SegmentTopK],
 ) -> pd.DataFrame:
     """Per-segment body of a batch search → rows (query_id, doc_id,
     score): ``kernel(view, **spec)`` scores each (query_id, spec) of the
-    non-empty ``specs`` against the ONE view built for the segment."""
-    outs = [kernel(view, **spec) for _, spec in specs]
-    out = pd.concat(outs, ignore_index=True).drop(columns=["segment_id"])
-    out.insert(0, "query_id", np.repeat(
-        np.array([qid for qid, _ in specs], dtype=object),
-        [len(r) for r in outs],
-    ))
-    return out
+    non-empty ``specs`` against the ONE view built for the segment, and
+    the results land in ONE frame."""
+    rows = [kernel(view, **spec).rows() for _, spec in specs]
+    return pd.DataFrame({
+        "query_id": np.repeat(
+            np.array([qid for qid, _ in specs], dtype=object),
+            [ids.size for ids, _ in rows],
+        ),
+        "doc_id": np.concatenate([ids for ids, _ in rows]),
+        "score": np.concatenate([sc for _, sc in rows]),
+    })
 
 
 def batch_topk(
@@ -1855,7 +1890,7 @@ def batch_topk(
     specs: list[tuple[str, dict]],
     scans: list[list[str]],
     need_positions: bool,
-    kernel: Callable[..., pd.DataFrame],
+    kernel: Callable[..., SegmentTopK],
     k: int,
     driver: DriverScan | None = None,
 ) -> DataFrame:
@@ -1921,7 +1956,8 @@ def wand_topk_count(
         [pq.all_match_terms + spec["neg_terms"] + spec["filter_terms"]
          + [DELETES_TERM]],
         bool(pq.phrases),
-        lambda view: _segment_topk_kernel(view, **spec, with_count=True),
+        lambda view: result_frame(
+            view.seg, _segment_topk_kernel(view, **spec, with_count=True)),
         driver=driver,
     )
     return fold_count_topk(per_seg, k)
@@ -2011,23 +2047,6 @@ def count_topk_agg(per_seg: DataFrame, k: int) -> DataFrame:
     )
 
 
-def decode_doc_ids(blocks: DataFrame) -> DataFrame:
-    """Decode (segment_id, term) blocks → distinct doc_id rows (for NOT)."""
-
-    def emit(batches):
-        for pdf in batches:
-            outs = []
-            for (_, _), g in pdf.groupby(["segment_id", "term"]):
-                ids, _ = decode_block_subset(g)
-                outs.append(ids.astype(np.int64))
-            if outs:
-                yield pd.DataFrame({"doc_id": pd.Series(np.concatenate(outs), dtype="int64")})
-            else:
-                yield pd.DataFrame({"doc_id": pd.Series([], dtype="int64")})
-
-    return blocks.mapInPandas(emit, "doc_id long").distinct()
-
-
 def wand_facet_counts(
     segments: DataFrame,
     query: str | ParsedQuery,
@@ -2107,15 +2126,12 @@ def wand_facet_counts(
         )
     scan = segments.filter(
         F.col("term").isin(need) | F.col("term").startswith(prefix)
-    ).select(
-        "segment_id", "term", "block_id", "first_doc_id", "num_docs",
-        "id_bytes", "tf_bytes",
-    )
+    ).select(*_scan_cols(False, segments.columns))
     match_terms = list(pq.uniq_terms)
     drop_terms = list(dict.fromkeys(neg + [DELETES_TERM]))
 
     def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        by_term = {t: g for t, g in pdf.groupby("term")}
+        by_term = term_blocks(pdf)
 
         def raw_ids(t: str) -> np.ndarray:
             g = by_term.get(t)
@@ -2126,9 +2142,9 @@ def wand_facet_counts(
                 # deletes.py), not varint delta blocks
                 return np.unique(np.concatenate([
                     np.frombuffer(bytes(b), dtype=np.int64)
-                    for b in g["id_bytes"]
+                    for b in g.id_bytes
                 ]))
-            out, _ = decode_block_subset(g.sort_values("block_id"))
+            out, _ = decode_block_subset(g)
             return out.astype(np.int64)
 
         def ids(t: str) -> np.ndarray:

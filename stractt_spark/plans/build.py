@@ -44,6 +44,9 @@ import time
 from collections.abc import Callable
 from dataclasses import dataclass
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -689,11 +692,21 @@ class IndexHandle:
 
     def _to_orig_ids(self, top: DataFrame) -> DataFrame:
         """Map internal (pre-score-ranked) doc ids of a top-k back to the
-        original ids via the docmap — a broadcast join of the tiny top-k.
+        original ids via the docmap — a broadcast join of the tiny top-k,
+        or, for a driver-site top-k, a pyarrow read of the docmap rows
+        with ``doc_id IN top`` into a local relation (no Spark job).
         Tie contract: the k-cut broke score ties on INTERNAL ids (= pre
         rank), so the emitted order is (score desc, pre desc, orig id
         asc); ordering by orig id alone would diverge from the oracle
         whenever rounded scores tie across different pre ranks."""
+        from ..operators.wand import driver_frame
+
+        pdf = driver_frame(top)
+        if pdf is not None:
+            try:
+                return self._orig_ids_on_driver(pdf)
+            except (OSError, pa.ArrowInvalid):
+                pass  # unreadable on the driver: the Spark join below
         return (
             F.broadcast(top)
             .join(
@@ -707,6 +720,31 @@ class IndexHandle:
             .orderBy(F.desc("score"), F.desc("_pre"), F.asc("doc_id"))
             .drop("_pre")
         )
+
+    def _orig_ids_on_driver(self, top: pd.DataFrame) -> DataFrame:
+        """:meth:`_to_orig_ids` of a driver-site top-k: the same inner
+        join and tie order, in pandas over the docmap rows pyarrow reads
+        with ``doc_id IN top``."""
+        import pyarrow.dataset as pads
+
+        from ..operators.wand import _TOP_ARROW, local_result
+        from ..streaming.ingest import registered_docmaps
+
+        ds = pads.dataset([
+            pads.dataset(d, format="parquet")
+            for d in registered_docmaps(self._root, self.stats)
+        ])
+        m = ds.to_table(
+            columns=["doc_id", "orig_id", "pre_score"],
+            filter=pads.field("doc_id").isin(
+                pa.array(top["doc_id"].to_numpy(), pa.int64())),
+        ).to_pandas().merge(top[["doc_id", "score"]], on="doc_id")
+        m = m.iloc[np.lexsort((m["orig_id"].to_numpy(),
+                               -m["pre_score"].to_numpy(),
+                               -m["score"].to_numpy()))]
+        return local_result(self.spark, pd.DataFrame({
+            "doc_id": m["orig_id"].to_numpy(), "score": m["score"].to_numpy(),
+        }), _TOP_ARROW)
 
     # -------------------------------------------------------- collectors
 

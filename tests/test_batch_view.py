@@ -1,6 +1,6 @@
 """Batch search shares ONE prepared view per segment across its queries.
 
-``search_batch`` builds each segment's term → sorted-block map and its
+``search_batch`` builds each segment's term → block-array map and its
 decoded tombstones once (``wand.segment_view``) and scores every query of
 the batch against that view.  A kernel that mutated the shared view —
 e.g. popped the tombstone rows while scoring the first query — would
@@ -8,9 +8,11 @@ leak deleted docs into every later query, so the parity tests run on
 TOMBSTONED indexes and delete exactly the docs the queries rank first.
 """
 
+import dataclasses
 import math
 import shutil
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -142,38 +144,48 @@ def _specs(idx, n):
     return specs, sorted(scan) + [wand.DELETES_TERM]
 
 
-@pytest.mark.parametrize("n_queries", [1, 8, 32])
-def test_batch_segment_body_builds_view_once(indexes, monkeypatch, n_queries):
-    """Driver-side: the per-segment batch body on collected frames equals
-    per-query kernel calls, and groups the blocks by term ONCE per
-    segment whatever the number of queries."""
-    idx = indexes["sf"]
-    specs, scan = _specs(idx, n_queries)
+def _segment_frames(idx, scan):
     blocks = wand.seg_scan(idx.segments, scan, True).toPandas()
     norms = idx.norms.toPandas()
     assert (blocks["term"] == wand.DELETES_TERM).any()
+    for seg, b in blocks.groupby("segment_id"):
+        yield b, norms[norms["segment_id"] == seg]
 
-    calls = {"n": 0}
-    groupby = pd.DataFrame.groupby
+
+@pytest.mark.parametrize("n_queries", [1, 8, 32])
+def test_batch_segment_body_builds_view_once(indexes, monkeypatch, n_queries):
+    """Driver-side: the per-segment batch body on collected frames equals
+    per-query kernel calls, and splits the blocks by term ONCE per
+    segment whatever the number of queries — with no pandas grouping."""
+    idx = indexes["sf"]
+    specs, scan = _specs(idx, n_queries)
+
+    calls = {"split": 0, "groupby": 0}
+    split, groupby = wand.term_blocks, pd.DataFrame.groupby
+
+    def counting_split(*a, **kw):
+        calls["split"] += 1
+        return split(*a, **kw)
 
     def counting_groupby(self, *a, **kw):
-        calls["n"] += 1
+        calls["groupby"] += 1
         return groupby(self, *a, **kw)
 
-    monkeypatch.setattr(pd.DataFrame, "groupby", counting_groupby)
     matched = 0
-    for seg, b in blocks.groupby("segment_id"):
-        n = norms[norms["segment_id"] == seg]
-        calls["n"] = 0
-        got = wand.batch_segment_topk(
-            wand.segment_view(b, n), specs, wand._segment_topk_kernel
-        )
-        assert calls["n"] == 1, seg
+    for b, n in _segment_frames(idx, scan):
+        with monkeypatch.context() as m:
+            m.setattr(wand, "term_blocks", counting_split)
+            m.setattr(pd.DataFrame, "groupby", counting_groupby)
+            calls.update(split=0, groupby=0)
+            got = wand.batch_segment_topk(
+                wand.segment_view(b, n), specs, wand._segment_topk_kernel
+            )
+            assert calls == {"split": 1, "groupby": 0}
         want = []
         for qid, spec in specs:
             res = wand._segment_topk_kernel(wand.segment_view(b, n), **spec)
-            want.append(res.drop(columns=["segment_id"])
-                        .assign(query_id=qid)[["query_id", "doc_id", "score"]])
+            want.append(pd.DataFrame({"query_id": qid, "doc_id": res.ids,
+                                      "score": res.scores}))
         want = pd.concat(want, ignore_index=True)
         pd.testing.assert_frame_equal(got, want, check_dtype=False)
         assert not set(got["doc_id"]) & indexes["sf_del"]
@@ -181,16 +193,55 @@ def test_batch_segment_body_builds_view_once(indexes, monkeypatch, n_queries):
     assert matched > 0
 
 
+@pytest.mark.parametrize("n_queries", [1, 8, 32])
+def test_batch_segment_body_builds_one_frame(indexes, monkeypatch, n_queries):
+    """The kernels return numpy arrays; the batch body builds ONE pandas
+    frame per segment whatever the number of queries."""
+    idx = indexes["sf"]
+    specs, scan = _specs(idx, n_queries)
+    calls = {"n": 0}
+    init = pd.DataFrame.__init__
+
+    def counting_init(self, *a, **kw):
+        calls["n"] += 1
+        init(self, *a, **kw)
+
+    for b, n in _segment_frames(idx, scan):
+        view = wand.segment_view(b, n)
+        with monkeypatch.context() as m:
+            m.setattr(pd.DataFrame, "__init__", counting_init)
+            calls["n"] = 0
+            got = wand.batch_segment_topk(view, specs,
+                                          wand._segment_topk_kernel)
+            assert calls["n"] == 1, view.seg
+        assert list(got.columns) == ["query_id", "doc_id", "score"]
+
+
 def test_segment_view_is_read_only(indexes):
     idx = indexes["sf"]
     seg = min(indexes["sf_del"]) // DPS
-    blocks = wand.seg_scan(idx.segments, ["merge", wand.DELETES_TERM],
+    blocks = wand.seg_scan(idx.segments, ["merge", "tree", wand.DELETES_TERM],
                            False).filter(F.col("segment_id") == seg).toPandas()
     norms = idx.norms.filter(F.col("segment_id") == seg).toPandas()
     view = wand.segment_view(blocks, norms)
     assert wand.DELETES_TERM not in view.by_term
+    assert set(view.by_term) == {"merge", "tree"}
     assert min(indexes["sf_del"]) in view.deleted
     with pytest.raises(TypeError):
         view.by_term["merge"] = blocks  # type: ignore[index]
     with pytest.raises(ValueError):
         view.deleted[0] = -1
+    for tb in view.by_term.values():
+        arrays = [getattr(tb, f.name) for f in dataclasses.fields(tb)
+                  if f.name not in ("pos_bytes", "postings")]
+        for a in arrays:
+            assert not a.flags.writeable
+            with pytest.raises(ValueError):
+                a[0] = a[0]
+        assert (np.diff(tb.block_id) > 0).all()
+        assert tb.postings == int(tb.num_docs.sum())
+        assert len(tb) == tb.block_id.size > 0
+    for a in view.norms.values():
+        assert not a.flags.writeable
+    with pytest.raises(TypeError):
+        view.norms["norm_bytes"] = None  # type: ignore[index]

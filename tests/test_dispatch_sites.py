@@ -186,6 +186,24 @@ def test_driver_site_starts_no_job(spark, indexes, monkeypatch):
     assert jobs >= 1
 
 
+def test_driver_site_orig_ids_start_no_job(spark, indexes, monkeypatch):
+    """A driver-site top-k maps back to original ids with a pyarrow read
+    of the docmaps (the build's and the streamed batch's): the rows equal
+    the Spark site's broadcast join, and no job starts."""
+    h = indexes["pre"]
+
+    def search(orig_ids=True):
+        return _rows(h.search("merge tree", k=10, mode="should",
+                              with_pre_score=True, orig_ids=orig_ids))
+
+    rows, jobs = _jobs(spark, search)
+    assert rows and jobs == 0
+    assert rows == _on_spark_site(monkeypatch, h, search)
+    internal = search(orig_ids=False)
+    assert [s for _, s in rows] == [s for _, s in internal]
+    assert [d for d, _ in rows] != [d for d, _ in internal]
+
+
 def test_fresh_handle_first_batch_starts_no_job(spark, indexes):
     """The first ``term_df`` of a handle reads term_stats with pyarrow
     and never opens the Spark table, so on the driver site even a fresh

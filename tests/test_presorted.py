@@ -8,6 +8,7 @@ import math
 import shutil
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -153,7 +154,7 @@ def test_pre_aware_blockmax_prunes_blocks():
         fieldnorm_to_id,
     )
     from stractt_spark.operators.segments import encode_segment_arrays
-    from stractt_spark.operators.wand import _should_topk_blockmax
+    from stractt_spark.operators.wand import _should_topk_blockmax, segment_view
 
     n = 2048
     ids_all = np.arange(n, dtype=np.int64)
@@ -169,7 +170,10 @@ def test_pre_aware_blockmax_prunes_blocks():
         0, term_codes, np.array(["aaa", "bbb"], dtype=object), doc_ids, tfs,
         np.full(2 * n, norm_id, dtype=np.int64),
     )
-    by_term = {t: g.sort_values("block_id") for t, g in blocks.groupby("term")}
+    by_term = segment_view(blocks, pd.DataFrame({
+        "segment_id": [0], "base_doc_id": [0],
+        "norm_bytes": [np.full(n, norm_id, dtype=np.uint8).tobytes()],
+    })).by_term
     qweights = {"aaa": weight(n, n), "bbb": weight(n, n)}
     dl_table = FIELD_NORMS_TABLE.astype(np.float64)
     dl_of = lambda ids: np.full(len(ids), dl_table[norm_id])

@@ -13,7 +13,9 @@ from stractt_spark.operators.postings import build_postings
 from stractt_spark.operators.segments import (
     decode_block_subset,
     decode_term_blocks,
+    term_blocks,
 )
+from stractt_spark.operators.wand import segment_view
 from stractt_spark.oracle import build_oracle
 from stractt_spark.plans.build import (
     SegmentIndex,
@@ -97,12 +99,12 @@ def test_block_roundtrip_through_spark(built, spark):
     key = (
         segs.groupby(["segment_id", "term"])["num_docs"].sum().idxmax()
     )
-    g = segs[(segs.segment_id == key[0]) & (segs.term == key[1])].sort_values("block_id")
+    g = term_blocks(segs[segs.segment_id == key[0]])[key[1]]
     ids, tfs = decode_term_blocks(g)
     assert list(ids) == sorted(ids)
-    assert len(ids) == int(g["num_docs"].sum())
+    assert len(ids) == g.postings
     # subset decode (skip even blocks) re-anchors correctly
-    sub = g.iloc[1::2]
+    sub = g.take(slice(1, None, 2))
     if len(sub):
         sids, stfs = decode_block_subset(sub)
         mask = np.isin(ids, sids)
@@ -180,6 +182,14 @@ def one_big_segment(spark):
     return idx, oracle
 
 
+def _norms_row(norm_ids):
+    """A one-segment norms frame (base 0) over per-doc norm ids."""
+    return pd.DataFrame({
+        "segment_id": [0], "base_doc_id": [0],
+        "norm_bytes": [np.asarray(norm_ids, dtype=np.uint8).tobytes()],
+    })
+
+
 def _run_blockmax(idx, terms, k=10):
     from pyspark.sql import functions as F
 
@@ -190,7 +200,7 @@ def _run_blockmax(idx, terms, k=10):
     tdf = idx.term_df(terms)
     segs = idx.segments.filter(F.col("term").isin(terms)).toPandas()
     norm_row = idx.norms.toPandas()
-    by_term = {t: g.sort_values("block_id") for t, g in segs.groupby("term")}
+    by_term = segment_view(segs, norm_row).by_term
     N, avgdl = idx.stats["num_docs"], idx.stats["avgdl"]
     qweights = {t: weight(tdf.get(t, 0), N) for t in terms}
     base = int(norm_row["base_doc_id"].iloc[0])
@@ -271,7 +281,7 @@ def test_blockmax_or_strong_skip_clustered_rare():
         0, term_codes, np.array(["aaa", "zzz"], dtype=object), doc_ids, tfs,
         np.full(n + 16, norm_id, dtype=np.int64),
     )
-    by_term = {t: g.sort_values("block_id") for t, g in blocks.groupby("term")}
+    by_term = segment_view(blocks, _norms_row(np.full(n, norm_id))).by_term
     avgdl = 10.0
     qweights = {"aaa": weight(n, n), "zzz": weight(16, n)}
     dl_table = FIELD_NORMS_TABLE.astype(np.float64)
@@ -380,7 +390,7 @@ def test_blockmax_or_equals_bruteforce_random(data):
         np.array(all_tf, dtype=np.int64)[order],
         np.array(all_n, dtype=np.int64)[order],
     )
-    by_term = {t: g.sort_values("block_id") for t, g in blocks.groupby("term")}
+    by_term = segment_view(blocks, _norms_row(norm_ids)).by_term
     avgdl = float(dls.mean())
     qweights = {t: weight(posting_docs[t].size, n_docs) for t in terms}
     dl_table = FIELD_NORMS_TABLE.astype(np.float64)
