@@ -9,12 +9,19 @@ deleted docs still count toward idf until segments are merged.
 
 Spark-native layout: tombstones are extra rows in the unified index
 parquet (term = ``\\x00__del__``, ``id_bytes`` = raw sorted int64 doc
-ids, one row per touched segment per delete batch), written with a
-plain parquet append.  They ride the existing pruned scan (every query
-adds the tombstone term to its ``term IN (...)`` pushdown) and arrive
-in the per-segment kernel with zero plan changes — no driver-side
-delete set, no broadcast, bounded by the deletes that actually live in
-that segment.
+ids, one row per touched segment per delete batch).  They ride the
+existing pruned scan (every query adds the tombstone term to its
+``term IN (...)`` pushdown) and arrive in the per-segment kernel with
+zero plan changes — no driver-side delete set, no broadcast, bounded by
+the deletes that actually live in that segment.
+
+A delete starts no Spark job: an index root is a driver path
+(``stats.json`` is opened with ``open()``), so :func:`delete_docs` reads
+the sentinel rows, docmap rows and tombstones it needs with pyarrow and
+writes its tombstone rows as ONE parquet file in the index's own schema:
+under a ``.``-prefixed name that no reader lists, then ``os.replace`` to
+its final name, then the ``deleted_docs`` count in ``stats.json``.
+Handles opened after that see it; an open handle keeps its snapshot.
 
 ``merge_indexes`` applies tombstones during its decode (postings of
 deleted docs are dropped, doc maps shrink, stats are recomputed from
@@ -24,9 +31,21 @@ compaction: ``compact_index`` is sugar for it.
 
 from __future__ import annotations
 
+import json
+import os
+import uuid
+
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.dataset as pads
+import pyarrow.parquet as pq
+from pyspark.sql import SparkSession
+
+from ..plans.build import IndexPaths
+from ..streaming.ingest import driver_dataset, read_docmap, registered_paths
+from .merge import exact_dls_frame, mf_norms_frame
+from .multifield import MF_NORMS_PREFIX
+from .segments import DELETES_TERM, UNIFIED_NORMS, NormsSplit
 
 
 def delete_docs(
@@ -45,110 +64,61 @@ def delete_docs(
     accounting); purge zero-token docs by filtering the source at the
     next rebuild instead.  Deletes compose with streaming appends (ids
     past the build high-water mark resolve through the batch docmaps)
-    and with
-    multi-field indexes (the per-field sentinels' exact dl tails let
-    compaction recompute exact per-field stats).  A quota query on a
-    tombstoned index raises until compaction — truncated posting lists
-    can no longer guarantee ``max_docs`` live higher-pre matches above
-    the cut."""
-    import json
-    import os
-
-    from ..plans.build import IndexPaths
-    from .segments import DELETES_TERM
-
-    from pyspark.sql import functions as F
-
+    and with multi-field indexes (the per-field sentinels' exact dl
+    tails let compaction recompute exact per-field stats).  A quota
+    query on a tombstoned index raises until compaction — truncated
+    posting lists can no longer guarantee ``max_docs`` live higher-pre
+    matches above the cut.  Runs on the driver with pyarrow; ``spark``
+    is unused."""
     paths = IndexPaths(index_dir)
     stats = paths.read_stats()
     ids = sorted({int(i) for i in doc_ids})
     if not ids:
         return 0
     dps = int(stats["docs_per_segment"])
-
     if stats.get("presorted"):
         # caller speaks ORIGINAL ids; tombstones store INTERNAL ids
-        from ..streaming.ingest import registered_docmaps
-
-        dm = spark.read.parquet(*registered_docmaps(index_dir, stats))
-        req = spark.createDataFrame(
-            [(i,) for i in ids], "orig_id long"
-        )
-        rows = (
-            dm.join(req, "orig_id", "left_semi")
-            .select("doc_id").collect()
-        )
-        internal = sorted(int(r["doc_id"]) for r in rows)
+        internal = read_docmap(index_dir, stats, "orig_id", ids)["doc_id"]
     else:
-        cand = [i for i in ids if 0 <= i < stats.get(
-            "next_doc_id", stats["num_docs"]
-        )]
         # validate against LIVE doc slots, not just the id range: streamed
         # / aligned builds leave gap slots (dl=0, no postings) inside the
         # span, and compaction's delete accounting joins tombstones
         # against decode_exact_dls — which emits every slot — so a
         # phantom tombstone would be subtracted from num_docs/avgdl.
-        # Bounded: the scan is filtered to sentinel rows and the result
-        # to the candidate ids (O(len(ids)) driver rows).
-        internal = []
-        if cand:
-            from ..streaming.ingest import registered_paths
-
-            unified = spark.read.parquet(*registered_paths(index_dir, stats))
-            if stats.get("multifield"):
-                from .merge import decode_mf_norms
-                from .multifield import MF_NORMS_PREFIX
-
-                dls = decode_mf_norms(unified.filter(
-                    F.col("term").startswith(MF_NORMS_PREFIX)
-                )).groupBy("doc_id").agg(F.sum("dl").alias("dl"))
-            else:
-                from .merge import decode_exact_dls
-                from .segments import split_unified
-
-                _, nrm = split_unified(unified)
-                dls = decode_exact_dls(nrm)
-            req = spark.createDataFrame(
-                [(i,) for i in cand], "doc_id long"
-            )
-            live_rows = (
-                dls.filter(F.col("dl") > 0)
-                .join(req, "doc_id", "left_semi")
-                .select("doc_id").collect()
-            )
-            internal = sorted(int(r["doc_id"]) for r in live_rows)
-    # drop ids already tombstoned (idempotent re-delete)
-    existing = read_tombstones(spark, index_dir)
-    if existing.size:
-        internal = [i for i in internal if i not in set(existing.tolist())]
-    if not internal:
+        # Bounded: only the candidates' segments' sentinel rows are read.
+        hi = stats.get("next_doc_id", stats["num_docs"])
+        cand = np.asarray([i for i in ids if 0 <= i < hi], dtype=np.int64)
+        internal = _live(index_dir, stats, cand, dps) if cand.size else []
+    arr = np.setdiff1d(np.asarray(internal, dtype=np.int64),
+                       read_tombstones(spark, index_dir))
+    if not arr.size:
         return 0
-
-    arr = np.asarray(internal, dtype=np.int64)
-    segs = (arr // dps).astype(np.int64)
-    out_rows = []
-    for seg in np.unique(segs):
-        seg_ids = arr[segs == seg]
-        out_rows.append({
-            "segment_id": int(seg),
-            "term": DELETES_TERM,
-            "block_id": -1,
-            "first_doc_id": int(seg_ids.min()),
-            "last_doc_id": int(seg_ids.max()),
-            "num_docs": int(seg_ids.size),
-            "id_bytes": seg_ids.tobytes(),
-            "tf_bytes": b"",
-            "pos_bytes": None,
-            "max_tf": 0,
-            "min_norm_id": 0,
-        })
-    from .segments import SEGMENTS_SCHEMA
-
-    pdf = pd.DataFrame(out_rows)
-    (
-        spark.createDataFrame(pdf, SEGMENTS_SCHEMA)
-        .write.mode("append").parquet(paths.index)
-    )
+    segs = arr // dps
+    useg = np.unique(segs)
+    seg_ids = [arr[segs == s] for s in useg]
+    n = len(useg)
+    schema = pads.dataset(paths.index, format="parquet").schema
+    rows = pa.Table.from_pydict({
+        "segment_id": useg.astype(np.int32),
+        "term": [DELETES_TERM] * n,
+        "block_id": np.full(n, -1, dtype=np.int32),
+        "first_doc_id": [int(a[0]) for a in seg_ids],
+        "last_doc_id": [int(a[-1]) for a in seg_ids],
+        "num_docs": np.asarray([a.size for a in seg_ids], dtype=np.int32),
+        "id_bytes": [a.tobytes() for a in seg_ids],
+        "tf_bytes": [b""] * n,
+        "pos_bytes": pa.nulls(n, pa.binary()),
+        "max_tf": np.zeros(n, dtype=np.int32),
+        "min_norm_id": np.zeros(n, dtype=np.int32),
+    }, schema=schema)
+    name = f"part-del-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(paths.index, "." + name)
+    try:
+        pq.write_table(rows, tmp)
+        os.replace(tmp, os.path.join(paths.index, name))
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
     stats["deleted_docs"] = int(stats.get("deleted_docs", 0) + arr.size)
     tmp = paths.stats + ".tmp"
     with open(tmp, "w") as f:
@@ -157,28 +127,41 @@ def delete_docs(
     return int(arr.size)
 
 
+def _live(index_dir: str, stats: dict, cand: np.ndarray, dps: int):
+    """The ``cand`` ids (internal) that are live slots: a positive exact
+    token count in their segments' sentinel rows (summed over fields on
+    a multi-field index)."""
+    mf = bool(stats.get("multifield"))
+    split = NormsSplit(MF_NORMS_PREFIX, True, tuple(
+        (c, c) for c in ("term", "first_doc_id", "id_bytes", "tf_bytes")
+    )) if mf else UNIFIED_NORMS
+    rows = driver_dataset(registered_paths(index_dir, stats)).to_table(
+        columns=[src for _, src in split.cols],
+        filter=split.arrow_rows() & pads.field("segment_id").isin(
+            pa.array(np.unique(cand // dps).astype(np.int32))),
+    ).to_pandas()
+    if not len(rows):
+        return []
+    rows.columns = [alias for alias, _ in split.cols]
+    dls = (mf_norms_frame(rows).groupby("doc_id", as_index=False)["dl"].sum()
+           if mf else exact_dls_frame(rows))
+    live = dls["doc_id"].to_numpy()[dls["dl"].to_numpy() > 0]
+    return np.intersect1d(cand, live)
+
+
 def read_tombstones(spark: SparkSession, index_dir: str) -> np.ndarray:
     """All tombstoned INTERNAL ids of an index (sorted, deduped) — a
-    driver-side array for compaction-time bookkeeping and tests; query
-    kernels never call this (they read the per-segment rows off the
-    scan)."""
-    from ..plans.build import IndexPaths
-    from ..streaming.ingest import registered_paths
-    from .segments import DELETES_TERM
-
-    from pyspark.sql import functions as F
-
+    driver-side array read with pyarrow, for deletes, compaction-time
+    bookkeeping and tests; query kernels never call this (they read the
+    per-segment rows off the scan).  ``spark`` is unused."""
     stats = IndexPaths(index_dir).read_stats()
-    rows = (
-        spark.read.parquet(*registered_paths(index_dir, stats))
-        .filter(F.col("term") == DELETES_TERM)
-        .select("id_bytes").collect()
-    )
-    if not rows:
-        return np.zeros(0, dtype=np.int64)
-    return np.unique(np.concatenate([
-        np.frombuffer(bytes(r["id_bytes"]), dtype=np.int64) for r in rows
-    ]))
+    rows = driver_dataset(registered_paths(index_dir, stats)).to_table(
+        columns=["id_bytes"], filter=pads.field("term") == DELETES_TERM,
+    ).column("id_bytes").to_pylist()
+    return np.unique(np.concatenate(
+        [np.zeros(0, dtype=np.int64)]
+        + [np.frombuffer(b, dtype=np.int64) for b in rows]
+    ))
 
 
 def compact_index(

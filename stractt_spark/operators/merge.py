@@ -236,8 +236,10 @@ def merge_indexes(
     )
 
 
-def decode_exact_dls(norms: DataFrame) -> DataFrame:
-    """Sentinel rows → exact per-doc token counts ``(doc_id, dl)``.
+def exact_dls_frame(norms: pd.DataFrame) -> pd.DataFrame:
+    """Sentinel rows ``(base_doc_id, n_docs, meta_bytes, norm_bytes)``,
+    at least one → exact per-doc token counts ``(doc_id, dl)``, one row
+    per span slot.
 
     The fused build's main sentinel carries the EXACT span-aligned per-doc
     token counts after its 5 metric values (segments.py meta_row) — the
@@ -247,50 +249,51 @@ def decode_exact_dls(norms: DataFrame) -> DataFrame:
     ids; joins against the docmap drop those.
 
     Legacy sentinels (written before the exact-dl tail existed) have no
-    tail — mirror decode_mf_norms and fall back to the quantized
+    tail — mirror :func:`mf_norms_frame` and fall back to the quantized
     ``FIELD_NORMS_TABLE[norm_id]`` dls rather than emitting a
     mismatched-length Series (NaN column → opaque Arrow failure in the
-    presorted-merge / delete-accounting consumers)."""
+    presorted-merge / delete-accounting consumers).  The merges run it in
+    :func:`decode_exact_dls`; ``delete_docs`` calls it on the driver."""
     from ..functions.codec import varint_decode
     from ..functions.fieldnorm import FIELD_NORMS_TABLE
 
-    def run(pdfs):
-        for pdf in pdfs:
-            outs = []
-            for _, r in pdf.iterrows():
-                vals = varint_decode(bytes(r["meta_bytes"]))
-                span = int(r["n_docs"])
-                base = int(r["base_doc_id"])
-                tail = vals[5:5 + span]
-                if len(tail) == span:
-                    dl = np.asarray(tail, dtype=np.int64)
-                else:
-                    # legacy pre-tail sentinel: quantized dls from the
-                    # packed norm bytes (rebuild the index for exact stats)
-                    narr = np.frombuffer(
-                        bytes(r["norm_bytes"]), dtype=np.uint8
-                    )
-                    if len(narr) != span:
-                        raise ValueError(
-                            "corrupt sentinel: no exact-dl tail and "
-                            f"norm_bytes span {len(narr)} != n_docs {span}"
-                            " — rebuild the index for exact stats"
-                        )
-                    dl = FIELD_NORMS_TABLE[narr.astype(np.int64)].astype(
-                        np.int64
-                    )
-                outs.append(pd.DataFrame({
-                    "doc_id": pd.Series(
-                        base + np.arange(span, dtype=np.int64), dtype="int64"
-                    ),
-                    "dl": pd.Series(dl, dtype="int64"),
-                }))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+    outs = []
+    for _, r in norms.iterrows():
+        vals = varint_decode(bytes(r["meta_bytes"]))
+        span = int(r["n_docs"])
+        base = int(r["base_doc_id"])
+        tail = vals[5:5 + span]
+        if len(tail) == span:
+            dl = np.asarray(tail, dtype=np.int64)
+        else:
+            # legacy pre-tail sentinel: quantized dls from the packed
+            # norm bytes (rebuild the index for exact stats)
+            narr = np.frombuffer(bytes(r["norm_bytes"]), dtype=np.uint8)
+            if len(narr) != span:
+                raise ValueError(
+                    "corrupt sentinel: no exact-dl tail and "
+                    f"norm_bytes span {len(narr)} != n_docs {span}"
+                    " — rebuild the index for exact stats"
+                )
+            dl = FIELD_NORMS_TABLE[narr.astype(np.int64)].astype(np.int64)
+        outs.append(pd.DataFrame({
+            "doc_id": pd.Series(
+                base + np.arange(span, dtype=np.int64), dtype="int64"
+            ),
+            "dl": pd.Series(dl, dtype="int64"),
+        }))
+    return pd.concat(outs, ignore_index=True)
 
+
+def decode_exact_dls(norms: DataFrame) -> DataFrame:
+    """Sentinel rows → ``(doc_id, dl)``: :func:`exact_dls_frame` per
+    Arrow batch."""
     return norms.select(
         "base_doc_id", "n_docs", "meta_bytes", "norm_bytes"
-    ).mapInPandas(run, "doc_id long, dl long")
+    ).mapInPandas(
+        lambda pdfs: (exact_dls_frame(p) for p in pdfs if len(p)),
+        "doc_id long, dl long",
+    )
 
 
 def reencode_fused(
@@ -390,51 +393,51 @@ def decode_blocks(
     return segments.groupBy("segment_id").applyInPandas(run, schema)
 
 
-def decode_mf_norms(mf_norm_rows: DataFrame) -> DataFrame:
-    """Per-field packed norm sentinel rows →
-    ``(doc_id, field, norm_id, dl)`` for every span slot (gap slots come
-    out norm 0 / dl 0; callers filter).  ``dl`` is the EXACT per-doc
-    token count from the sentinel's varint tail — what makes merged /
-    compacted multi-field stats exact rather than quantized."""
+def mf_norms_frame(rows: pd.DataFrame) -> pd.DataFrame:
+    """Per-field packed norm sentinel rows ``(term, first_doc_id,
+    id_bytes, tf_bytes)``, at least one → ``(doc_id, field, norm_id,
+    dl)`` for every span slot (gap slots come out norm 0 / dl 0; callers
+    filter).  ``dl`` is the EXACT per-doc token count from the
+    sentinel's varint tail — what makes merged / compacted multi-field
+    stats exact rather than quantized.  The merges run it in
+    :func:`decode_mf_norms`; ``delete_docs`` calls it on the driver."""
     from ..functions.codec import varint_decode
+    from ..functions.fieldnorm import FIELD_NORMS_TABLE
     from .multifield import MF_NORMS_PREFIX
 
     plen = len(MF_NORMS_PREFIX)
+    outs = []
+    for _, r in rows.iterrows():
+        narr = np.frombuffer(bytes(r["id_bytes"]), dtype=np.uint8)
+        base = int(r["first_doc_id"])
+        vals = varint_decode(bytes(r["tf_bytes"]))
+        tail = vals[2:2 + len(narr)]
+        if len(tail) == len(narr):
+            dl = np.asarray(tail, dtype=np.int64)
+        else:
+            # legacy sentinel without the dl tail: quantized dls
+            # (pre-tail indexes; rebuild for exact stats)
+            dl = FIELD_NORMS_TABLE[narr.astype(np.int64)].astype(np.int64)
+        outs.append(pd.DataFrame({
+            "doc_id": pd.Series(
+                base + np.arange(len(narr), dtype=np.int64), dtype="int64"),
+            "field": pd.Series([r["term"][plen:]] * len(narr),
+                               dtype="object"),
+            "norm_id": pd.Series(narr.astype(np.int32), dtype="int32"),
+            "dl": pd.Series(dl, dtype="int64"),
+        }))
+    return pd.concat(outs, ignore_index=True)
 
-    def run(pdfs):
-        for pdf in pdfs:
-            outs = []
-            for _, r in pdf.iterrows():
-                narr = np.frombuffer(bytes(r["id_bytes"]), dtype=np.uint8)
-                base = int(r["first_doc_id"])
-                vals = varint_decode(bytes(r["tf_bytes"]))
-                tail = vals[2:2 + len(narr)]
-                if len(tail) == len(narr):
-                    dl = np.asarray(tail, dtype=np.int64)
-                else:
-                    # legacy sentinel without the dl tail: quantized dls
-                    # (pre-tail indexes; rebuild for exact stats)
-                    from ..functions.fieldnorm import FIELD_NORMS_TABLE
 
-                    dl = FIELD_NORMS_TABLE[narr.astype(np.int64)].astype(
-                        np.int64
-                    )
-                outs.append(pd.DataFrame({
-                    "doc_id": pd.Series(
-                        base + np.arange(len(narr), dtype=np.int64),
-                        dtype="int64"),
-                    "field": pd.Series([r["term"][plen:]] * len(narr),
-                                       dtype="object"),
-                    "norm_id": pd.Series(narr.astype(np.int32),
-                                         dtype="int32"),
-                    "dl": pd.Series(dl, dtype="int64"),
-                }))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
+def decode_mf_norms(mf_norm_rows: DataFrame) -> DataFrame:
+    """Per-field norm sentinel rows → ``(doc_id, field, norm_id, dl)``:
+    :func:`mf_norms_frame` per Arrow batch."""
     return mf_norm_rows.select(
         "term", "first_doc_id", "id_bytes", "tf_bytes"
-    ).mapInPandas(run, "doc_id long, field string, norm_id int, dl long")
+    ).mapInPandas(
+        lambda pdfs: (mf_norms_frame(p) for p in pdfs if len(p)),
+        "doc_id long, field string, norm_id int, dl long",
+    )
 
 
 def reencode_fused_multifield(

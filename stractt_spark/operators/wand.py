@@ -14,7 +14,8 @@ src/inverted_index.rs:179-190 and src/collector.rs:105-211):
    predicate reaches the parquet read on both sites (pyarrow filter on
    the driver, PushedFilters in Spark);
 3. per segment, its blocks paired with its norms rows (a cogroup on the
-   Spark site, the same frames read in-process on the driver) become ONE
+   Spark site; on the driver, blocks scanned in-process per request and
+   norms rows pinned once at open) become ONE
    columnar :class:`SegmentView` — a read-only :class:`~.segments.
    TermBlocks` of numpy block arrays per term, built with one lexsort —
    shared by every query of the request; a kernel scores candidates over
@@ -67,6 +68,7 @@ from typing import NamedTuple
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -1399,7 +1401,7 @@ def wand_topk(
 ) -> DataFrame:
     """→ (doc_id, score) global top-k from the segment index.
 
-    ``driver``: the handle's pinned local files (:class:`DriverScan`);
+    ``driver``: the handle's pinned driver snapshot (:class:`DriverScan`);
     with it a small request is scored on the driver (:func:`per_segment`)
     and the result is a local relation.  Without it (bare DataFrames)
     the Spark site always runs.
@@ -1631,17 +1633,22 @@ KERNEL_CALL_POSTINGS = 1_000
 
 
 class DriverScan(NamedTuple):
-    """What the driver site reads: the local parquet files a handle
-    pinned at open (the files Spark listed for its table, so the driver
-    sees the same snapshot as the Spark views), the handle's norms split,
-    its ``term_df`` lookup and segment count for the estimate.  Every
-    index directory holds the one fused table, so every handle over
-    local files pins one."""
+    """What the driver site reads, pinned once per handle at open: the
+    pyarrow dataset over the local parquet files the handle pinned (the
+    files Spark listed for its table, so the driver sees the same
+    snapshot as the Spark views), the handle's norms split, its norms
+    rows per segment id (read once, renamed to the split's aliases) and
+    its ``term_df`` lookup for the estimate.  Every index directory holds
+    the one fused table, so every handle over local files pins one."""
 
-    files: tuple[str, ...]
+    dataset: pads.Dataset
     split: NormsSplit
+    norms: Mapping[int, pd.DataFrame]
     term_df: Callable[[list[str]], dict[str, int]]
-    segments: int
+
+    @property
+    def segments(self) -> int:
+        return len(self.norms)
 
 
 def pin_driver_scan(
@@ -1650,18 +1657,18 @@ def pin_driver_scan(
     term_df: Callable[[list[str]], dict[str, int]],
 ) -> DriverScan | None:
     """The handle's :class:`DriverScan` over ``files`` (from
-    :func:`local_paths`), its segments counted from the norms rows — or
-    None when pyarrow cannot read the files on the driver."""
-    import pyarrow.compute as pc
-    import pyarrow.dataset as pads
-
+    :func:`local_paths`) — or None when pyarrow cannot read the files on
+    the driver."""
     try:
-        seg = pads.dataset(list(files), format="parquet").to_table(
-            columns=["segment_id"], filter=split.arrow_rows(),
-        ).column("segment_id")
+        ds = pads.dataset(list(files), format="parquet")
+        norms = ds.to_table(
+            columns=[c for _, c in split.cols], filter=split.arrow_rows(),
+        ).to_pandas()
     except (OSError, pa.ArrowInvalid):
         return None
-    return DriverScan(files, split, term_df, len(pc.unique(seg)))
+    norms.columns = [a for a, _ in split.cols]
+    by_seg = dict(tuple(norms.groupby("segment_id")))
+    return DriverScan(ds, split, MappingProxyType(by_seg), term_df)
 
 
 def local_paths(uris: list[str]) -> tuple[str, ...] | None:
@@ -1682,25 +1689,17 @@ def local_paths(uris: list[str]) -> tuple[str, ...] | None:
 
 def read_driver(
     src: DriverScan, terms: list[str], need_positions: bool
-) -> tuple[pd.DataFrame, pd.DataFrame]:
-    """→ (blocks, norms) frames of every segment, read with pyarrow from
-    the pinned files — the columns and rows the Spark site's cogroup
-    delivers: blocks are the non-norms rows with ``term IN terms``,
-    norms the split's sentinel rows under their aliases."""
-    import pyarrow.dataset as pads
-
-    ds = pads.dataset(list(src.files), format="parquet")
-    norms_rows = src.split.arrow_rows()
-    blocks = ds.to_table(
+) -> pd.DataFrame:
+    """→ the block rows of every segment: ONE scan of the pinned dataset
+    for the non-norms rows with ``term IN terms`` — the columns and rows
+    the Spark site's cogroup delivers on its blocks side (the norms side
+    is ``src.norms``, read at open)."""
+    ds = src.dataset
+    return ds.to_table(
         columns=_scan_cols(need_positions, ds.schema.names),
         filter=pads.field("term").isin(pa.array(terms, pa.string()))
-        & ~norms_rows,
+        & ~src.split.arrow_rows(),
     ).to_pandas()
-    norms = ds.to_table(
-        columns=[c for _, c in src.split.cols], filter=norms_rows,
-    ).to_pandas()
-    norms.columns = [a for a, _ in src.split.cols]
-    return blocks, norms
 
 
 def _empty_frame(schema: str) -> pd.DataFrame:
@@ -1731,8 +1730,9 @@ def per_segment(
     * **Driver site** — when ``driver`` is given and the request's
       estimate (Σ over ``scans`` of Σ term_df, plus
       :data:`KERNEL_CALL_POSTINGS` per segment and query) is below
-      :data:`DRIVER_SITE_POSTINGS`: read the pinned files with pyarrow
-      (:func:`read_driver`), score the segments in segment-id order
+      :data:`DRIVER_SITE_POSTINGS`: scan the pinned dataset's blocks
+      with pyarrow (:func:`read_driver`), pair them with the norms rows
+      pinned at open, score the segments in segment-id order
       in-process, and return the concatenated per-segment rows as a
       pandas frame.  A pyarrow ``OSError`` / ``ArrowInvalid`` falls back
       to the Spark site.
@@ -1744,19 +1744,19 @@ def per_segment(
     The cut helpers (:func:`topk_rows`, :func:`fold_count_topk`,
     :func:`fold_metrics_topk`, :func:`batch_topk`) accept either."""
     terms = sorted({t for scan in scans for t in scan})
-    if driver is not None and driver.files:
+    if driver is not None:
         dfs = driver.term_df(terms)
         est = sum(dfs.get(t, 0) for scan in scans for t in set(scan))
         est += KERNEL_CALL_POSTINGS * driver.segments * len(scans)
         if est < DRIVER_SITE_POSTINGS:
             try:
-                blocks, norms_pdf = read_driver(driver, terms, need_positions)
+                blocks = read_driver(driver, terms, need_positions)
             except (OSError, pa.ArrowInvalid):
                 # unreadable on the driver (a file gone since open, a
                 # corrupt footer): the Spark reader is the safe superset
                 pass
             else:
-                return _score_on_driver(blocks, norms_pdf, score, schema)
+                return _score_on_driver(blocks, driver.norms, score, schema)
 
     def run(key: tuple, blocks_pdf: pd.DataFrame,
             norms_pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1772,7 +1772,7 @@ def per_segment(
 
 def _score_on_driver(
     blocks: pd.DataFrame,
-    norms: pd.DataFrame,
+    norms: Mapping[int, pd.DataFrame],
     score: Callable[[SegmentView], pd.DataFrame],
     schema: str,
 ) -> pd.DataFrame:
@@ -1780,10 +1780,9 @@ def _score_on_driver(
     present on both sides (a segment with an empty side has no rows), in
     segment-id order."""
     by_blocks = dict(tuple(blocks.groupby("segment_id")))
-    by_norms = dict(tuple(norms.groupby("segment_id")))
     outs = [
-        score(segment_view(by_blocks[seg], by_norms[seg]))
-        for seg in sorted(by_blocks.keys() & by_norms.keys())
+        score(segment_view(by_blocks[seg], norms[seg]))
+        for seg in sorted(by_blocks.keys() & norms.keys())
     ]
     return pd.concat(outs, ignore_index=True) if outs else _empty_frame(schema)
 

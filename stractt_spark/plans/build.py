@@ -52,7 +52,7 @@ from pyspark.sql import functions as F
 
 from ..functions.tokenizer import analyzer_fingerprint
 from ..operators.postings import assign_doc_ids
-from ..operators.segments import UNIFIED_NORMS, NormsSplit
+from ..operators.segments import SEGMENTS_SCHEMA, UNIFIED_NORMS, NormsSplit
 from ..operators.wand import DriverScan, local_paths, pin_driver_scan
 
 
@@ -505,13 +505,16 @@ class IndexHandle:
         self._tdf_memo: dict[str, int] = {}
         self._plan_memo: dict[tuple, DataFrame] = {}
         # the unified table ∪ every ledgered streamed batch, split by
-        # NORMS_SPLIT.  The files Spark listed are pinned as ``driver``
-        # when every one is local: the driver site then reads the same
-        # snapshot (deletes and streamed batches become visible on
-        # reopen, as for the Spark views)
+        # NORMS_SPLIT, read with its known schema (inferring it reads a
+        # footer in a Spark job).  The files Spark listed are pinned as
+        # ``driver`` when every one is local: the driver site then reads
+        # the same snapshot (deletes and streamed batches become visible
+        # on reopen, as for the Spark views)
         from ..streaming.ingest import registered_paths
 
-        unified = spark.read.parquet(*registered_paths(root, self.stats))
+        unified = spark.read.schema(SEGMENTS_SCHEMA).parquet(
+            *registered_paths(root, self.stats)
+        )
         split = self.NORMS_SPLIT
         files = local_paths(unified.inputFiles())
         self.driver: DriverScan | None = (
@@ -544,13 +547,14 @@ class IndexHandle:
         return self._docmap_df
 
     def cache(self) -> "IndexHandle":
-        """Cache segments + norms CO-PARTITIONED AND CO-SORTED on
-        ``segment_id``: the per-query cogroup requires both sides
+        """Mark segments + norms to be cached CO-PARTITIONED AND CO-SORTED
+        on ``segment_id``: the per-query cogroup requires both sides
         hash-clustered and key-sorted, so caching them already in that
-        layout elides BOTH Exchange and Sort nodes from every query's
-        plan — the query job becomes a single stage over the cached
-        partitions (measured: 2 Exchange + 2 Sort → 0; the shuffle moved
-        from every query to this one-time cache build).  Partition count
+        layout elides BOTH Exchange and Sort nodes from every Spark-site
+        query's plan — the query job becomes a single stage over the
+        cached partitions (measured: 2 Exchange + 2 Sort → 0).  Lazy: no
+        job starts here; the first Spark-site request fills the cache, and
+        driver-site requests (``driver``) never read it.  Partition count
         scales with the segment count (bounded by parallelism), not a
         constant: one segment per task up to the point scheduling overhead
         would dominate."""
@@ -576,12 +580,6 @@ class IndexHandle:
             .sortWithinPartitions("segment_id")
             .cache()
         )
-        # ONE materialization job for both caches: counting a union of
-        # 1-literals scans (and therefore builds) both InMemoryRelations
-        # in a single action instead of two back-to-back jobs
-        self.segments.select(F.lit(1).alias("_o")).unionAll(
-            self.norms.select(F.lit(1).alias("_o"))
-        ).count()
         # plans memoized before this point scan the uncached inputs
         self._plan_memo.clear()
         return self
@@ -725,20 +723,12 @@ class IndexHandle:
         """:meth:`_to_orig_ids` of a driver-site top-k: the same inner
         join and tie order, in pandas over the docmap rows pyarrow reads
         with ``doc_id IN top``."""
-        import pyarrow.dataset as pads
-
         from ..operators.wand import _TOP_ARROW, local_result
-        from ..streaming.ingest import registered_docmaps
+        from ..streaming.ingest import read_docmap
 
-        ds = pads.dataset([
-            pads.dataset(d, format="parquet")
-            for d in registered_docmaps(self._root, self.stats)
-        ])
-        m = ds.to_table(
-            columns=["doc_id", "orig_id", "pre_score"],
-            filter=pads.field("doc_id").isin(
-                pa.array(top["doc_id"].to_numpy(), pa.int64())),
-        ).to_pandas().merge(top[["doc_id", "score"]], on="doc_id")
+        m = read_docmap(
+            self._root, self.stats, "doc_id", top["doc_id"].to_numpy()
+        ).merge(top[["doc_id", "score"]], on="doc_id")
         m = m.iloc[np.lexsort((m["orig_id"].to_numpy(),
                                -m["pre_score"].to_numpy(),
                                -m["score"].to_numpy()))]

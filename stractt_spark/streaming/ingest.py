@@ -40,6 +40,9 @@ from __future__ import annotations
 import json
 import os
 
+import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -69,6 +72,23 @@ def registered_docmaps(index_dir: str, stats: dict) -> list[str]:
         batch_docmap_dir(index_dir, b) for b in stats.get("stream_batches", [])
     ]
     return [d for d in dirs if os.path.isdir(d)]
+
+
+def driver_dataset(dirs: list[str]) -> pads.Dataset:
+    """The parquet tables under ``dirs`` as ONE pyarrow dataset, read on
+    the driver.  Like Spark's reader it skips ``_``- and ``.``-prefixed
+    names (``_SUCCESS``, checksums, a delete's not yet renamed file)."""
+    return pads.dataset([pads.dataset(d, format="parquet") for d in dirs])
+
+
+def read_docmap(index_dir: str, stats: dict, key: str, values) -> pd.DataFrame:
+    """The registered docmap rows ``(doc_id, orig_id, pre_score)`` of a
+    presorted index whose ``key`` column is IN ``values``, read with
+    pyarrow on the driver (no Spark job)."""
+    return driver_dataset(registered_docmaps(index_dir, stats)).to_table(
+        columns=["doc_id", "orig_id", "pre_score"],
+        filter=pads.field(key).isin(pa.array(values, pa.int64())),
+    ).to_pandas()
 
 
 def append_batch(

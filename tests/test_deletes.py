@@ -8,9 +8,12 @@ with tombstoned docs filtered out.  Compaction (a single-source merge)
 rewrites the index without the deleted docs and recomputes exact stats,
 making results bit-identical to a fresh build over the survivors."""
 
+import json
 import math
+import os
 import shutil
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -19,6 +22,7 @@ from stractt_spark.operators.deletes import (
     delete_docs,
     read_tombstones,
 )
+from stractt_spark.operators.segments import DELETES_TERM
 from stractt_spark.plans.build import SegmentIndex, build_index_fused
 from stractt_spark.sources.corpus import make_corpus
 from stractt_spark.streaming.ingest import append_batch
@@ -103,6 +107,72 @@ def test_delete_counts(deleted, spark):
 
 def test_redelete_is_idempotent(deleted, spark):
     assert delete_docs(spark, deleted["plain"], DELETED[:5]) == 0
+
+
+def _stats(root):
+    with open(f"{root}/stats.json") as f:
+        return json.load(f)
+
+
+def _tombstone_rows(internal):
+    """The rows one delete call writes for its new ``internal`` ids: per
+    touched segment, the sorted raw int64 ids under DELETES_TERM."""
+    a = np.unique(np.asarray(internal, dtype=np.int64))
+    segs = a // DPS
+    return [
+        (int(s), DELETES_TERM, -1, int(x[0]), int(x[-1]), int(x.size),
+         x.tobytes(), b"", None, 0, 0)
+        for s in np.unique(segs) for x in [a[segs == s]]
+    ]
+
+
+@pytest.mark.parametrize("kind", ["plain", "pre"])
+def test_delete_sequence_rows_and_stats(deleted, spark, tmp_path, kind):
+    """A fixed delete sequence leaves exactly the rows and stats.json the
+    Spark-written tombstones left: the index's rows untouched, one
+    DELETES_TERM row per (call, touched segment), and ``deleted_docs``
+    counting the new ids.  Already deleted, unknown and repeated ids are
+    skipped; the files are read back through Spark."""
+    root = str(tmp_path / kind)
+    shutil.copytree(deleted[kind], root)
+    rows, stats = _index_rows(spark, root), _stats(root)
+    to_internal = {i: i for i in range(500)}
+    if kind == "pre":
+        to_internal = {
+            r["orig_id"]: r["doc_id"]
+            for r in spark.read.parquet(f"{root}/docmap.parquet").collect()
+        }
+    # 0 and 13 are in DELETED; 95 | 96 straddle a segment boundary
+    calls = [[0, 13, 40, 95, 96, 97, 10**6], [40, 97, 300], []]
+    new = [[40, 95, 96, 97], [300], []]
+    for ids, want in zip(calls, new):
+        assert delete_docs(spark, root, ids) == len(want)
+        rows += _tombstone_rows([to_internal[i] for i in want])
+        stats["deleted_docs"] += len(want)
+    assert _index_rows(spark, root) == sorted(
+        rows, key=lambda t: (t[0], t[1], t[2]))
+    assert _stats(root) == stats
+
+
+def test_failed_rename_leaves_index_unchanged(deleted, spark, tmp_path,
+                                              monkeypatch):
+    """The tombstone file is written under a hidden name and renamed; if
+    the rename raises, no file is left under index.parquet/ and
+    stats.json is unchanged."""
+    root = str(tmp_path / "plain")
+    shutil.copytree(deleted["plain"], root)
+    files, stats = sorted(os.listdir(f"{root}/index.parquet")), _stats(root)
+
+    def fail(src, dst):
+        raise OSError("rename failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", fail)
+        with pytest.raises(OSError, match="rename failed"):
+            delete_docs(spark, root, [40])
+    assert sorted(os.listdir(f"{root}/index.parquet")) == files
+    assert _stats(root) == stats
+    assert delete_docs(spark, root, [40]) == 1
 
 
 @pytest.mark.parametrize("query,mode", QUERIES)

@@ -13,13 +13,19 @@ ladder, must_fields, phrase), and its compaction.
 """
 
 import itertools
+import os
 import shutil
 
+import pyarrow.dataset as pads
 import pytest
 from pyspark.sql import functions as F
 
 from stractt_spark.operators import wand
-from stractt_spark.operators.deletes import compact_index, delete_docs
+from stractt_spark.operators.deletes import (
+    compact_index,
+    delete_docs,
+    read_tombstones,
+)
 from stractt_spark.operators.multifield import (
     MultiFieldSegmentIndex,
     build_index_fused_multifield,
@@ -214,6 +220,62 @@ def test_fresh_handle_first_batch_starts_no_job(spark, indexes):
     assert h._term_stats_df is None
 
 
+def test_open_and_cache_start_no_job(spark, indexes, monkeypatch):
+    """Open reads the table with its known schema and ``cache()`` only
+    marks the co-partitioned plans, so neither starts a job; the first
+    Spark-site search reads the cache and returns the driver site's
+    rows."""
+    for cls, kind in ((SegmentIndex, "del"), (MultiFieldSegmentIndex, "mf")):
+        h, jobs = _jobs(spark, lambda: cls(spark, f"{BASE}/{kind}").cache())
+        assert jobs == 0, kind
+        want = _rows(h.search("merge tree", k=10, mode="should"))
+        df, jobs = _jobs(spark, lambda: _on_spark_site(
+            monkeypatch, h,
+            lambda: h.search("merge tree", k=10, mode="should"),
+        ))
+        assert jobs == 0 and not wand.driver_result(df)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "InMemoryRelation" in plan, kind
+        rows, jobs = _jobs(spark, lambda: _rows(df))
+        assert jobs >= 1 and rows == want and want, kind
+
+
+def test_delete_starts_no_job(spark, indexes, tmp_path):
+    """A delete reads sentinels, docmaps and tombstones with pyarrow and
+    writes its tombstone file on the driver: no Spark job on a doc-id, a
+    presorted (with a streamed batch), a multi-field and a streamed
+    doc-id index, and a reopened handle masks the new ids."""
+    roots = {}
+    for name, kind in (("del", "del"), ("pre", "pre"), ("mf", "mf"),
+                       ("streamed", "del")):
+        roots[name] = str(tmp_path / name)
+        shutil.copytree(f"{BASE}/{kind}", roots[name])
+    append_batch(spark, spark.createDataFrame(
+        [("r", f"p{i}", "c", f"merge tree batch doc {i}", "a.com")
+         for i in range(3)],
+        "repo string, path string, commit string, content string, "
+        "site string",
+    ), 0, roots["streamed"])
+    streamed_id = SegmentIndex(spark, roots["streamed"]).stats["next_doc_id"] - 1
+    # a live id in the build and one in a streamed batch (the presorted
+    # fixture's batch holds orig ids 180-239), plus an unknown id
+    new = {"del": [2, 150], "pre": [2, 200], "mf": [2, 150],
+           "streamed": [2, streamed_id]}
+    for kind, root in roots.items():
+        cls = MultiFieldSegmentIndex if kind == "mf" else SegmentIndex
+        before = read_tombstones(spark, root)
+        n, jobs = _jobs(spark, lambda: delete_docs(
+            spark, root, new[kind] + [10**6]))
+        assert (n, jobs) == (2, 0), kind
+        n, jobs = _jobs(spark, lambda: delete_docs(spark, root, new[kind]))
+        assert (n, jobs) == (0, 0), kind
+        after, jobs = _jobs(spark, lambda: read_tombstones(spark, root))
+        assert jobs == 0 and after.size == before.size + 2, kind
+        rows = _rows(cls(spark, root).search_batch(
+            [("q", "merge tree batch", "should")], k=400))
+        assert rows and not {r[1] for r in rows} & set(after), kind
+
+
 def test_driver_results_are_not_memoized(indexes, monkeypatch):
     h = indexes["del"]
     first = h.search("merge tree", k=5, mode="should")
@@ -254,9 +316,13 @@ def test_kernel_calls_count_toward_the_estimate(indexes):
 def test_unreadable_pinned_file_falls_back_to_spark(spark, indexes):
     h = SegmentIndex(spark, f"{BASE}/del")
     want = _rows(h.search("merge tree", k=10, mode="should"))
-    h.driver = h.driver._replace(
-        files=h.driver.files + (f"{BASE}/gone/part-0.parquet",)
-    )
+    # a file of the pinned dataset gone since it was pinned
+    gone = f"{BASE}/gone/part-0.parquet"
+    os.makedirs(os.path.dirname(gone), exist_ok=True)
+    shutil.copy(h.driver.dataset.files[0], gone)
+    h.driver = h.driver._replace(dataset=pads.dataset(
+        h.driver.dataset.files + [gone], format="parquet"))
+    os.remove(gone)
     h._plan_memo.clear()
     df = h.search("merge tree", k=10, mode="should")
     assert not wand.driver_result(df)
